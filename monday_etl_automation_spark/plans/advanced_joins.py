@@ -216,18 +216,10 @@ def temporal_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance job owns); re-serving the immutable plan re-executes
     only the joins/windows/aggs over them. Without this every bench
     pass re-ran a full streaming replay (~3.6s/pass measured r15)."""
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
-    cache = session_artifact_cache(spark, "temporal_joins_plan")
     key = snapshot_key(sf_dir, "events")
-    hit = cache.get(key)
-    if hit is None:
-        hit = _build_temporal_joins(spark, sf_dir)
-        cache[key] = hit
-    return hit
+    return snapshot_memo(spark, "temporal_joins_plan", key, lambda: _build_temporal_joins(spark, sf_dir))
 
 
 def _build_temporal_joins(spark: SparkSession, sf_dir: str) -> DataFrame:

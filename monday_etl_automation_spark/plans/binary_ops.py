@@ -59,11 +59,12 @@ def _docs_bin_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     amortize the extra tasks (chain solo at sf0.1: 1.53s -> 1.14s).
     The cheap compress/sign chains stay on the plain scan: spreading
     them was measured to ADD task/worker fixed costs, not remove work."""
-    from monday_etl_automation_spark.sources.tables import spread_unsplittable_scan
+    from monday_etl_automation_spark.sources.tables import spread_n
 
-    docs = spread_unsplittable_scan(
-        spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-    )
+    docs = load_table(spark, sf_dir, "documents")
+    n = spread_n(spark, sf_dir, "documents")
+    if n is not None:
+        docs = docs.repartition(n)
     return pipeline.documents_to_binary(docs, backend="stub")
 
 

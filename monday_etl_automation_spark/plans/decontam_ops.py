@@ -221,11 +221,11 @@ def overlap_flags_ctes(dialect: str, prefix: str = "", corp_spread: int | None =
               ELSE coalesce(text, '') END AS text
   FROM documents WHERE doc_id % {_BENCH_MOD} <> 0"""
     if corp_spread and dialect == "spark":
-        # guide §2.5 input-skew spread (the spread_unsplittable_scan
-        # pattern, SQL form): the caller passes the core count ONLY
-        # when the parquet layout cannot yield cores/2 scan tasks
-        # (sources/tables.py:spread_hint_n) — otherwise the whole
-        # gram+intersect chain below runs inside the single scan task.
+        # guide §2.5 input-skew spread (SQL form): the caller passes
+        # the core count ONLY when the parquet layout cannot yield
+        # cores/2 scan tasks (sources/tables.py:spread_n) — otherwise
+        # the whole gram+intersect chain below runs inside the single
+        # scan task.
         # The exchange carries the RAW (doc_id, text) rows, never the
         # derived gram arrays; at 100 TB the layout gate makes this a
         # no-op.

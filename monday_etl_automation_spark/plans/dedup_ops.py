@@ -176,19 +176,13 @@ def _minhash_sigs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     CacheManager entry — cached plans with expression trees this
     large make *every subsequent query* in the session pay a
     plan-comparison tax during analysis."""
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
-    cache = session_artifact_cache(spark, "minhash_sigs")
-    key = snapshot_key(sf_dir, "documents")
-    hit = cache.get(key)
-    if hit is None:
+    def build() -> DataFrame:
         register_views(spark, sf_dir)
-        hit = spark.sql(_minhash_sql("spark")).localCheckpoint(eager=True)
-        cache[key] = hit
-    return hit
+        return spark.sql(_minhash_sql("spark")).localCheckpoint(eager=True)
+
+    return snapshot_memo(spark, "minhash_sigs", snapshot_key(sf_dir, "documents"), build)
 
 
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -265,25 +259,19 @@ def _shingle_hash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     not-null filters would otherwise inline and re-run the whole
     tokenize->shingle->md5 chain several times per row). ~|shingles|
     longs per doc: linear in corpus size, spillable."""
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
-    cache = session_artifact_cache(spark, "shingle_hashes")
-    key = snapshot_key(sf_dir, "documents")
-    hit = cache.get(key)
-    if hit is None:
+    def build() -> DataFrame:
         register_views(spark, sf_dir)
         hv = f"transform(shingles, s -> {_SPARK_H60})"
-        hit = spark.sql(
+        return spark.sql(
             f"""
 WITH {_shingle_cte("spark")}
 SELECT doc_id, lang, {hv} AS hv, size({hv}) AS n_sh FROM sh
 """.strip()
         ).localCheckpoint(eager=True)
-        cache[key] = hit
-    return hit
+
+    return snapshot_memo(spark, "shingle_hashes", snapshot_key(sf_dir, "documents"), build)
 
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -408,19 +396,13 @@ def _simhash_sigs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per (session, documents snapshot) and shared by the near-pair
     index and the fingerprints entry — same persistence scheme as
     _minhash_sigs_index."""
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
-    cache = session_artifact_cache(spark, "simhash_sigs")
-    key = snapshot_key(sf_dir, "documents")
-    hit = cache.get(key)
-    if hit is None:
+    def build() -> DataFrame:
         register_views(spark, sf_dir)
-        hit = spark.sql(_simhash_sql("spark")).localCheckpoint(eager=True)
-        cache[key] = hit
-    return hit
+        return spark.sql(_simhash_sql("spark")).localCheckpoint(eager=True)
+
+    return snapshot_memo(spark, "simhash_sigs", snapshot_key(sf_dir, "documents"), build)
 
 
 def _near_pairs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -433,23 +415,21 @@ def _near_pairs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     reason; here "persist" is the snapshot-keyed localCheckpoint
     scheme shared with the ANN bucket index and IVF quantizer
     (sources/tables.snapshot_key)."""
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
-    cache = session_artifact_cache(spark, "simhash_pairs")
     key = snapshot_key(sf_dir, "documents")
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
+    return snapshot_memo(spark, "simhash_pairs", key, lambda: _build_near_pairs(spark, sf_dir))
+
+
+def _build_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """_near_pairs_index's cache-miss body: the banded simhash self-join."""
     register_views(spark, sf_dir)
     _simhash_sigs_index(spark, sf_dir).createOrReplaceTempView("_sh_sims")
     n_bands = _N_BITS // _BAND_BITS
     band_keys = ", ".join(
         f"shiftright(simhash, {j * _BAND_BITS}) % {2**_BAND_BITS}" for j in range(n_bands)
     )
-    pairs = spark.sql(
+    return spark.sql(
         f"""
 WITH kv AS (
   SELECT doc_id, simhash, band_idx, band_key
@@ -465,8 +445,6 @@ FROM cand
 WHERE CAST(bit_count(sim_a ^ sim_b) AS INT) <= {_HAMMING_MAX}
 """.strip()
     ).localCheckpoint(eager=True)
-    cache[key] = pairs
-    return pairs
 
 
 def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -874,17 +852,11 @@ def _exact_hash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(text_hash, corpus_keeper) for the whole corpus, materialized
     once per (session, documents snapshot) — the exact-dedup index an
     ingest pipeline maintains alongside the corpus."""
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
-    cache = session_artifact_cache(spark, "exact_hashes")
-    key = snapshot_key(sf_dir, "documents")
-    hit = cache.get(key)
-    if hit is None:
+    def build() -> DataFrame:
         register_views(spark, sf_dir)
-        hit = spark.sql(
+        return spark.sql(
             """
 SELECT text_hash, min(doc_id) AS corpus_keeper
 FROM (SELECT doc_id, md5(regexp_replace(trim(lower(text)), '\\\\s+', ' ')) AS text_hash
@@ -892,8 +864,8 @@ FROM (SELECT doc_id, md5(regexp_replace(trim(lower(text)), '\\\\s+', ' ')) AS te
 GROUP BY text_hash
 """.strip()
         ).localCheckpoint(eager=True)
-        cache[key] = hit
-    return hit
+
+    return snapshot_memo(spark, "exact_hashes", snapshot_key(sf_dir, "documents"), build)
 
 
 def dedup_exact_incremental(spark: SparkSession, sf_dir: str, new_docs: DataFrame) -> DataFrame:

@@ -26,8 +26,8 @@ from monday_etl_automation_spark.plans.sqltext import tail_order
 from monday_etl_automation_spark.sources.tables import (
     bind_table,
     register_views,
-    session_artifact_cache,
     snapshot_key,
+    snapshot_memo,
 )
 
 _DIM = 64
@@ -485,15 +485,13 @@ def _ann_bucket_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]
     the wrong bucket width after a test view-override or mid-session
     data change."""
     bind_table(spark, sf_dir, "embeddings")  # direct-call poisoning guard
-    cache = session_artifact_cache(spark, "ann_buckets")
-    key = snapshot_key(sf_dir, "embeddings")
-    hit = cache.get(key)
-    if hit is None:
+
+    def build() -> tuple[DataFrame, int]:
         cnt = spark.sql("SELECT count(*) FROM embeddings").collect()[0][0]
         ex = spark.sql(_ann_buckets_sql_spark()).localCheckpoint(eager=True)
-        hit = (ex, _ann_modulus(cnt))
-        cache[key] = hit
-    return hit
+        return ex, _ann_modulus(cnt)
+
+    return snapshot_memo(spark, "ann_buckets", snapshot_key(sf_dir, "embeddings"), build)
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -769,18 +767,16 @@ def _nd_ex_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     test view-override or mid-session data change diverged the view
     from the snapshot the persisted index was built on."""
     register_views(spark, sf_dir)
-    cache = session_artifact_cache(spark, "nd_ex")
-    key = snapshot_key(sf_dir, "embeddings")
-    hit = cache.get(key)
-    if hit is None:
+
+    def build() -> tuple[DataFrame, int]:
         cnt = spark.sql("SELECT count(*) FROM embeddings").collect()[0][0]
         d = _nd_divisor(cnt)
         ex = spark.sql(
             f"{_near_dup_ex_ctes('spark', divisor=d)}\nSELECT * FROM ex"
         ).localCheckpoint(eager=True)
-        hit = (ex, d)
-        cache[key] = hit
-    return hit
+        return ex, d
+
+    return snapshot_memo(spark, "nd_ex", snapshot_key(sf_dir, "embeddings"), build)
 
 
 # ---------------------------------------------------------------------------
@@ -972,12 +968,12 @@ def _train_ivf(
     read the pinned result, exactly the simhash/minhash barrier
     pattern (k-means in MLlib does the same per iteration)."""
     bind_table(spark, sf_dir, "embeddings")  # direct-call poisoning guard
-    cache = session_artifact_cache(spark, "ivf_ranked")
     key = snapshot_key(sf_dir, "embeddings")
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
+    return snapshot_memo(spark, "ivf_ranked", key, lambda: _build_ivf(spark))
 
+
+def _build_ivf(spark: SparkSession) -> tuple[DataFrame, DataFrame, int, int]:
+    """_train_ivf's cache-miss body, over the bound ``embeddings`` view."""
     cnt = spark.sql("SELECT count(*) FROM embeddings").collect()[0][0]
     ncent, nprobe = _ivf_params(cnt)
     # max(1, ...): mirrors the oracle's greatest(1, ...) clamp — a
@@ -1010,9 +1006,7 @@ def _train_ivf(
         f"WITH {_ivf_ranked_sql('spark', '_ivf_ex', '_ivf_cent', 'f')} "
         "SELECT vec_id, cid, rc FROM rankedf"
     ).localCheckpoint(eager=True)
-    hit = (ranked, cent, ncent, nprobe)
-    cache[key] = hit
-    return hit
+    return ranked, cent, ncent, nprobe
 
 
 def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1108,12 +1102,12 @@ def ann_topk_auto(
     selection logic, not new query semantics, so it pins equality in
     tests instead of spending a registry seat."""
     bind_table(spark, sf_dir, "embeddings")
-    cache = session_artifact_cache(spark, "ann_corpus_count")
-    key = snapshot_key(sf_dir, "embeddings")
-    cnt = cache.get(key)
-    if cnt is None:
-        cnt = spark.sql("SELECT count(*) FROM embeddings").collect()[0][0]
-        cache[key] = cnt
+    cnt = snapshot_memo(
+        spark,
+        "ann_corpus_count",
+        snapshot_key(sf_dir, "embeddings"),
+        lambda: spark.sql("SELECT count(*) FROM embeddings").collect()[0][0],
+    )
     backend, _b = _ann_route(cnt, route_b)
     if backend == "ivf":
         return ivf_topk(spark, sf_dir).select(

@@ -79,26 +79,21 @@ def _eperm_artifact(spark: SparkSession, sf_dir: str) -> tuple:
     """(base_path,) — both epochs written ONCE per (session, documents
     snapshot) through the real writer; superseded snapshots rmtree on
     eviction (the vstream/tokp artifact discipline)."""
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
     register_views(spark, sf_dir)
-    cache = session_artifact_cache(spark, "eperm_split", on_evict=_drop_ep_dir)
+
+    def build() -> tuple:
+        base = tempfile.mkdtemp(prefix="eperm_split_")
+        _EP_DIRS.add(base)
+        for e in _EPERM_EPOCHS:
+            write_shuffled_split(
+                spark, sf_dir, f"{base}/epoch={e}", epoch=e, n_files=_EPERM_FILES
+            )
+        return (base,)
+
     key = (snapshot_key(sf_dir, "documents"),)
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
-    base = tempfile.mkdtemp(prefix="eperm_split_")
-    _EP_DIRS.add(base)
-    for e in _EPERM_EPOCHS:
-        write_shuffled_split(
-            spark, sf_dir, f"{base}/epoch={e}", epoch=e, n_files=_EPERM_FILES
-        )
-    hit = (base,)
-    cache[key] = hit
-    return hit
+    return snapshot_memo(spark, "eperm_split", key, build, on_evict=_drop_ep_dir)
 
 
 def eperm_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -69,18 +69,10 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side Catalyst work per build (measured r15), and a
     DataFrame is an immutable logical plan, so re-serving one is free.
     """
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
-    cache = session_artifact_cache(spark, "flagship_plan")
     key = tuple(snapshot_key(sf_dir, t) for t in ("lineitem", "part", "orders"))
-    hit = cache.get(key)
-    if hit is None:
-        hit = _build_flagship(spark, sf_dir)
-        cache[key] = hit
-    return hit
+    return snapshot_memo(spark, "flagship_plan", key, lambda: _build_flagship(spark, sf_dir))
 
 
 # Broadcast the assets join only while the base snapshot is small
@@ -101,10 +93,10 @@ _ASSETS_BCAST_FILE_MAX = 32 * 1024 * 1024
 def _build_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from monday_etl_automation_spark.sources.tables import spread_hint_n
+    from monday_etl_automation_spark.sources.tables import spread_n
 
     register_fixture_views(spark, sf_dir)
-    cells = build_file_cells(spark, spread=spread_hint_n(spark, sf_dir, "lineitem") is not None)
+    cells = build_file_cells(spark, spread=spread_n(spark, sf_dir, "lineitem") is not None)
     files = parse_file_cells(cells)
     selected = apply_rules(files, spark.table("rules"))
     try:

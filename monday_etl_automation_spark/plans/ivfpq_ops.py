@@ -17,7 +17,11 @@ inverted lists with full vectors. IVF-PQ composes them the way a real
 - the approximate norm uses the exact expansion
   ||c + r̂||² = ||c||² + 2 c·r̂ + ||r̂||², all precomputed BIGINT
   tables (cc2 / cr / rr2), so ranking is deterministic and
-  cross-engine exact.
+  cross-engine exact;
+- the one-shot body (_ivfpq_sql) is the DuckDB oracle; the Spark
+  executor reads ONE snapshot artifact built from the same CTE
+  bodies (_ivfpq_search_arrays): the residual LUT folded to one
+  array per query and codes + norm sums to one row per vector.
 
 All arithmetic is 1e6-scaled longs derived from the SAME element
 relation the IVF trainer uses (round(xd_1e8 / 100) — bit-identical in
@@ -57,6 +61,8 @@ from monday_etl_automation_spark.plans.pq_ops import (
     _K,
     _PQ_ITERS,
     _SUBDIM,
+    _codes_fold_sql,
+    _lut_fold_sql,
     _pq_cent0_sql,
     _pq_cent_next_sql,
     _pq_codes_sql,
@@ -64,8 +70,8 @@ from monday_etl_automation_spark.plans.pq_ops import (
 from monday_etl_automation_spark.sources.tables import (
     bind_table,
     register_views,
-    session_artifact_cache,
     snapshot_key,
+    snapshot_memo,
 )
 
 # round 9 (r8 verdict item 5): nprobe 8 -> 12 (jointly with
@@ -156,7 +162,6 @@ def _ivfpq_tail_sql(
     qsrc: str = "embeddings",
     exclude_self: bool = True,
     nprobe: int | str = _IVF_NPROBE,
-    pre: dict[str, str] | None = None,
 ) -> str:
     """Search CTEs over trained relations: ``ranked(vec_id, cid, rc)``,
     ``cent(cid, dim, md)``, ``rcb(sub, code, d, md)`` (residual
@@ -164,53 +169,35 @@ def _ivfpq_tail_sql(
     list id per vector), ``e6`` (1e6 elements, for the query side).
     ``qpick``/``q6``/``qsrc``/``exclude_self`` override the query side
     for batch (non-corpus) queries — one body serves the corpus
-    search, the twin, and the batch path.
-
-    ``pre`` maps CTE names in {{qpick, qc, lut, cc2, vstats}} to
-    PERSISTED view names (r15, the fixed-query executor path): every
-    one of them is snapshot-derived index metadata, and deriving them
-    inline made each EXECUTION redo corpus-wide aggregations (vstats)
-    and query-side explodes, plus Catalyst re-analysis of the full
-    chain. CTE bodies are shared helpers (_qc_body etc.) so the
-    builder and the inline twin can never drift; unreferenced upstream
-    CTEs (q6, rr2, cr) are omitted when their consumers are
-    pre-computed. The DuckDB twin keeps deriving everything inline."""
-    pre = pre or {}
+    search, the twin, and the batch path. CTE bodies are shared
+    helpers (_qc_body etc.) so the folded executor artifact
+    (_ivfpq_search_arrays) and this inline form can never drift."""
     idiv = "DIV" if dialect == "spark" else "//"
     dot = _dot(dialect, "q.embedding", "v.embedding")
     cos = f"({dot}) / (q.norm * v.norm)"
-    if "qpick" in pre:
-        qpick_sql = f"SELECT * FROM {pre['qpick']}"
-    else:
-        qpick_sql = qpick or (
-            f"SELECT vec_id, cid FROM {ranked} WHERE {_query_pred()} AND rc <= {nprobe}"
-        )
+    qpick_sql = qpick or (
+        f"SELECT vec_id, cid FROM {ranked} WHERE {_query_pred()} AND rc <= {nprobe}"
+    )
     q6_sql = q6 or (
         f"SELECT vec_id, dim, xd6 FROM {e6} e WHERE {_query_pred()}"
     )
     self_guard = "WHERE d2.qid <> d2.vec_id" if exclude_self else ""
-    parts = [f"qpick AS ({qpick_sql})"]
-    if "qc" not in pre or "lut" not in pre:
-        parts.append(f"q6 AS ({q6_sql})")
-    parts.append(
-        f"qc AS (SELECT * FROM {pre['qc']})" if "qc" in pre else f"qc AS (\n  {_qc_body(cent)}\n)"
-    )
-    parts.append(
-        f"lut AS (SELECT * FROM {pre['lut']})"
-        if "lut" in pre
-        else f"lut AS (\n  {_lut_body(rcb, idiv)}\n)"
-    )
-    parts.append(
-        f"cc2 AS (SELECT * FROM {pre['cc2']})" if "cc2" in pre else f"cc2 AS ({_cc2_body(cent)})"
-    )
-    if "vstats" in pre:
-        parts.append(f"vstats AS (SELECT * FROM {pre['vstats']})")
-    else:
-        parts.append(f"rr2 AS ({_rr2_body(rcb)})")
-        parts.append(f"cr AS (\n  {_cr_body(cent, rcb, idiv)}\n)")
-        parts.append(f"vstats AS (\n  {_vstats_body(vparts)}\n)")
-    head = ",\n".join(parts)
-    return f"""{head},
+    return f"""qpick AS ({qpick_sql}),
+q6 AS ({q6_sql}),
+qc AS (
+  {_qc_body(cent)}
+),
+lut AS (
+  {_lut_body(rcb, idiv)}
+),
+cc2 AS ({_cc2_body(cent)}),
+rr2 AS ({_rr2_body(rcb)}),
+cr AS (
+  {_cr_body(cent, rcb, idiv)}
+),
+vstats AS (
+  {_vstats_body(vparts)}
+),
 vadc AS (
   SELECT l.qid, v.vec_id, CAST(sum(l.pdot) AS BIGINT) AS radot
   FROM {vparts} v JOIN lut l ON v.sub = l.sub AND v.code = l.code
@@ -330,12 +317,13 @@ def _train_ivfpq(
     reason; all handles are cached FRAMES (never re-resolved temp
     views — CLAUDE.md view-rebinding rule)."""
     bind_table(spark, sf_dir, "embeddings")  # direct-call poisoning guard
-    cache = session_artifact_cache(spark, "ivfpq_index")
     key = snapshot_key(sf_dir, "embeddings")
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
+    return snapshot_memo(spark, "ivfpq_index", key, lambda: _build_ivfpq(spark, sf_dir))
 
+
+def _build_ivfpq(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """_train_ivfpq's cache-miss body: residual explode, residual-PQ
+    Lloyd rounds and encoding against the persisted IVF quantizer."""
     ranked, cent, _, _ = _train_ivf(spark, sf_dir)
     ranked.createOrReplaceTempView("_ipq_ranked")
     cent.createOrReplaceTempView("_ipq_cent")
@@ -372,88 +360,69 @@ def _train_ivfpq(
         ),
         "_ipq_vparts",
     )
-    cache[key] = (ranked, rcb, vparts)
     return ranked, rcb, vparts
 
 
-def _ivfpq_search_meta(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Persisted search metadata for the fixed query set (r15): qpick
-    (probed lists per query), qc (query-centroid dots), lut (residual
-    LUT), cc2 (centroid norms), vstats (per-vector code-norm stats) —
-    each derived ONCE per (session, data snapshot) from the SAME body
-    helpers the inline tail uses, checkpointed, cached together with
-    the quantizer handles. Own view names per the CLAUDE.md
-    consumer-handle rule."""
+def _ivfpq_search_arr_meta(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The search artifact {qpick, qc, cc2, lutarr, varr} for the fixed
+    query set, built once per (session, snapshot) from the persisted
+    quantizer and residual codes."""
     bind_table(spark, sf_dir, "embeddings")
-    cache = session_artifact_cache(spark, "ivfpq_searchmeta")
-    key = snapshot_key(sf_dir, "embeddings")
-    hit = cache.get(key)
-    if hit is None:
+
+    def build() -> dict[str, DataFrame]:
         ranked, rcb, vparts = _train_ivfpq(spark, sf_dir)
         _, cent, _, nprobe = _train_ivf(spark, sf_dir)
-        ranked.createOrReplaceTempView("_ipqm_ranked")
-        rcb.createOrReplaceTempView("_ipqm_rcb")
-        vparts.createOrReplaceTempView("_ipqm_vparts")
-        cent.createOrReplaceTempView("_ipqm_cent")
-        q6 = f"SELECT vec_id, dim, xd6 FROM ({_e6_sql('spark')}) e WHERE {_query_pred()}"
+        return _ivfpq_search_arrays(spark, ranked, cent, nprobe, rcb, vparts)
 
-        def ck(sql: str) -> DataFrame:
-            return spark.sql(sql).localCheckpoint(eager=True)
-
-        hit = {
-            "qpick": ck(
-                f"SELECT vec_id, cid FROM _ipqm_ranked WHERE {_query_pred()} AND rc <= {nprobe}"
-            ),
-            "qc": ck(f"WITH q6 AS ({q6})\n{_qc_body('_ipqm_cent')}"),
-            "lut": ck(f"WITH q6 AS ({q6})\n{_lut_body('_ipqm_rcb', 'DIV')}"),
-            "cc2": ck(_cc2_body("_ipqm_cent")),
-            "vstats": ck(
-                f"WITH rr2 AS ({_rr2_body('_ipqm_rcb')}),\n"
-                f"cr AS (\n  {_cr_body('_ipqm_cent', '_ipqm_rcb', 'DIV')}\n)\n"
-                + _vstats_body("_ipqm_vparts")
-            ),
-        }
-        cache[key] = hit
-    return hit
+    return snapshot_memo(spark, "ivfpq_searcharr", snapshot_key(sf_dir, "embeddings"), build)
 
 
-def _ivfpq_search_arr_meta(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Array-folded search metadata (r19, r18 verdict item 3): the
-    residual LUT reshaped to one dense 16x16 BIGINT array per query
-    (pa[sub*{_K}+code]), and the per-vector codes + vstats merged into
-    ONE row per vector (vec_id, cid, ca[16], rr_sum, cr_sum). Same
-    integers as the exploded relations — layout only — so the probed
-    ADC runs as 16 array lookups per (query, member) pair instead of a
-    16x-exploded join + hash aggregation + vstats join per execution.
-    Built once per (session, snapshot); qpick/qc/cc2 ride the existing
-    searchmeta artifacts."""
-    bind_table(spark, sf_dir, "embeddings")
-    cache = session_artifact_cache(spark, "ivfpq_searcharr")
-    key = snapshot_key(sf_dir, "embeddings")
-    hit = cache.get(key)
-    if hit is None:
-        _, _, vparts = _train_ivfpq(spark, sf_dir)
-        meta = _ivfpq_search_meta(spark, sf_dir)
-        vparts.createOrReplaceTempView("_ipq_arr_vparts")
-        meta["lut"].createOrReplaceTempView("_ipq_arr_lut")
-        meta["vstats"].createOrReplaceTempView("_ipq_arr_vstats")
-        lutarr = spark.sql(
-            f"""SELECT qid, transform(sequence(0, {16 * _K - 1}),
-                        i -> coalesce(m[i], CAST(0 AS BIGINT))) AS pa
-FROM (SELECT qid, map_from_entries(collect_list(struct(sub * {_K} + code, pdot))) AS m
-      FROM _ipq_arr_lut GROUP BY qid)"""
-        ).localCheckpoint(eager=True)
-        varr = spark.sql(
-            f"""SELECT p.vec_id, p.cid, p.ca, s.rr_sum, s.cr_sum
-FROM (SELECT vec_id, cid, transform(sequence(0, 15), i -> m[i]) AS ca
-      FROM (SELECT vec_id, cid, map_from_entries(collect_list(struct(sub, code))) AS m
-            FROM _ipq_arr_vparts GROUP BY vec_id, cid)) p
-JOIN _ipq_arr_vstats s ON p.vec_id = s.vec_id"""
-        ).localCheckpoint(eager=True)
-        hit = {"lutarr": lutarr, "varr": varr,
-               "qpick": meta["qpick"], "qc": meta["qc"], "cc2": meta["cc2"]}
-        cache[key] = hit
-    return hit
+def _ivfpq_search_arrays(
+    spark: SparkSession,
+    ranked: DataFrame,
+    cent: DataFrame,
+    nprobe: int,
+    rcb: DataFrame,
+    vparts: DataFrame,
+) -> dict[str, DataFrame]:
+    """Array-folded search artifact (r19), five checkpointed relations
+    built from the SAME body helpers the exploded _ivfpq_tail_sql
+    derives inline: qpick (probed lists per query), qc (query-centroid
+    dots), cc2 (centroid norms), lutarr (the residual LUT as ONE dense
+    {_M}x{_K} BIGINT array per query, pa[sub*{_K}+code]) and varr (ONE
+    row per vector: vec_id, cid, ca[{_M}] and its code-norm sums
+    rr_sum / cr_sum). Same integers as the exploded relations — layout
+    only — so the probed ADC runs as {_M} array lookups per (query,
+    member) pair instead of an {_M}x-exploded join + hash aggregation
+    + vstats join per execution. Own view names, read only inside
+    these eager builds (CLAUDE.md consumer-handle rule)."""
+    for name, df in (("ranked", ranked), ("cent", cent), ("rcb", rcb), ("vparts", vparts)):
+        df.createOrReplaceTempView(f"_ipqa_{name}")
+    q6 = f"SELECT vec_id, dim, xd6 FROM ({_e6_sql('spark')}) e WHERE {_query_pred()}"
+
+    def ck(sql: str) -> DataFrame:
+        return spark.sql(sql).localCheckpoint(eager=True)
+
+    return {
+        "qpick": ck(f"SELECT vec_id, cid FROM _ipqa_ranked WHERE {_query_pred()} AND rc <= {nprobe}"),
+        "qc": ck(f"WITH q6 AS ({q6})\n{_qc_body('_ipqa_cent')}"),
+        "cc2": ck(_cc2_body("_ipqa_cent")),
+        "lutarr": ck(
+            f"WITH q6 AS ({q6}),\nlut AS (\n  {_lut_body('_ipqa_rcb', 'DIV')}\n)\n{_lut_fold_sql('lut')}"
+        ),
+        "varr": ck(
+            f"""WITH rr2 AS ({_rr2_body('_ipqa_rcb')}),
+cr AS (
+  {_cr_body('_ipqa_cent', '_ipqa_rcb', 'DIV')}
+),
+vstats AS (
+  {_vstats_body('_ipqa_vparts')}
+),
+folded AS ({_codes_fold_sql('_ipqa_vparts', 'vec_id, cid')})
+SELECT p.vec_id, p.cid, p.ca, s.rr_sum, s.cr_sum
+FROM folded p JOIN vstats s ON p.vec_id = s.vec_id"""
+        ),
+    }
 
 
 def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,7 +32,7 @@ def _media(spark: SparkSession, sf_dir: str, kind_mod: int | None = None) -> Dat
         # push the kind predicate below the (expensive) binary
         # generation — the scan filter prunes before mapInPandas runs
         docs = docs.where(f"doc_id % 3 = {kind_mod}")
-    # r18: a spread_unsplittable_scan here was measured and REVERTED
+    # r18: a spread_n repartition here was measured and REVERTED
     # (1.1s -> 2.2s at sf0.1): three branches x repartition tripled the
     # task/worker fixed costs while the per-row generation is too cheap
     # to amortize them — the r14 binary-checkpoint lesson again.

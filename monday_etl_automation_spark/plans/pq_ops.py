@@ -6,11 +6,16 @@ codes (one per {_SUBDIM}-dim subspace, {_K}-entry codebook), and a
 search scans the CODES table — 8 bytes/vector instead of 256 — via
 asymmetric distance computation (ADC): the query precomputes a
 {_M}x{_K} lookup table of subspace dot products, and a candidate's
-approximate score is a sum of {_M} table lookups (an equi-join + hash
-agg, no float math per element). Top-{_CAND} ADC candidates are then
-exact-cosine re-ranked, so precision stays exact and the PQ
-approximation only affects candidate coverage (same posture as the
-LSH/IVF paths; recall pinned in tests/test_pq.py).
+approximate score is a sum of {_M} table lookups (no float math per
+element). The one-shot body (_pq_sql, the DuckDB oracle) does the
+lookups as an equi-join + hash agg over exploded codes; the Spark
+executor reads ONE snapshot artifact built from the same CTEs — the
+LUT folded to one array per query and the codes to one array row per
+vector (_pq_search_arrays) — so a lookup is static array indexing.
+Top-{_CAND} ADC candidates are then exact-cosine re-ranked, so
+precision stays exact and the PQ approximation only affects
+candidate coverage (same posture as the LSH/IVF paths; recall pinned
+in tests/test_pq.py).
 
 At 100 TB: codebooks are KB-sized broadcast tables, the codes table is
 ~32x smaller than the embeddings, the ADC scan is whole-stage-codegen
@@ -45,8 +50,8 @@ from monday_etl_automation_spark.plans.embed_ops import (
 from monday_etl_automation_spark.sources.tables import (
     bind_table,
     register_views,
-    session_artifact_cache,
     snapshot_key,
+    snapshot_memo,
 )
 
 _M = 16  # subspaces -> 16 x 4-bit codes = 8 B/vector (32x compression)
@@ -115,6 +120,55 @@ def _pq_cent_next_sql(ex: str, codes: str) -> str:
   GROUP BY a.sub, a.code, e.d"""
 
 
+def _pq_lut_ctes(qex: str, cent: str) -> str:
+    """``qex`` (query elements) and ``lut(qid, sub, code, pdot)``: the
+    per-query {_M}x{_K} table of subspace dot products."""
+    return f"""qex AS ({qex}),
+lut AS (
+  SELECT q.vec_id AS qid, c.sub, c.code,
+         CAST(sum(q.xd * c.md) AS BIGINT) AS pdot
+  FROM qex q JOIN {cent} c ON q.sub = c.sub AND q.d = c.d
+  GROUP BY q.vec_id, c.sub, c.code
+)"""
+
+
+def _pq_vn_ctes(cent: str, codes: str) -> str:
+    """``cn2`` (codebook-entry norms) and ``vn(vec_id, vnorm)``: the
+    norm of each vector's reconstruction from its codes."""
+    return f"""cn2 AS (
+  SELECT sub, code, CAST(sum(md * md) AS BIGINT) AS n2 FROM {cent} GROUP BY sub, code
+),
+vn AS (
+  SELECT a.vec_id, sqrt(CAST(CAST(sum(n.n2) AS BIGINT) AS DOUBLE)) AS vnorm
+  FROM {codes} a JOIN cn2 n ON a.sub = n.sub AND a.code = n.code
+  GROUP BY a.vec_id
+)"""
+
+
+def _lut_fold_sql(lut: str) -> str:
+    """(qid, pa): ``lut(qid, sub, code, pdot)`` reshaped to ONE dense
+    {_M}x{_K} BIGINT array per query, pa[sub*{_K}+code]. Missing
+    (sub, code) slots (a code emptied during training) are filled with
+    0: no vector's codes can reference them, because codes are
+    assigned FROM the surviving codebook entries."""
+    return f"""SELECT qid, transform(sequence(0, {_M * _K - 1}),
+                        i -> coalesce(m[i], CAST(0 AS BIGINT))) AS pa
+FROM (SELECT qid, map_from_entries(collect_list(struct(sub * {_K} + code, pdot))) AS m
+      FROM {lut} GROUP BY qid) lm"""
+
+
+def _codes_fold_sql(codes: str, keys: str) -> str:
+    """(``keys``, ca): the (``keys``, sub, code) rows of ``codes``
+    reshaped to ONE row per vector with its {_M} codes as a 0-based
+    array ca[sub]. A vector lacking a (sub, code) row fails the build
+    loudly: a NULL code would otherwise silently rank it last."""
+    return f"""SELECT {keys}, if(size(filter(ca, x -> x IS NULL)) = 0, ca,
+              raise_error('PQ codes: a vector lacks a (sub, code) row')) AS ca
+FROM (SELECT {keys}, transform(sequence(0, {_M - 1}), s -> m[s]) AS ca
+      FROM (SELECT {keys}, map_from_entries(collect_list(struct(sub, code))) AS m
+            FROM {codes} GROUP BY {keys}) cm) cf"""
+
+
 def _pq_search_sql(
     dialect: str,
     ex: str,
@@ -124,8 +178,6 @@ def _pq_search_sql(
     qsrc: str = "embeddings",
     vsrc: str = "embeddings",
     exclude_self: bool = True,
-    lut_rel: str | None = None,
-    vn_rel: str | None = None,
 ) -> str:
     """ADC candidate generation + exact re-rank, given the trained
     codebook ``cent`` and the encoded corpus ``codes``. ``qex``
@@ -134,42 +186,15 @@ def _pq_search_sql(
     vector relations for the exact re-rank; ``exclude_self`` guards
     the corpus-internal case where queries are corpus rows. ONE body
     serves the corpus search, the DuckDB twin, and the batch search
-    (plans/embed_ingest.py) — the scoring math exists exactly once.
-
-    ``lut_rel`` / ``vn_rel`` name PRE-COMPUTED (qid, sub, code, pdot)
-    lookup-table and (vec_id, vnorm) code-norm relations (r15): both
-    are snapshot-derived for the fixed query set, and inlining their
-    derivation made every EXECUTION re-explode the query vectors and
-    re-aggregate corpus code norms — plus pay Catalyst re-analysis of
-    the whole chain. The DuckDB twin keeps deriving both inline, so
-    the compare pins persisted == derived."""
+    (plans/embed_ingest.py) — the scoring math exists exactly once,
+    and its LUT / code-norm CTEs (_pq_lut_ctes / _pq_vn_ctes) are the
+    ones the folded executor artifact is built from."""
     dot = _dot(dialect, "q.embedding", "v.embedding")
     cos = f"({dot}) / (q.norm * v.norm)"
     qex_sql = qex or f"SELECT * FROM {ex} exq WHERE {_query_pred()}"
     self_guard = "WHERE d.qid <> d.vec_id" if exclude_self else ""
-    if lut_rel:
-        lut_part = f"lut AS (SELECT qid, sub, code, pdot FROM {lut_rel})"
-    else:
-        lut_part = f"""qex AS ({qex_sql}),
-lut AS (
-  SELECT q.vec_id AS qid, c.sub, c.code,
-         CAST(sum(q.xd * c.md) AS BIGINT) AS pdot
-  FROM qex q JOIN {cent} c ON q.sub = c.sub AND q.d = c.d
-  GROUP BY q.vec_id, c.sub, c.code
-)"""
-    if vn_rel:
-        vn_part = f"vn AS (SELECT vec_id, vnorm FROM {vn_rel})"
-    else:
-        vn_part = f"""cn2 AS (
-  SELECT sub, code, CAST(sum(md * md) AS BIGINT) AS n2 FROM {cent} GROUP BY sub, code
-),
-vn AS (
-  SELECT a.vec_id, sqrt(CAST(CAST(sum(n.n2) AS BIGINT) AS DOUBLE)) AS vnorm
-  FROM {codes} a JOIN cn2 n ON a.sub = n.sub AND a.code = n.code
-  GROUP BY a.vec_id
-)"""
-    return f"""{lut_part},
-{vn_part},
+    return f"""{_pq_lut_ctes(qex_sql, cent)},
+{_pq_vn_ctes(cent, codes)},
 adc AS (
   SELECT l.qid, a.vec_id, CAST(sum(l.pdot) AS BIGINT) AS adot
   FROM {codes} a JOIN lut l ON l.sub = a.sub AND l.code = a.code
@@ -261,12 +286,11 @@ def _train_pq(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     (Spark inlines CTEs; an unrolled Lloyd chain re-expands its
     upstream per reference)."""
     bind_table(spark, sf_dir, "embeddings")  # direct-call poisoning guard
-    cache = session_artifact_cache(spark, "pq_index")
-    key = snapshot_key(sf_dir, "embeddings")
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
+    return snapshot_memo(spark, "pq_index", snapshot_key(sf_dir, "embeddings"), lambda: _build_pq(spark))
 
+
+def _build_pq(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
+    """_train_pq's cache-miss body, over the bound ``embeddings`` view."""
     step = max(1, spark.sql(f"SELECT count(*) DIV {_K} FROM embeddings").collect()[0][0])
 
     def view(df: DataFrame, name: str) -> DataFrame:
@@ -292,86 +316,45 @@ def _train_pq(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         ),
         "_pq_codes",
     )
-    cache[key] = (codes, cent)
     return codes, cent
 
 
-def _pq_search_meta(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Persisted search metadata for the fixed query set (r15): the
-    (qid, sub, code, pdot) LUT and the (vec_id, vnorm) code norms —
-    derived ONCE per (session, data snapshot) with the exact inline
-    expressions of _pq_search_sql, checkpointed, and cached as a tuple
-    WITH the quantizer handles (the nd-divisor coupling rule). Own
-    view names — never a trainer session view that a later snapshot
-    could rebind (CLAUDE.md consumer-handle rule)."""
-    bind_table(spark, sf_dir, "embeddings")
-    cache = session_artifact_cache(spark, "pq_searchmeta")
-    key = snapshot_key(sf_dir, "embeddings")
-    hit = cache.get(key)
-    if hit is None:
-        codes, cent = _train_pq(spark, sf_dir)
-        codes.createOrReplaceTempView("_pq_meta_codes")
-        cent.createOrReplaceTempView("_pq_meta_cent")
-        lut = spark.sql(
-            f"""WITH qex AS (SELECT * FROM ({_pq_ex_sql("spark")}) exq WHERE {_query_pred()})
-SELECT q.vec_id AS qid, c.sub, c.code,
-       CAST(sum(q.xd * c.md) AS BIGINT) AS pdot
-FROM qex q JOIN _pq_meta_cent c ON q.sub = c.sub AND q.d = c.d
-GROUP BY q.vec_id, c.sub, c.code"""
-        ).localCheckpoint(eager=True)
-        vn = spark.sql(
-            """WITH cn2 AS (
-  SELECT sub, code, CAST(sum(md * md) AS BIGINT) AS n2 FROM _pq_meta_cent GROUP BY sub, code
-)
-SELECT a.vec_id, sqrt(CAST(CAST(sum(n.n2) AS BIGINT) AS DOUBLE)) AS vnorm
-FROM _pq_meta_codes a JOIN cn2 n ON a.sub = n.sub AND a.code = n.code
-GROUP BY a.vec_id"""
-        ).localCheckpoint(eager=True)
-        hit = (lut, vn)
-        cache[key] = hit
-    return hit
-
-
 def _pq_search_arr_meta(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Array-folded search metadata (r19, r18 verdict item 3): the
-    exploded (qid, sub, code, pdot) LUT reshaped to ONE dense
-    {_M}x{_K} BIGINT array per query (pa[sub*{_K}+code]), and the
-    (vec_id, sub, code) codes joined with the code norms into ONE row
-    per vector (vec_id, ca[{_M}], vnorm). Same integers as the
-    exploded relations — only the layout changes, so the ADC sum can
-    run as {_M} array lookups per (query, vector) pair instead of an
-    {_M}x-exploded broadcast join + re-shuffled hash aggregation per
-    execution (guide §2.4: remove the exchange outright). Built once
-    per (session, snapshot) like every other index artifact."""
+    """The search artifact (lutarr, codesarr) for the fixed query set,
+    built once per (session, snapshot) from the trained quantizer."""
     bind_table(spark, sf_dir, "embeddings")
-    cache = session_artifact_cache(spark, "pq_searcharr")
-    key = snapshot_key(sf_dir, "embeddings")
-    hit = cache.get(key)
-    if hit is None:
-        codes, _cent = _train_pq(spark, sf_dir)
-        lut, vn = _pq_search_meta(spark, sf_dir)
-        codes.createOrReplaceTempView("_pq_arr_codes")
-        lut.createOrReplaceTempView("_pq_arr_lut")
-        vn.createOrReplaceTempView("_pq_arr_vn")
-        # missing (sub, code) slots (a code emptied during training)
-        # are filled with 0: no vector's ca can reference them, because
-        # codes are assigned FROM the surviving codebook entries.
-        lutarr = spark.sql(
-            f"""SELECT qid, transform(sequence(0, {_M * _K - 1}),
-                        i -> coalesce(m[i], CAST(0 AS BIGINT))) AS pa
-FROM (SELECT qid, map_from_entries(collect_list(struct(sub * {_K} + code, pdot))) AS m
-      FROM _pq_arr_lut GROUP BY qid)"""
-        ).localCheckpoint(eager=True)
-        codesarr = spark.sql(
-            f"""SELECT c.vec_id, c.ca, v.vnorm
-FROM (SELECT vec_id, transform(sequence(0, {_M - 1}), s -> m[s]) AS ca
-      FROM (SELECT vec_id, map_from_entries(collect_list(struct(sub, code))) AS m
-            FROM _pq_arr_codes GROUP BY vec_id)) c
-JOIN _pq_arr_vn v ON c.vec_id = v.vec_id"""
-        ).localCheckpoint(eager=True)
-        hit = (lutarr, codesarr)
-        cache[key] = hit
-    return hit
+    return snapshot_memo(
+        spark,
+        "pq_searcharr",
+        snapshot_key(sf_dir, "embeddings"),
+        lambda: _pq_search_arrays(spark, *_train_pq(spark, sf_dir)),
+    )
+
+
+def _pq_search_arrays(spark: SparkSession, codes: DataFrame, cent: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Array-folded search artifact (r19): ``lutarr(qid, pa)`` — the
+    query LUT as ONE dense {_M}x{_K} BIGINT array per query — and
+    ``codesarr(vec_id, ca, vnorm)`` — ONE row per vector with its {_M}
+    codes and reconstructed norm. Each is one checkpointed query over
+    the SAME LUT / code-norm CTEs the exploded _pq_search_sql body
+    derives inline, so the integers are identical and only the layout
+    changes: the ADC sum runs as {_M} array lookups per (query, vector)
+    pair instead of an {_M}x-exploded join + re-shuffled hash
+    aggregation per execution (guide §2.4: remove the exchange
+    outright). Own view names, read only inside these two eager builds
+    (CLAUDE.md consumer-handle rule)."""
+    codes.createOrReplaceTempView("_pq_arr_codes")
+    cent.createOrReplaceTempView("_pq_arr_cent")
+    qex = f"SELECT * FROM ({_pq_ex_sql('spark')}) exq WHERE {_query_pred()}"
+    lutarr = spark.sql(
+        f"WITH {_pq_lut_ctes(qex, '_pq_arr_cent')}\n{_lut_fold_sql('lut')}"
+    ).localCheckpoint(eager=True)
+    codesarr = spark.sql(
+        f"""WITH {_pq_vn_ctes('_pq_arr_cent', '_pq_arr_codes')},
+folded AS ({_codes_fold_sql('_pq_arr_codes', 'vec_id')})
+SELECT c.vec_id, c.ca, v.vnorm FROM folded c JOIN vn v ON c.vec_id = v.vec_id"""
+    ).localCheckpoint(eager=True)
+    return lutarr, codesarr
 
 
 def _adc_arr_expr(lut_alias: str = "l", codes_alias: str = "a") -> str:

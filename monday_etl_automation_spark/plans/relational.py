@@ -580,18 +580,10 @@ def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe inside is EAGER (localCheckpoint + a metadata collect), so
     re-building the plan per call would re-pay it; a DataFrame is an
     immutable logical plan, so re-serving one is free and safe."""
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
-    cache = session_artifact_cache(spark, "distinct_counts_plan")
     key = tuple(snapshot_key(sf_dir, t) for t in ("lineitem", "supplier", "part"))
-    hit = cache.get(key)
-    if hit is None:
-        hit = _build_distinct_counts(spark, sf_dir)
-        cache[key] = hit
-    return hit
+    return snapshot_memo(spark, "distinct_counts_plan", key, lambda: _build_distinct_counts(spark, sf_dir))
 
 
 def _build_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1155,17 +1147,14 @@ def quantile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-derives the exact counts inline each compare, so the driver
     # hash still pins the cached rows against fresh ground truth every
     # round; gk stays a lazy plan over lineitem, re-executed per pass.
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
-    probe_cache = session_artifact_cache(spark, "sketch_probe_rows")
-    probe_key = (snapshot_key(sf_dir, "events"),)
-    probe_rows = probe_cache.get(probe_key)
-    if probe_rows is None:
-        probe_rows = _cms_rows(spark, ev) + _hh_rows(ev)
-        probe_cache[probe_key] = probe_rows
+    probe_rows = snapshot_memo(
+        spark,
+        "sketch_probe_rows",
+        (snapshot_key(sf_dir, "events"),),
+        lambda: _cms_rows(spark, ev) + _hh_rows(ev),
+    )
     small = spark.createDataFrame(
         probe_rows,
         "section STRING, grp STRING, n_exact BIGINT, est_ok BIGINT, merge_ok BIGINT",

@@ -1037,17 +1037,12 @@ def tpch_extra(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table's memoization (sources/tables.py)."""
     from monday_etl_automation_spark.sources.tables import (
         TABLES,
-        session_artifact_cache,
         snapshot_key,
+        snapshot_memo,
     )
 
-    cache = session_artifact_cache(spark, "tpch_extra_plan")
     key = tuple(snapshot_key(sf_dir, t) for t in TABLES)
-    hit = cache.get(key)
-    if hit is None:
-        hit = _build_tpch_extra(spark, sf_dir)
-        cache[key] = hit
-    return hit
+    return snapshot_memo(spark, "tpch_extra_plan", key, lambda: _build_tpch_extra(spark, sf_dir))
 
 
 def _build_tpch_extra(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -128,21 +128,17 @@ def _prep_source(spark: SparkSession, sf_dir: str) -> str:
     import hashlib
 
     from monday_etl_automation_spark.plans.corpus_ops import corpus_prep
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
-    cache = session_artifact_cache(spark, "release_prep")
     key = (snapshot_key(sf_dir, "documents"),)
-    hit = cache.get(key)
-    if hit is None:
+
+    def build() -> tuple[DataFrame, str]:
         df = corpus_prep(spark, sf_dir).localCheckpoint(eager=True)
         name = "_rel_prep_" + hashlib.md5(repr(key).encode()).hexdigest()[:12]
         df.createOrReplaceTempView(name)
-        hit = (df, name)
-        cache[key] = hit
-    return hit[1]
+        return df, name
+
+    return snapshot_memo(spark, "release_prep", key, build)[1]
 
 
 def _released_ctes(
@@ -156,7 +152,7 @@ def _released_ctes(
     dispositions (the Spark executor passes _prep_source's view); None
     derives them inline — the oracle path. ``corp_spread``: Spark-only
     REPARTITION width for the decontam gram chain over an unsplittable
-    scan (sources/tables.py:spread_hint_n)."""
+    scan (sources/tables.py:spread_n)."""
     splits = _split_sql(dialect, _FRACS).replace("\nORDER BY doc_id", "")
     if prep_src is None:
         prep = _corpus_prep_sql(dialect).replace("\nORDER BY doc_id", "")
@@ -262,14 +258,14 @@ tck AS (
 
 
 def release_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from monday_etl_automation_spark.sources.tables import spread_hint_n
+    from monday_etl_automation_spark.sources.tables import spread_n
 
     register_views(spark, sf_dir)
     return spark.sql(
         _report_sql(
             "spark",
             _prep_source(spark, sf_dir),
-            corp_spread=spread_hint_n(spark, sf_dir, "documents"),
+            corp_spread=spread_n(spark, sf_dir, "documents"),
         )
     )
 
@@ -284,22 +280,18 @@ def train_doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the materialized prep, so the pipeline's per-release read
     cost stays priced under the hash; consumers hold the returned
     HANDLE (CLAUDE.md)."""
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
     register_views(spark, sf_dir)
-    cache = session_artifact_cache(spark, "release_train_ids")
-    key = (snapshot_key(sf_dir, "documents"),)
-    hit = cache.get(key)
-    if hit is None:
-        hit = spark.sql(
+    return snapshot_memo(
+        spark,
+        "release_train_ids",
+        (snapshot_key(sf_dir, "documents"),),
+        lambda: spark.sql(
             f"WITH {_released_ctes('spark', _prep_source(spark, sf_dir))}"
             " SELECT doc_id FROM rel WHERE split = 'train'"
-        ).localCheckpoint(eager=True)
-        cache[key] = hit
-    return hit
+        ).localCheckpoint(eager=True),
+    )
 
 
 def pack_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,18 +374,20 @@ def _tokenized_shard_artifact(spark: SparkSession, sf_dir: str) -> tuple:
     build-once artifact; per-pass cost is the read path. Superseded
     snapshots' directories are rmtree'd on eviction (the r15 timer-
     replay-source lesson, applied from birth here)."""
-    from monday_etl_automation_spark.plans.tokenize_ops import packed_token_sequences
-    from monday_etl_automation_spark.sources.shard_writer import write_tokenized_shards
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
+
+    key = (snapshot_key(sf_dir, "documents"),)
+    return snapshot_memo(
+        spark, "tokp_shards", key, lambda: _build_tokenized_shards(spark, sf_dir), on_evict=_drop_tokp_dir
     )
 
-    cache = session_artifact_cache(spark, "tokp_shards", on_evict=_drop_tokp_dir)
-    key = (snapshot_key(sf_dir, "documents"),)
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
+
+def _build_tokenized_shards(spark: SparkSession, sf_dir: str) -> tuple:
+    """_tokenized_shard_artifact's cache-miss body: pack, tokenize and
+    write the train split's shards into a fresh temp directory."""
+    from monday_etl_automation_spark.plans.tokenize_ops import packed_token_sequences
+    from monday_etl_automation_spark.sources.shard_writer import write_tokenized_shards
+
     out = tempfile.mkdtemp(prefix="tokp_shards_")
     _TOKP_DIRS.add(out)
     # corpus-adaptive budget: BPE counts of a 64-word chunk ride the
@@ -424,9 +418,7 @@ def _tokenized_shard_artifact(spark: SparkSession, sf_dir: str) -> tuple:
     manifest = write_tokenized_shards(
         seqs, out, tokens_per_file=_TOKENS_PER_FILE
     ).localCheckpoint(eager=True)
-    hit = (out, manifest, budget)
-    cache[key] = hit
-    return hit
+    return out, manifest, budget
 
 
 def tokp_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

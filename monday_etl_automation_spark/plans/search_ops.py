@@ -254,18 +254,17 @@ def _postings_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the same persistence scheme as the ANN/IVF/dedup indexes."""
     from monday_etl_automation_spark.sources.tables import (
         bind_table,
-        session_artifact_cache,
         snapshot_key,
+        snapshot_memo,
     )
 
     bind_table(spark, sf_dir, "documents")  # direct-call poisoning guard
-    cache = session_artifact_cache(spark, "bm25_postings")
-    key = snapshot_key(sf_dir, "documents")
-    hit = cache.get(key)
-    if hit is None:
-        hit = spark.sql(_postings_sql("spark")).localCheckpoint(eager=True)
-        cache[key] = hit
-    return hit
+    return snapshot_memo(
+        spark,
+        "bm25_postings",
+        snapshot_key(sf_dir, "documents"),
+        lambda: spark.sql(_postings_sql("spark")).localCheckpoint(eager=True),
+    )
 
 
 def _doclen_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -276,23 +275,17 @@ def _doclen_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     execution."""
     from pyspark.sql import functions as F
 
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
-    cache = session_artifact_cache(spark, "bm25_doclen")
-    key = snapshot_key(sf_dir, "documents")
-    hit = cache.get(key)
-    if hit is None:
-        hit = (
-            _postings_index(spark, sf_dir)
-            .groupBy("doc_id")
-            .agg(F.sum("c").cast("bigint").alias("dl"))
-            .localCheckpoint(eager=True)
-        )
-        cache[key] = hit
-    return hit
+    return snapshot_memo(
+        spark,
+        "bm25_doclen",
+        snapshot_key(sf_dir, "documents"),
+        lambda: _postings_index(spark, sf_dir)
+        .groupBy("doc_id")
+        .agg(F.sum("c").cast("bigint").alias("dl"))
+        .localCheckpoint(eager=True),
+    )
 
 
 def _idf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,17 +293,10 @@ def _idf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     like _doclen_index; derived from the persisted postings with the
     exact tail chain (same tf/df/meta definitions), so values are
     bit-identical to the oracle's inline derivation."""
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
-    cache = session_artifact_cache(spark, "bm25_idf")
-    key = snapshot_key(sf_dir, "documents")
-    hit = cache.get(key)
-    if hit is None:
-        po = _postings_index(spark, sf_dir)
-        po.createOrReplaceTempView("_bm25_po_idxb")
+    def build() -> DataFrame:
+        _postings_index(spark, sf_dir).createOrReplaceTempView("_bm25_po_idxb")
         sql = f"""WITH qterms AS ({_qterms_sql("spark")}),
 meta AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n FROM _bm25_po_idxb),
 tf AS (
@@ -320,9 +306,9 @@ tf AS (
 df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
 {_idf2_ctes("spark")}
 SELECT term, idf2 FROM idf2"""
-        hit = spark.sql(sql).localCheckpoint(eager=True)
-        cache[key] = hit
-    return hit
+        return spark.sql(sql).localCheckpoint(eager=True)
+
+    return snapshot_memo(spark, "bm25_idf", snapshot_key(sf_dir, "documents"), build)
 
 
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -443,23 +429,19 @@ def _rrf_input_ranks(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
     price). At 100 TB these are the per-query result lists a fusion
     service reads back, not retrieval it re-runs. HANDLES are cached
     and returned (never re-resolved views — CLAUDE.md artifact rule)."""
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.plans.embed_ops import ivf_topk
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
-    cache = session_artifact_cache(spark, "rrf_inputs")
     key = (snapshot_key(sf_dir, "documents"), snapshot_key(sf_dir, "embeddings"))
-    hit = cache.get(key)
-    if hit is None:
-        from monday_etl_automation_spark.plans.embed_ops import ivf_topk
-
-        hit = (
+    return snapshot_memo(
+        spark,
+        "rrf_inputs",
+        key,
+        lambda: (
             bm25_topk(spark, sf_dir).localCheckpoint(eager=True),
             ivf_topk(spark, sf_dir).localCheckpoint(eager=True),
-        )
-        cache[key] = hit
-    return hit
+        ),
+    )
 
 
 def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -514,22 +496,20 @@ def bm25_incremental_topk(
     SQL, making "incremental == rebuild" the hashed property itself."""
     from monday_etl_automation_spark.sources.tables import (
         bind_table,
-        session_artifact_cache,
         snapshot_key,
+        snapshot_memo,
     )
 
     bind_table(spark, sf_dir, "documents")
-    cache = session_artifact_cache(spark, "bm25i_base")
-    key = (snapshot_key(sf_dir, "documents"), batch_mod, batch_res)
-    base_po = cache.get(key)
-    if base_po is None:
+
+    def build_base() -> DataFrame:
         spark.table("documents").where(
             f"doc_id % {batch_mod} <> {batch_res}"
         ).createOrReplaceTempView("_bm_base")
-        base_po = spark.sql(
-            _postings_sql("spark", rel="_bm_base")
-        ).localCheckpoint(eager=True)
-        cache[key] = base_po
+        return spark.sql(_postings_sql("spark", rel="_bm_base")).localCheckpoint(eager=True)
+
+    key = (snapshot_key(sf_dir, "documents"), batch_mod, batch_res)
+    base_po = snapshot_memo(spark, "bm25i_base", key, build_base)
     batch = spark.table("documents").where(f"doc_id % {batch_mod} = {batch_res}")
     # materialize the merged postings before the scoring tail — the
     # tail references the relation several times (df/dl/tf derive from

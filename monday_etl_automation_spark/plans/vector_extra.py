@@ -129,18 +129,10 @@ def vector_extra(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis is pure driver-side Catalyst work, DataFrames are
     immutable logical plans, and every underlying index is itself
     snapshot-keyed — re-serving the plan is free and safe."""
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
-    cache = session_artifact_cache(spark, "vector_extra_plan")
     key = (snapshot_key(sf_dir, "documents"), snapshot_key(sf_dir, "embeddings"))
-    hit = cache.get(key)
-    if hit is None:
-        hit = _build_vector_extra(spark, sf_dir)
-        cache[key] = hit
-    return hit
+    return snapshot_memo(spark, "vector_extra_plan", key, lambda: _build_vector_extra(spark, sf_dir))
 
 
 # Shape families, the axis the documented split contingency cuts on

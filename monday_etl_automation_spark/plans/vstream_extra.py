@@ -127,30 +127,25 @@ def _ingest_artifact(spark: SparkSession, sf_dir: str):
     eviction. The REAL sink runs: its anti-join skip, deterministic
     dirty-batch pick, and dynamic-partition-overwrite writes are all
     on the path the hash then verifies."""
-    from monday_etl_automation_spark.sources.tables import (
-        session_artifact_cache,
-        snapshot_key,
-    )
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
     from monday_etl_automation_spark.streaming.vector_ingest import VectorIngestSink
 
     register_views(spark, sf_dir)
-    cache = session_artifact_cache(spark, "vstream_ingest", on_evict=_drop_vs_dir)
+
+    def build() -> tuple:
+        base = tempfile.mkdtemp(prefix="vstream_ingest_")
+        _VS_DIRS.add(base)
+        sink = VectorIngestSink(spark, sf_dir, base)
+        synth = spark.sql(_SYNTH).localCheckpoint(eager=True)
+        sink.process_batch(synth.where("vec_id % 3 = 0"), 1)
+        # batch 2 REDELIVERS all of batch 1 alongside its fresh rows; batch
+        # 3 redelivers everything — the anti-join must skip every repeat
+        sink.process_batch(synth.where("vec_id % 3 <= 1"), 2)
+        sink.process_batch(synth, 3)
+        return base, sink
+
     key = (snapshot_key(sf_dir, "embeddings"),)
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
-    base = tempfile.mkdtemp(prefix="vstream_ingest_")
-    _VS_DIRS.add(base)
-    sink = VectorIngestSink(spark, sf_dir, base)
-    synth = spark.sql(_SYNTH).localCheckpoint(eager=True)
-    sink.process_batch(synth.where("vec_id % 3 = 0"), 1)
-    # batch 2 REDELIVERS all of batch 1 alongside its fresh rows; batch
-    # 3 redelivers everything — the anti-join must skip every repeat
-    sink.process_batch(synth.where("vec_id % 3 <= 1"), 2)
-    sink.process_batch(synth, 3)
-    hit = (base, sink)
-    cache[key] = hit
-    return hit
+    return snapshot_memo(spark, "vstream_ingest", key, build, on_evict=_drop_vs_dir)
 
 
 def vstream_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

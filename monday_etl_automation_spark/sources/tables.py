@@ -138,46 +138,22 @@ def scan_split_ceiling(sf_dir: str, name: str) -> int:
         return 1 << 30
 
 
-def _spread_n(spark: SparkSession, sf_dir: str, name: str) -> int | None:
-    """Shared gate for the two spread twins (r18 ADVICE: the memoized
-    probe + cores/2 threshold must live once so they cannot drift):
-    the partition count to spread an unsplittable scan of ``name``
-    over, or None when the layout already yields >= cores/2 scan tasks
-    (the 100 TB case, where spreading must not fire). Footer-only
-    row-group probe, snapshot-memoized."""
+def spread_n(spark: SparkSession, sf_dir: str, name: str) -> int | None:
+    """Guide §2.5 input-skew gate ("one huge unsplittable file ...
+    otherwise repartition immediately after the read"): the partition
+    count to spread an unsplittable scan of ``name`` over, or None when
+    the parquet layout already yields >= cores/2 scan tasks (the 100 TB
+    case, where spreading must not fire). LAYOUT-adaptive, not
+    scale-tuned: it fires only on the pathological single-row-group
+    input the guide describes. Callers apply it as ``df.repartition(n)``
+    right after the read or as a ``/*+ REPARTITION(n) */`` hint, BEFORE
+    heavy derivations so the exchange carries raw columns, never derived
+    payloads (the r14 lesson: repartitioning encoded binary cost more
+    than it saved). Footer-only row-group probe, snapshot-memoized."""
     cpus = spark.sparkContext.defaultParallelism
     key = ("scan_split_ceiling",) + snapshot_key(sf_dir, name)
-    cache = session_artifact_cache(spark, "scan_split_ceiling")
-    ceiling = cache.get(key)
-    if ceiling is None:
-        ceiling = scan_split_ceiling(sf_dir, name)
-        cache[key] = ceiling
+    ceiling = snapshot_memo(spark, "scan_split_ceiling", key, lambda: scan_split_ceiling(sf_dir, name))
     return None if ceiling * 2 > cpus else cpus
-
-
-def spread_unsplittable_scan(spark: SparkSession, df: DataFrame, sf_dir: str, name: str) -> DataFrame:
-    """Guide §2.5 (input skew: "one huge unsplittable file ...
-    otherwise repartition immediately after the read"): when the
-    parquet layout cannot produce even half a core's worth of scan
-    tasks, round-robin the (narrow, pre-derivation) rows across the
-    cluster so downstream per-row work parallelizes. LAYOUT-adaptive,
-    not scale-tuned: at 100 TB the same table ships thousands of row
-    groups and this is a no-op; it fires only on the pathological
-    single-row-group input the guide describes. Apply BEFORE heavy
-    derivations so the exchange carries raw columns, never derived
-    payloads (the r14 lesson: repartitioning encoded binary cost more
-    than it saved)."""
-    n = _spread_n(spark, sf_dir, name)
-    return df if n is None else df.repartition(n)
-
-
-def spread_hint_n(spark: SparkSession, sf_dir: str, name: str) -> int | None:
-    """SQL-text twin of spread_unsplittable_scan: the partition count a
-    ``/*+ REPARTITION(n) */`` hint should use to spread a heavy
-    derivation over an unsplittable scan of ``name`` — or None when the
-    layout already yields >= cores/2 scan tasks (the 100 TB case, where
-    the hint must not fire)."""
-    return _spread_n(spark, sf_dir, name)
 
 
 class _ArtifactCache(dict):
@@ -259,6 +235,23 @@ def session_artifact_cache(spark: SparkSession, tag: str, on_evict=None) -> dict
             )
         cache.on_evict = on_evict
     return cache
+
+
+def snapshot_memo(spark: SparkSession, tag: str, key, build, on_evict=None):
+    """THE way to memoize a derived artifact per (session, file snapshot):
+    return the ``tag`` cache's entry for ``key`` (built from
+    ``snapshot_key``), calling ``build()`` and storing its result on a
+    miss. DataFrames are immutable logical plans, so re-serving a stored
+    handle is safe. A ``build()`` that raises stores nothing; storing a
+    new snapshot's entry evicts the superseded one (``_ArtifactCache``).
+    ``on_evict`` as in ``session_artifact_cache``, which this resolves
+    through the module global on every call."""
+    cache = session_artifact_cache(spark, tag, on_evict)
+    hit = cache.get(key)
+    if hit is None:
+        hit = build()
+        cache[key] = hit
+    return hit
 
 
 def bind_table(spark: SparkSession, sf_dir: str, name: str) -> None:

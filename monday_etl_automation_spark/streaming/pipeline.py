@@ -380,43 +380,41 @@ def run_stateful_replay(spark: SparkSession, sf_dir: str, name: str | None = Non
     from pyspark.sql import Window
 
     from monday_etl_automation_spark.sources.tables import (  # noqa: PLC0415
-        session_artifact_cache,
         snapshot_key,
+        snapshot_memo,
     )
 
-    cache = session_artifact_cache(spark, "stateful_totals")
-    key = snapshot_key(sf_dir, "events")
-    if name is None:
-        hit = cache.get(key)
-        if hit is not None:
-            return hit
-
-    sink = name or f"stateful_{uuid.uuid4().hex[:8]}"
-    with _replay_partitions(spark):
-        q = (
-            stateful_user_totals_stream(event_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_state_"))
-            .trigger(availableNow=True)
-            .start()
+    def replay(sink: str) -> DataFrame:
+        with _replay_partitions(spark):
+            q = (
+                stateful_user_totals_stream(event_stream(spark, sf_dir))
+                .writeStream.format("memory")
+                .queryName(sink)
+                .outputMode("update")
+                .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_state_"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
+        return (
+            spark.table(sink)
+            .withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .drop("_rn")
         )
-        q.awaitTermination()
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    result = (
-        spark.table(sink)
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
+
+    if name is not None:
+        return replay(name)
+    # materialize the per-user totals (tiny: |users| rows) so the
+    # cached artifact survives later memory-sink churn and joins
+    # against it never re-read the sink table
+    return snapshot_memo(
+        spark,
+        "stateful_totals",
+        snapshot_key(sf_dir, "events"),
+        lambda: replay(f"stateful_{uuid.uuid4().hex[:8]}").localCheckpoint(eager=True),
     )
-    if name is None:
-        # materialize the per-user totals (tiny: |users| rows) so the
-        # cached artifact survives later memory-sink churn and joins
-        # against it never re-read the sink table
-        result = result.localCheckpoint(eager=True)
-        cache[key] = result
-    return result
 
 
 def sessionize_with_timers(events: DataFrame, gap_seconds: int = 300) -> DataFrame:
@@ -579,44 +577,42 @@ def _timer_replay_source(
 
     from monday_etl_automation_spark.operators.indexing import with_global_index  # noqa: PLC0415
     from monday_etl_automation_spark.sources.tables import (  # noqa: PLC0415
-        session_artifact_cache,
         snapshot_key,
+        snapshot_memo,
     )
 
     n_splits = variant[0]
+
+    def build() -> str:
+        src = tempfile.mkdtemp(prefix="timer_src_")
+        _REPLAY_SRC_DIRS.add(src)
+        idxed = with_global_index(ev, ["ts", "event_id"], name="_rn")
+        total = ev.count()
+        sliced = (
+            idxed.withColumn(
+                "_slice",
+                (F.floor((F.col("_rn") - 1) * n_splits / F.lit(total)) + 1).cast("int"),
+            )
+            .drop("_rn")
+            .localCheckpoint(eager=True)
+        )
+        for i in range(1, n_splits + 1):
+            (
+                sliced.where(F.col("_slice") == i)
+                .drop("_slice")
+                .coalesce(1)
+                .write.mode("append")
+                .parquet(src)
+            )
+            _time.sleep(0.05)  # distinct mtimes at ms resolution
+        return src
+
     # superseded snapshots' source dirs are deleted on eviction (the
     # cache drops only the path string; the directory itself would
     # otherwise outlive every testdata regeneration and replay
     # variant), and any dirs still cached at interpreter exit go too
-    cache = session_artifact_cache(spark, "timer_replay_src", on_evict=_drop_replay_dir)
     key = (snapshot_key(sf_dir, "events"), variant)
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
-
-    src = tempfile.mkdtemp(prefix="timer_src_")
-    _REPLAY_SRC_DIRS.add(src)
-    idxed = with_global_index(ev, ["ts", "event_id"], name="_rn")
-    total = ev.count()
-    sliced = (
-        idxed.withColumn(
-            "_slice",
-            (F.floor((F.col("_rn") - 1) * n_splits / F.lit(total)) + 1).cast("int"),
-        )
-        .drop("_rn")
-        .localCheckpoint(eager=True)
-    )
-    for i in range(1, n_splits + 1):
-        (
-            sliced.where(F.col("_slice") == i)
-            .drop("_slice")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-        _time.sleep(0.05)  # distinct mtimes at ms resolution
-    cache[key] = src
-    return src
+    return snapshot_memo(spark, "timer_replay_src", key, build, on_evict=_drop_replay_dir)
 
 
 def run_timer_sessions_replay(

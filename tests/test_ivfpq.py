@@ -3,14 +3,31 @@ persisted-index search plan."""
 
 from __future__ import annotations
 
-from monday_etl_automation_spark.plans.embed_ops import cosine_topk
+import os
+import sys
+
+import pytest
+from pyspark.errors import PySparkException
+
+from monday_etl_automation_spark.plans.embed_ops import _train_ivf, cosine_topk
 from monday_etl_automation_spark.plans.ivfpq_ops import (
+    _e6_sql,
+    _ivfpq_search_arrays,
     _ivfpq_sql,
+    _ivfpq_tail_sql,
     _train_ivfpq,
     ivfpq_topk,
 )
 from monday_etl_automation_spark.plans.pq_ops import _M
 from tests.oracle_compare import assert_matches_oracle
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+from plan_audit import audit_plan, final_plan  # noqa: E402
+
+# the folded search's ONLY hash exchange is the per-query candidate
+# window's (the final re-rank window reuses its partitioning); measured
+# 1 at sf0.001 and sf0.01, while the exploded body plans 4
+FOLD_EXCHANGES = 1
 
 _RECALL_SF = "/root/testdata/sf0.01"
 
@@ -53,18 +70,49 @@ def test_ivfpq_index_is_compact(spark, sf_dir):
     assert rcb.count() <= _M * 16 * 4
 
 
+def _ivfpq_index(spark, sf_dir):
+    """(ranked, cent, nprobe, rcb, vparts) of the persisted index."""
+    ranked, rcb, vparts = _train_ivfpq(spark, sf_dir)
+    _, cent, _, nprobe = _train_ivf(spark, sf_dir)
+    return ranked, cent, nprobe, rcb, vparts
+
+
 def test_ivfpq_folded_search_plan(spark, sf_dir):
     """r19 fold pin: the probed-ADC search must not re-aggregate the
-    exploded codes per execution — no hash-partitioning exchange, no
-    SortMergeJoin of the checkpointed KB-sized metadata (stats-less
-    ExistingRDD scans need the explicit broadcast hints), no
-    CartesianProduct."""
-    from monday_etl_automation_spark.plans.ivfpq_ops import ivfpq_topk
-
-    df = ivfpq_topk(spark, sf_dir)
-    plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"  # noqa: SLF001
-    )
+    exploded codes per execution — only the per-query window shuffles,
+    no SortMergeJoin of the checkpointed KB-sized artifact relations
+    (stats-less ExistingRDD scans need the explicit broadcast hints),
+    no CartesianProduct. Audited on the AQE-final plan after an action
+    (tools/plan_audit.py), and shown able to fail: the exploded
+    _ivfpq_tail_sql body over the same index exceeds the cap."""
+    plan = final_plan(ivfpq_topk(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
-    assert plan.count("Exchange hashpartitioning") == 0
+    assert audit_plan(plan)["n_exchange"] == FOLD_EXCHANGES
+
+    ranked, cent, nprobe, rcb, vparts = _ivfpq_index(spark, sf_dir)
+    for name, df in (("ranked", ranked), ("cent", cent), ("rcb", rcb), ("vparts", vparts)):
+        df.createOrReplaceTempView(f"_t_ipq_{name}")
+    exploded = spark.sql(
+        "WITH "
+        + _ivfpq_tail_sql(
+            "spark",
+            "_t_ipq_ranked",
+            "_t_ipq_cent",
+            "_t_ipq_rcb",
+            "_t_ipq_vparts",
+            f"({_e6_sql('spark')})",
+            nprobe=nprobe,
+        )
+    )
+    assert audit_plan(final_plan(exploded))["n_exchange"] > FOLD_EXCHANGES
+
+
+def test_ivfpq_fold_rejects_missing_code(spark, sf_dir):
+    """A vector lacking one (sub, code) row must fail the artifact
+    build, not carry a NULL code that silently ranks it last."""
+    ranked, cent, nprobe, rcb, vparts = _ivfpq_index(spark, sf_dir)
+    v = vparts.agg({"vec_id": "min"}).first()[0]
+    broken = vparts.where(f"NOT (vec_id = {v} AND sub = 0)")
+    with pytest.raises(PySparkException, match=r"lacks a \(sub, code\) row"):
+        _ivfpq_search_arrays(spark, ranked, cent, nprobe, rcb, broken)

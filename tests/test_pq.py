@@ -7,9 +7,33 @@ for registered queries.
 
 from __future__ import annotations
 
-from monday_etl_automation_spark.plans.embed_ops import cosine_topk
-from monday_etl_automation_spark.plans.pq_ops import _CAND, _K, _M, _pq_sql, _train_pq, pq_topk
+import os
+import sys
+
+import pytest
+from pyspark.errors import PySparkException
+
+from monday_etl_automation_spark.plans.embed_ops import _query_pred, cosine_topk
+from monday_etl_automation_spark.plans.pq_ops import (
+    _CAND,
+    _K,
+    _M,
+    _pq_ex_sql,
+    _pq_search_arrays,
+    _pq_search_sql,
+    _pq_sql,
+    _train_pq,
+    pq_topk,
+)
 from tests.oracle_compare import assert_matches_oracle
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+from plan_audit import audit_plan, final_plan  # noqa: E402
+
+# the folded search's ONLY hash exchange is the per-query candidate
+# window's (the final re-rank window reuses its partitioning); measured
+# 1 at sf0.001 and sf0.01, while the exploded body plans 4
+FOLD_EXCHANGES = 1
 
 # recall is statistical: measure where the query set is large enough
 # for stable floors (same rationale as tests/test_ann_recall.py)
@@ -56,15 +80,31 @@ def test_pq_codes_are_compact(spark, sf_dir):
 
 
 def test_pq_folded_search_plan(spark, sf_dir):
-    """r19 fold pin: the persisted-meta ADC search must run shuffle-free
-    up to the per-query window — no hash-partitioning exchange from an
+    """r19 fold pin: the folded ADC search shuffles only for the
+    per-query window — no hash-partitioning exchange from an
     exploded-codes aggregation (guide §2.4), no CartesianProduct (the
     bounded query side must broadcast), no SortMergeJoin of the
-    KB-sized metadata relations."""
-    df = pq_topk(spark, sf_dir)
-    plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"  # noqa: SLF001
-    )
+    KB-sized artifact relations. Audited on the AQE-final plan after an
+    action (tools/plan_audit.py), and shown able to fail: the exploded
+    _pq_search_sql body over the same quantizer exceeds the cap."""
+    plan = final_plan(pq_topk(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
-    assert plan.count("Exchange hashpartitioning") == 0
+    assert audit_plan(plan)["n_exchange"] == FOLD_EXCHANGES
+
+    codes, cent = _train_pq(spark, sf_dir)
+    codes.createOrReplaceTempView("_t_pq_codes")
+    cent.createOrReplaceTempView("_t_pq_cent")
+    qex = f"SELECT * FROM ({_pq_ex_sql('spark')}) exq WHERE {_query_pred()}"
+    exploded = spark.sql("WITH " + _pq_search_sql("spark", "", "_t_pq_codes", "_t_pq_cent", qex=qex))
+    assert audit_plan(final_plan(exploded))["n_exchange"] > FOLD_EXCHANGES
+
+
+def test_pq_fold_rejects_missing_code(spark, sf_dir):
+    """A vector lacking one (sub, code) row must fail the artifact
+    build, not carry a NULL code that silently ranks it last."""
+    codes, cent = _train_pq(spark, sf_dir)
+    v = codes.agg({"vec_id": "min"}).first()[0]
+    broken = codes.where(f"NOT (vec_id = {v} AND sub = 0)")
+    with pytest.raises(PySparkException, match=r"lacks a \(sub, code\) row"):
+        _pq_search_arrays(spark, broken, cent)

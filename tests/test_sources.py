@@ -206,3 +206,63 @@ def test_artifact_cache_eviction_hook_fires():
     c[("sfA", "events", 3, 30)] = "v3"
     c[("sfA", "events", 4, 40)] = "v4"  # evicts v3; hook raises; survives
     assert c[("sfA", "events", 4, 40)] == "v4"
+
+
+def test_only_tables_module_calls_session_artifact_cache():
+    """One home for the snapshot-memo rule: every derived artifact is
+    memoized through sources/tables.py:snapshot_memo, so no other
+    module may hand-roll the get / build / put sequence."""
+    import pathlib
+
+    import monday_etl_automation_spark
+
+    pkg = pathlib.Path(monday_etl_automation_spark.__file__).parent
+    home = pkg / "sources" / "tables.py"
+    offenders = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if p != home and "session_artifact_cache(" in p.read_text()
+    )
+    assert offenders == []
+
+
+def test_snapshot_memo_builds_once_per_snapshot(tmp_path):
+    """snapshot_memo builds once per key, rebuilds (evicting the old
+    entry) when the file's (mtime, size) changes, and stores nothing
+    when the build raises. Only session attributes are touched, so a
+    bare namespace stands in for the SparkSession."""
+    import types
+
+    import pytest
+
+    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
+
+    session = types.SimpleNamespace()
+    f = tmp_path / "events.parquet"
+    f.write_bytes(b"a")
+    builds, evicted = [], []
+    on_evict = evicted.append  # one hook object: a tag binds exactly one
+
+    def build():
+        builds.append(1)
+        return f"v{len(builds)}"
+
+    def memo():
+        return snapshot_memo(session, "probe", snapshot_key(str(tmp_path), "events"), build, on_evict)
+
+    assert memo() == "v1"
+    assert memo() == "v1"
+    assert builds == [1]
+
+    f.write_bytes(b"ab")
+    os.utime(f, ns=(1, 1))
+    assert memo() == "v2"
+    assert evicted == ["v1"]
+    assert list(session._mea_cache_probe) == [snapshot_key(str(tmp_path), "events")]
+
+    def boom():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        snapshot_memo(session, "failing", snapshot_key(str(tmp_path), "events"), boom)
+    assert dict(session._mea_cache_failing) == {}

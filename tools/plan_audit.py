@@ -79,6 +79,15 @@ def audit_plan(plan: str) -> dict:
     }
 
 
+def final_plan(df) -> str:
+    """``df``'s AQE-final physical plan string, after running an action
+    on THIS DataFrame: under AQE the plan (and its codegen stages) is
+    only final after an action on the same plan instance."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    return plan.split("== Initial Plan ==")[0]
+
+
 def _pytest_only_queries() -> dict:
     """Non-registered operators worth auditing (registry is capped at
     50; these are verified by pytest twins but their plan shapes are
@@ -102,12 +111,7 @@ def main() -> int:
     for name in sorted(qs):
         try:
             df = qs[name](spark, SF_DIR)
-            # execute THIS DataFrame's queryExecution first: under AQE
-            # the plan (and its codegen stages) is only final after an
-            # action on the same plan instance
-            df.collect()
-            plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-            props = audit_plan(plan)
+            props = audit_plan(final_plan(df))
             if name == "flagship_depot_selection":
                 flagship_plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
                     df._jdf.queryExecution(), "formatted"
