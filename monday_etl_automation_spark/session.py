@@ -21,6 +21,21 @@ def _cpus() -> int:
         return 32
 
 
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else ~60% of the host's
+    physical memory capped at 48g: local mode runs every executor
+    inside the driver JVM, and a heap sized past physical memory lets
+    it grow until the host kills it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (ValueError, OSError, AttributeError):
+        return "48g"
+    return f"{max(1024, min(48 * 1024, int(phys * 0.6) >> 20))}m"
+
+
 def get_spark(app_name: str = "monday_etl_automation_spark") -> SparkSession:
     """Create (or reuse) the engine's SparkSession.
 
@@ -41,7 +56,7 @@ def get_spark(app_name: str = "monday_etl_automation_spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

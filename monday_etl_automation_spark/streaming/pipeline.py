@@ -12,6 +12,10 @@ same expression as its batch twin in ``plans/windows_ops.py``, so a
 full replay with ``availableNow`` must reproduce the batch answer —
 that property is what the driver's oracle checks.
 
+Every query here starts through ``_available_now``: one availableNow
+trigger at the replay width, into a memory sink or a ``foreachBatch``
+sink's ``process_batch``, with the checkpoint deleted once drained.
+
 Scale notes: state stores are keyed by (window, event_type) /
 (user_id, session) — bounded by watermark eviction; a real deployment
 sets ``spark.sql.streaming.stateStore.providerClass`` to RocksDB for
@@ -33,7 +37,12 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from monday_etl_automation_spark.sources.tables import load_table, normalize_ts
+from monday_etl_automation_spark.sources.tables import (
+    load_table,
+    normalize_ts,
+    snapshot_key,
+    snapshot_memo,
+)
 
 # Stateful streaming stages instantiate ONE state store per shuffle
 # partition, and every micro-batch commits a delta file (+CRC) per
@@ -79,6 +88,52 @@ def _replay_partitions(spark: SparkSession):
                 spark.conf.set(key, spark._mea_replay_saved)  # noqa: SLF001
 
 
+def _available_now(df: DataFrame, *, mode: str | None = None, foreach=None) -> DataFrame | None:
+    """THE launch path for every streaming query in the engine: drain
+    ``df`` with one availableNow trigger at the replay width
+    (`_replay_partitions`), then delete the query's checkpoint — a
+    replay is never restarted, and an orphan checkpoint per run would
+    grow without bound in a long session.
+
+    ``foreach``: a foreachBatch function (the sinks' ``process_batch``);
+    returns None. Otherwise the query writes a uniquely-named memory
+    sink in output ``mode`` and its table is returned."""
+    spark = df.sparkSession
+    writer = df.writeStream
+    if foreach is None:
+        sink = f"stream_{uuid.uuid4().hex[:8]}"
+        writer = writer.format("memory").queryName(sink).outputMode(mode)
+    else:
+        writer = writer.foreachBatch(foreach)
+    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    try:
+        with _replay_partitions(spark):
+            q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+            q.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return None if foreach is not None else spark.table(sink)
+
+
+def _drain_in_splits(df: DataFrame, n_splits: int, foreach) -> None:
+    """Stream a batch frame through ``foreach`` as ``n_splits`` real
+    micro-batches: write it as ``n_splits`` parquet files, read them
+    back with maxFilesPerTrigger=1 (a single-file availableNow source
+    collapses to one batch and never exercises cross-batch state), and
+    delete the split copy once drained."""
+    src = tempfile.mkdtemp(prefix="split_src_")
+    try:
+        df.repartition(n_splits).write.mode("overwrite").parquet(src)
+        stream = (
+            df.sparkSession.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        _available_now(stream, foreach=foreach)
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+
+
 def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet (stand-in for a Kafka topic).
 
@@ -91,16 +146,15 @@ def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # footer-probe cache: several streaming entries build an event
-    # stream per run; the file's physical schema can't change mid-query
-    cache = getattr(spark, "_mea_events_schema", None)
-    if cache is None:
-        cache = {}
-        spark._mea_events_schema = cache  # noqa: SLF001 (own session tag)
-    raw_schema = cache.get(sf_dir)
-    if raw_schema is None:
-        raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-        cache[sf_dir] = raw_schema
+    # several streaming entries build an event stream per run; the
+    # footer probe is memoized per file snapshot, so an in-place
+    # rewrite under a new encoding is re-probed, never served stale
+    raw_schema = snapshot_memo(
+        spark,
+        "events_schema",
+        snapshot_key(sf_dir, "events"),
+        lambda: spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema,
+    )
     raw = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -221,21 +275,10 @@ def run_interval_join_replay(
 ) -> DataFrame:
     """availableNow replay of the stream-stream interval join (append
     mode — inner interval joins emit rows as watermarks close)."""
-    sink = f"ssjoin_{uuid.uuid4().hex[:8]}"
     joined = stream_stream_interval_join(
         event_stream(spark, sf_dir), event_stream(spark, sf_dir), window_seconds
     )
-    with _replay_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ssj_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return _available_now(joined, mode="append")
 
 
 def run_error_context_replay(
@@ -250,21 +293,10 @@ def run_error_context_replay(
     Round 15: this puts the stream-stream interval join under the
     driver hash (it was pytest-only), union-tagged into
     temporal_joins."""
-    sink = f"ssctx_{uuid.uuid4().hex[:8]}"
     left = event_stream(spark, sf_dir).where(F.col("event_type") == "error")
     joined = stream_stream_interval_join(left, event_stream(spark, sf_dir), window_seconds)
-    with _replay_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ssc_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(sink)
+        _available_now(joined, mode="append")
         .groupBy(
             F.col("l_event_id").alias("event_id"),
             F.col("l_user_id").alias("user_id"),
@@ -285,39 +317,19 @@ def dedup_events(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
-def _replay(agg: DataFrame, sink: str) -> None:
-    """availableNow replay of a streaming aggregation into a memory
-    sink (complete mode: the final table IS the batch answer)."""
-    with _replay_partitions(agg.sparkSession):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-
-def run_replay(spark: SparkSession, sf_dir: str, name: str | None = None) -> DataFrame:
+def run_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full availableNow replay of the tumbling aggregation; returns
-    the final (batch-equal) result."""
-    sink = name or f"replay_{uuid.uuid4().hex[:8]}"
-    _replay(tumbling_counts(event_stream(spark, sf_dir)), sink)
-    return spark.table(sink)
+    the final (batch-equal) result (complete mode: the final table IS
+    the batch answer)."""
+    return _available_now(tumbling_counts(event_stream(spark, sf_dir)), mode="complete")
 
 
-def run_sliding_replay(spark: SparkSession, sf_dir: str, name: str | None = None) -> DataFrame:
-    sink = name or f"sliding_{uuid.uuid4().hex[:8]}"
-    _replay(sliding_stats(event_stream(spark, sf_dir)), sink)
-    return spark.table(sink)
+def run_sliding_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _available_now(sliding_stats(event_stream(spark, sf_dir)), mode="complete")
 
 
-def run_session_replay(spark: SparkSession, sf_dir: str, name: str | None = None) -> DataFrame:
-    sink = name or f"session_{uuid.uuid4().hex[:8]}"
-    _replay(session_stats(event_stream(spark, sf_dir)), sink)
-    return spark.table(sink)
+def run_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _available_now(session_stats(event_stream(spark, sf_dir)), mode="complete")
 
 
 def stateful_user_totals_stream(events: DataFrame) -> DataFrame:
@@ -367,7 +379,7 @@ def stateful_user_totals_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def run_stateful_replay(spark: SparkSession, sf_dir: str, name: str | None = None) -> DataFrame:
+def run_stateful_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """availableNow replay of the stateful operator; reduce the update
     stream to the final (= max n_events) row per user.
 
@@ -375,46 +387,25 @@ def run_stateful_replay(spark: SparkSession, sf_dir: str, name: str | None = Non
     every other derived artifact (sources/tables.py) — the deployment
     posture is a continuously-running stateful query whose state
     ALREADY reflects the stream; a batch consumer reads current state,
-    it does not re-replay history per query. Callers that pass
-    ``name`` (tests exercising replay mechanics) bypass the cache."""
+    it does not re-replay history per query."""
     from pyspark.sql import Window
 
-    from monday_etl_automation_spark.sources.tables import (  # noqa: PLC0415
-        snapshot_key,
-        snapshot_memo,
-    )
-
-    def replay(sink: str) -> DataFrame:
-        with _replay_partitions(spark):
-            q = (
-                stateful_user_totals_stream(event_stream(spark, sf_dir))
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("update")
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_state_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    def replay() -> DataFrame:
+        updates = _available_now(
+            stateful_user_totals_stream(event_stream(spark, sf_dir)), mode="update"
+        )
         w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
+        # materialize the per-user totals (tiny: |users| rows) so the
+        # cached artifact survives later memory-sink churn and joins
+        # against it never re-read the sink table
         return (
-            spark.table(sink)
-            .withColumn("_rn", F.row_number().over(w))
+            updates.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .drop("_rn")
+            .localCheckpoint(eager=True)
         )
 
-    if name is not None:
-        return replay(name)
-    # materialize the per-user totals (tiny: |users| rows) so the
-    # cached artifact survives later memory-sink churn and joins
-    # against it never re-read the sink table
-    return snapshot_memo(
-        spark,
-        "stateful_totals",
-        snapshot_key(sf_dir, "events"),
-        lambda: replay(f"stateful_{uuid.uuid4().hex[:8]}").localCheckpoint(eager=True),
-    )
+    return snapshot_memo(spark, "stateful_totals", snapshot_key(sf_dir, "events"), replay)
 
 
 def sessionize_with_timers(events: DataFrame, gap_seconds: int = 300) -> DataFrame:
@@ -576,10 +567,6 @@ def _timer_replay_source(
     import time as _time  # noqa: PLC0415
 
     from monday_etl_automation_spark.operators.indexing import with_global_index  # noqa: PLC0415
-    from monday_etl_automation_spark.sources.tables import (  # noqa: PLC0415
-        snapshot_key,
-        snapshot_memo,
-    )
 
     n_splits = variant[0]
 
@@ -645,20 +632,8 @@ def run_timer_sessions_replay(
         .option("latestFirst", "false")
         .parquet(src)
     )
-    sink = f"timer_sess_{uuid.uuid4().hex[:8]}"
-    with _replay_partitions(spark):
-        q = (
-            sessionize_with_timers(stream, gap_seconds)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_timer_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(sink)
+        _available_now(sessionize_with_timers(stream, gap_seconds), mode="append")
         .select(
             "user_id",
             F.timestamp_micros(F.col("start_us")).alias("session_start"),
@@ -819,34 +794,16 @@ def run_stateful_tws_replay(
     spark: SparkSession, sf_dir: str, initial_state=None, events: DataFrame | None = None
 ) -> DataFrame:
     """availableNow replay of the transformWithState totals operator."""
-    sink = f"tws_{uuid.uuid4().hex[:8]}"
     stream = events if events is not None else event_stream(spark, sf_dir)
-    q = (
-        stateful_user_totals_tws(stream, initial_state=initial_state)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_tws_"))
-        .trigger(availableNow=True)
-        .start()
+    updates = _available_now(
+        stateful_user_totals_tws(stream, initial_state=initial_state), mode="update"
     )
-    q.awaitTermination()
-    return _reduce_updates_to_final(spark.table(sink), ["user_id"])
+    return _reduce_updates_to_final(updates, ["user_id"])
 
 
 def run_type_counts_tws_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sink = f"twsmap_{uuid.uuid4().hex[:8]}"
-    q = (
-        event_type_counts_tws(event_stream(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_twsmap_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _reduce_updates_to_final(spark.table(sink), ["user_id", "event_type"])
+    updates = _available_now(event_type_counts_tws(event_stream(spark, sf_dir)), mode="update")
+    return _reduce_updates_to_final(updates, ["user_id", "event_type"])
 
 
 # ---------------------------------------------------------------------------
@@ -905,22 +862,12 @@ class DeadLetterSink:
             .drop("disposition")
         )
 
-    def run(self, events: DataFrame) -> None:
-        with _replay_partitions(events.sparkSession):
-            q = (
-                events.writeStream.foreachBatch(self.process_batch)
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_dlq_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
 
 def run_dead_letter(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Stream events (with injected corruption) through the dead-letter
     router; returns (delivered, quarantined) as batch frames."""
     sink = DeadLetterSink()
-    sink.run(corrupt_some_props(event_stream(spark, sf_dir)))
+    _available_now(corrupt_some_props(event_stream(spark, sf_dir)), foreach=sink.process_batch)
     return (
         sink.table(spark, "delivered"),
         sink.table(spark, "quarantined"),
@@ -1016,16 +963,6 @@ class StatusUpsertSink:
             .parquet(self.path)
         )
         self._has_state = True
-
-    def run(self, statuses: DataFrame) -> None:
-        with _replay_partitions(statuses.sparkSession):
-            q = (
-                statuses.writeStream.foreachBatch(self.process_batch)
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_upsert_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
 
 
 class RollupSink:
@@ -1160,30 +1097,12 @@ class RollupSink:
         )
         self._has_state = True
 
-    def run(self, events: DataFrame) -> None:
-        with _replay_partitions(events.sparkSession):
-            q = (
-                events.writeStream.foreachBatch(self.process_batch)
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_rollup_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
 
 def run_rollup_sink(spark: SparkSession, sf_dir: str, n_splits: int = 6) -> DataFrame:
     """Drive RollupSink across ``n_splits`` real micro-batches and
     return the maintained table."""
-    ev = load_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="rollup_src_")
-    ev.repartition(n_splits).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     sink = RollupSink(spark)
-    sink.run(stream)
+    _drain_in_splits(load_table(spark, sf_dir, "events"), n_splits, sink.process_batch)
     return sink.current()
 
 
@@ -1204,25 +1123,15 @@ def run_status_upsert(spark: SparkSession, sf_dir: str, n_splits: int = 4) -> Da
     """Drive StatusUpsertSink with a multi-micro-batch status stream and
     return the final merged state.
 
-    The derived statuses are split into ``n_splits`` files read with
-    maxFilesPerTrigger=1, so the sink MERGEs across n_splits real
-    micro-batches (a single-file availableNow source would collapse to
-    one batch and never exercise the cross-batch upsert). The final
-    state is batch-order independent: per-key top-1 under the total
-    order (updated_at DESC, status DESC) is associative, so any split
-    yields the same table — which is what the driver's latest-per-key
-    SQL oracle computes directly.
+    The sink MERGEs across ``n_splits`` real micro-batches
+    (`_drain_in_splits`). The final state is batch-order independent:
+    per-key top-1 under the total order (updated_at DESC, status DESC)
+    is associative, so any split yields the same table — which is what
+    the driver's latest-per-key SQL oracle computes directly.
     """
-    statuses = derive_statuses(load_table(spark, sf_dir, "events"))
-    src = tempfile.mkdtemp(prefix="status_src_")
-    statuses.repartition(n_splits).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(statuses.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     sink = StatusUpsertSink(spark)
-    sink.run(stream)
+    statuses = derive_statuses(load_table(spark, sf_dir, "events"))
+    _drain_in_splits(statuses, n_splits, sink.process_batch)
     return sink.current()
 
 
@@ -1308,29 +1217,12 @@ class DedupIngestSink:
     def index(self) -> DataFrame:
         return self._index_before(1 << 62)
 
-    def run(self, docs: DataFrame) -> None:
-        with _replay_partitions(docs.sparkSession):
-            q = (
-                docs.writeStream.foreachBatch(self.process_batch)
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ingest_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
 
 def run_dedup_ingest(
     spark: SparkSession, sf_dir: str, n_splits: int = 4, sink: DedupIngestSink | None = None
 ) -> DataFrame:
     """Drive DedupIngestSink over the documents table split into
-    ``n_splits`` real micro-batches (maxFilesPerTrigger=1); returns the
-    deduplicated corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    src = tempfile.mkdtemp(prefix="ingest_src_")
-    docs.repartition(n_splits).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
+    ``n_splits`` real micro-batches; returns the deduplicated corpus."""
     sink = sink or DedupIngestSink(spark)
-    sink.run(stream)
+    _drain_in_splits(load_table(spark, sf_dir, "documents"), n_splits, sink.process_batch)
     return sink.corpus()

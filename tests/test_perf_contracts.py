@@ -60,3 +60,18 @@ def test_persisted_indexes_memoize_and_invalidate(spark, sf_dir, tmp_path):
     os.utime(emb, ns=(os.stat(emb).st_mtime_ns + 1_000_000, os.stat(emb).st_mtime_ns + 1_000_000))
     a3 = _ann_bucket_index(spark, str(work))
     assert a3 is not a1, "changed snapshot must rebuild the index"
+
+
+def test_driver_heap_default_fits_the_host(monkeypatch):
+    """Local mode runs every executor inside the driver JVM, so the
+    default heap must fit the host's physical memory (a fixed 48g
+    default let the JVM grow until a 15 GB host killed it);
+    SPARK_GRAFT_DRIVER_MEM still overrides the default."""
+    from monday_etl_automation_spark.session import _driver_memory
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert _driver_memory() == "3g"
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
+    heap_mb = int(_driver_memory().removesuffix("m"))
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    assert 0 < heap_mb <= min(48 * 1024, phys_mb)

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from monday_etl_automation_spark.streaming.pipeline import (
     StatusUpsertSink,
+    _available_now,
     dedup_events,
     event_stream,
     run_replay,
@@ -113,9 +114,7 @@ def test_session_replay_with_rocksdb_state_store(spark, sf_dir):
     """The 100 TB state path: the same session-window replay runs
     unchanged on the RocksDB state store (what a real deployment sets
     for billions of keys) and produces the identical answer."""
-    import uuid
-
-    from monday_etl_automation_spark.streaming.pipeline import event_stream, session_stats, _replay
+    from monday_etl_automation_spark.streaming.pipeline import session_stats
 
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
@@ -123,9 +122,8 @@ def test_session_replay_with_rocksdb_state_store(spark, sf_dir):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        sink = f"rocks_{uuid.uuid4().hex[:8]}"
-        _replay(session_stats(event_stream(spark, sf_dir)), sink)
-        got = sorted(map(tuple, spark.table(sink).collect()))
+        replay = _available_now(session_stats(event_stream(spark, sf_dir)), mode="complete")
+        got = sorted(map(tuple, replay.collect()))
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -499,7 +497,7 @@ def test_status_upsert_keeps_latest_per_key(spark, tmp_path):
         "item_id BIGINT, column_id STRING, status STRING, updated_at TIMESTAMP"
     ).parquet(src)
     sink = StatusUpsertSink(spark, str(tmp_path / "state"))
-    sink.run(stream)
+    _available_now(stream, foreach=sink.process_batch)
 
     got = {(r.item_id, r.column_id): r.status for r in sink.current().collect()}
     assert got == {(1, "status"): "RES010", (2, "status"): "Dossier déposé"}
@@ -520,7 +518,7 @@ def test_status_upsert_keeps_latest_per_key(spark, tmp_path):
         p: os.path.getmtime(p)
         for p in glob.glob(str(tmp_path / "state" / "bucket=*" / "*.parquet"))
     }
-    sink.run(stream2)
+    _available_now(stream2, foreach=sink.process_batch)
     got2 = {(r.item_id, r.column_id): r.status for r in sink.current().collect()}
     assert got2[(2, "status")] == "RES020"
     assert got2[(1, "status")] == "RES010"
@@ -679,3 +677,83 @@ def test_timer_oracle_millisecond_boundary_fixture(spark, sf_dir, tmp_path_facto
     finally:
         clear_artifact_caches(spark)
         spark._mea_views_sf_dir = None
+
+
+def test_replay_reprobes_schema_after_in_place_encoding_rewrite(spark, sf_dir, tmp_path):
+    """The stream's read schema is the footer schema of the CURRENT
+    file snapshot: rewrite events.parquet in place from TIMESTAMP(NANOS)
+    to TIMESTAMP(MICROS) and the next replay must still equal the batch
+    answer. A schema probe cached by directory alone reads the micros
+    column as nanos-as-long and collapses every window into 1970 (the
+    1000x-compressed-timestamp failure)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from monday_etl_automation_spark.plans.windows_ops import tumbling_window_counts
+    from monday_etl_automation_spark.sources.tables import clear_artifact_caches
+
+    table = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    path = str(tmp_path / "events.parquet")
+    d = str(tmp_path)
+
+    def land(unit: str) -> None:
+        ts = table.schema.get_field_index("ts")
+        recast = table.set_column(ts, "ts", table.column("ts").cast(pa.timestamp(unit)))
+        pq.write_table(recast, path, version="2.6")
+
+    clear_artifact_caches(spark)
+    try:
+        land("ns")
+        want = sorted(map(tuple, tumbling_window_counts(spark, d).collect()))
+        assert sorted(map(tuple, run_replay(spark, d).collect())) == want
+        land("us")
+        got = sorted(map(tuple, run_replay(spark, d).collect()))
+        assert len(want) > 10
+        assert got == sorted(map(tuple, tumbling_window_counts(spark, d).collect())) == want
+    finally:
+        clear_artifact_caches(spark)
+
+
+def test_replays_remove_their_temp_dirs(spark, sf_dir, tmp_path, monkeypatch):
+    """Checkpoints and split-source copies are deleted once a query has
+    drained; only a sink's own output directory outlives the run, and
+    the returned frames still collect."""
+    import os
+    import tempfile
+
+    from monday_etl_automation_spark.streaming.pipeline import run_status_upsert
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert len(run_replay(spark, sf_dir).collect()) > 0
+    assert len(run_status_upsert(spark, sf_dir).collect()) > 0
+    left = sorted(os.listdir(tmp_path))
+    assert len(left) == 1 and left[0].startswith("status_upsert_"), left
+
+
+def test_only_the_launch_helper_starts_streaming_queries():
+    """Every streaming query in the package starts through
+    streaming/pipeline.py:_available_now — no other site may call
+    ``.writeStream`` or ``awaitTermination(``."""
+    import ast
+    import pathlib
+
+    import monday_etl_automation_spark as pkg
+    from monday_etl_automation_spark.streaming import pipeline
+
+    root = pathlib.Path(pkg.__file__).parent
+    helper_lines = {
+        no
+        for n in ast.parse(pathlib.Path(pipeline.__file__).read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "_available_now"
+        for no in range(n.lineno, n.end_lineno + 1)
+    }
+    inside, outside = [], []
+    for f in sorted(root.rglob("*.py")):
+        for no, line in enumerate(f.read_text().splitlines(), 1):
+            if ".writeStream" in line or "awaitTermination(" in line:
+                in_helper = f.samefile(pipeline.__file__) and no in helper_lines
+                (inside if in_helper else outside).append(f"{f.relative_to(root)}:{no}")
+    assert outside == [], outside
+    assert len(inside) == 2, inside
