@@ -116,17 +116,22 @@ def main() -> int:
     # Warmup passes (see module docstring): sf0.001 compiles/JITs every
     # stage cheaply; one untimed pass at the bench SF warms shuffle
     # files, parquet footers, and the page cache so the timed runs
-    # measure steady state.
+    # measure steady state. A failing warm-up is named on stderr; the
+    # timed runs still report the entry.
+    def warmup_error(name: str, ex: Exception) -> None:
+        first = (str(ex).splitlines() or [""])[0]
+        print(f"# warm-up error {name}: {type(ex).__name__}: {first}", file=sys.stderr)
+
     for name in names:
         try:
             run(name, "/root/testdata/sf0.001")
-        except Exception:
-            pass
+        except Exception as ex:  # noqa: BLE001
+            warmup_error(name, ex)
     for name in names:
         try:
             run(name, sf_dir)
-        except Exception:
-            pass
+        except Exception as ex:  # noqa: BLE001
+            warmup_error(name, ex)
 
     samples: dict[str, list[float]] = {n: [] for n in names}
     steal: dict[str, float] = {}

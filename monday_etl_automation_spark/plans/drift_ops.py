@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from monday_etl_automation_spark.plans.sampling_ops import _TOKS
 from monday_etl_automation_spark.plans.sqltext import tail_order
+from monday_etl_automation_spark.sources.tables import load_table
 
 
 def _drift_sql(dialect: str, rel_a: str, rel_b: str) -> str:
@@ -75,12 +76,8 @@ CROSS JOIN ta CROSS JOIN tb{tail_order(dialect, "source")}
 def source_drift(spark: SparkSession, dir_a: str, dir_b: str) -> DataFrame:
     """Per-source drift between the documents tables of two snapshot
     directories (older first, by convention)."""
-    spark.read.parquet(f"{dir_a}/documents.parquet").createOrReplaceTempView(
-        "_drift_docs_a"
-    )
-    spark.read.parquet(f"{dir_b}/documents.parquet").createOrReplaceTempView(
-        "_drift_docs_b"
-    )
+    load_table(spark, dir_a, "documents").createOrReplaceTempView("_drift_docs_a")
+    load_table(spark, dir_b, "documents").createOrReplaceTempView("_drift_docs_b")
     return spark.sql(_drift_sql("spark", "_drift_docs_a", "_drift_docs_b"))
 
 

@@ -6,6 +6,15 @@ as GraphQL query construction, fixed_signature_utils.py:257-289; here
 they are free). At 100 TB these scans are the leaves of every plan, so
 nothing below ever materializes a table eagerly: loaders return lazy
 DataFrames and all pruning happens in the optimizer.
+
+A snapshot table is opened only by `load_table`, with the schema
+`parquet_schema` hands it up front (Spark SQL lets a data source declare
+its schema, so a known schema needs no discovery pass). `parquet_schema`
+keys a per-session memo on the file's parquet footer — read with
+pyarrow, metadata only — so landing a byte-identical snapshot in a new
+directory runs no Spark job; only a footer schema the session has not
+seen pays Spark's schema-inference job. `event_stream` takes the stream
+schema from the same helper.
 """
 
 from __future__ import annotations
@@ -62,6 +71,69 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+# Every SQL conf Spark's parquet-to-Spark schema converter
+# (ParquetToSparkSchemaConverter) reads: one footer maps to a different
+# Spark schema under another setting, so each is part of the memo key.
+_PARQUET_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.caseSensitive",
+)
+
+
+def _footer_key(path: str) -> tuple:
+    """What Spark derives a file's schema from, read from the parquet
+    footer alone: the schema structure (group annotations via the arrow
+    view, every leaf's physical/logical type and levels) and the
+    key-value metadata, which holds Spark's own row-metadata schema when
+    Spark wrote the file. Raises on anything that is not one readable
+    parquet file (a Spark output directory, a missing path)."""
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(path)
+    schema = meta.schema
+    leaves = tuple(
+        (c.path, c.physical_type, c.logical_type.to_json(), c.converted_type,
+         c.max_definition_level, c.max_repetition_level, c.length, c.precision, c.scale)
+        for c in map(schema.column, range(len(schema)))
+    )
+    arrow = schema.to_arrow_schema().to_string(show_schema_metadata=False)
+    return arrow, leaves, tuple(sorted((meta.metadata or {}).items()))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The Spark schema of the parquet file at ``path``, without a
+    schema-inference job when the session has already inferred it for
+    an identical footer under the same conversion confs.
+
+    The memo key IS the footer schema (plus the confs), so an in-place
+    rewrite under another encoding misses and nothing can go stale; the
+    value always comes from Spark's own inference
+    (``spark.read.parquet(path).schema``). The memo is a plain session
+    attribute, not a ``_mea_cache_*`` artifact cache: those are emptied
+    on every view registration, which would re-infer on every landing.
+    A path that is not a single readable parquet file is inferred
+    uncached."""
+    try:
+        key = _footer_key(path)
+    except Exception:  # noqa: BLE001 (directory or unreadable: Spark decides)
+        return spark.read.parquet(path).schema
+    key += tuple(spark.conf.get(c) for c in _PARQUET_SCHEMA_CONFS)
+    memo = getattr(spark, "_mea_parquet_schemas", None)
+    if memo is None:
+        memo = {}
+        spark._mea_parquet_schemas = memo  # noqa: SLF001 (own session tag)
+    schema = memo.get(key)
+    if schema is None:
+        schema = memo[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan of one test table.
 
@@ -73,12 +145,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    # memoized per (session, sf_dir, table): spark.read.parquet costs a
-    # driver-side file listing + footer read (~100ms); multi-shape
-    # queries (tpch_extra: 16 shapes x ~3 tables) would otherwise pay
-    # it ~50x per BUILD. DataFrames are immutable logical plans, so
-    # sharing one relation across queries in a session is free and safe
-    # (plan-build profile: tpch_extra build 7.7s -> see commit).
+    # memoized per (session, sf_dir, table): opening a relation costs a
+    # driver-side file listing (~100ms); multi-shape queries
+    # (tpch_extra: 16 shapes x ~3 tables) would otherwise pay it ~50x
+    # per BUILD. DataFrames are immutable logical plans, so sharing one
+    # relation across queries in a session is free and safe.
     cache = getattr(spark, "_mea_table_cache", None)
     if cache is None:
         cache = {}
@@ -88,22 +159,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # is KNOWN to regenerate /root/testdata mid-round (round-5
     # incident) — a stale plan would silently read the old snapshot.
     # One os.stat per call is ~1000x cheaper than the listing it saves.
-    fpath = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(fpath)
-        fkey = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        fkey = None
-    key = (sf_dir, name, fkey)
+    key = snapshot_key(sf_dir, name)
     cached = cache.get(key)
     if cached is not None:
         return cached
+    # a miss: drop this table's superseded snapshots and every relation
+    # whose file is gone, or a refresh loop that lands each snapshot in
+    # a new directory grows the cache by one relation per table forever
+    for k in list(cache):
+        if k[:2] == key[:2] or not os.path.exists(os.path.join(k[0], f"{k[1]}.parquet")):
+            del cache[k]
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # oracle parity must not depend on the caller's session config:
     # DuckDB timestamps are UTC-naive, so timestamp rendering/windowing
     # must be UTC even if the driver built its own SparkSession
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = normalize_ts(spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")))
+    fpath = os.path.join(sf_dir, f"{name}.parquet")
+    df = normalize_ts(spark.read.schema(parquet_schema(spark, fpath)).parquet(fpath))
     cache[key] = df
     return df
 

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from monday_etl_automation_spark.sources.tables import (
     load_table,
     normalize_ts,
+    parquet_schema,
     snapshot_key,
     snapshot_memo,
 )
@@ -138,25 +139,17 @@ def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet (stand-in for a Kafka topic).
 
     The stream's read schema is the file's *actual* physical schema
-    (probed with a batch footer read — metadata only, no scan), and
-    ``ts`` is normalized by the same `normalize_ts` the batch loader
-    uses. Forcing an encoding here is how round 5 silently compressed
-    every timestamp 1000× when the driver re-wrote the file; deriving
-    it keeps batch and stream byte-identical under any drift.
+    (`parquet_schema`: memoized on the file's footer, so an in-place
+    rewrite under a new encoding is re-inferred, never served stale),
+    and ``ts`` is normalized by the same `normalize_ts` the batch
+    loader uses. Forcing an encoding here is how round 5 silently
+    compressed every timestamp 1000× when the driver re-wrote the file;
+    deriving it keeps batch and stream byte-identical under any drift.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # several streaming entries build an event stream per run; the
-    # footer probe is memoized per file snapshot, so an in-place
-    # rewrite under a new encoding is re-probed, never served stale
-    raw_schema = snapshot_memo(
-        spark,
-        "events_schema",
-        snapshot_key(sf_dir, "events"),
-        lambda: spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema,
-    )
     raw = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(parquet_schema(spark, os.path.join(sf_dir, "events.parquet")))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )

@@ -266,3 +266,113 @@ def test_snapshot_memo_builds_once_per_snapshot(tmp_path):
     with pytest.raises(RuntimeError):
         snapshot_memo(session, "failing", snapshot_key(str(tmp_path), "events"), boom)
     assert dict(session._mea_cache_failing) == {}
+
+
+def _restore_views(spark, sf_dir, saved) -> None:
+    from monday_etl_automation_spark.sources.tables import clear_artifact_caches, register_views
+
+    clear_artifact_caches(spark)
+    spark._mea_views_sf_dir = None
+    register_views(spark, sf_dir)
+    spark._mea_views_sf_dir = saved
+
+
+def test_landing_a_byte_identical_snapshot_runs_no_spark_job(spark, sf_dir, tmp_path):
+    """Once the session has seen a snapshot's parquet footers, landing a
+    byte-identical copy in a new directory opens every table from the
+    footer-keyed schema memo: no schema-inference job (one per table
+    when each open inferred its schema), and the fixture views over the
+    copy serve the same rows."""
+    import shutil
+    import uuid
+
+    from monday_etl_automation_spark.sources.fixtures import register_fixture_views
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    shutil.copytree(sf_dir, a)
+    sc = spark.sparkContext
+    saved = getattr(spark, "_mea_views_sf_dir", None)
+    try:
+        register_fixture_views(spark, a)
+        want = {t: sorted(spark.table(t).collect()) for t in ("items", "files")}
+        shutil.copytree(a, b)
+        group = f"landing-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "land a byte-identical snapshot")
+        try:
+            register_fixture_views(spark, b)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert {t: sorted(spark.table(t).collect()) for t in ("items", "files")} == want
+        assert want["items"] and want["files"]
+    finally:
+        _restore_views(spark, sf_dir, saved)
+
+
+def test_load_table_schema_matches_spark_inference(spark, sf_dir):
+    """The schema handed to every table scan is exactly what Spark
+    infers (and normalize_ts maps) for the same file."""
+    from monday_etl_automation_spark.sources.tables import TABLES
+
+    for name in TABLES:
+        got = load_table(spark, sf_dir, name).schema
+        inferred = normalize_ts(spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))).schema
+        assert got == inferred, name
+
+
+def test_schema_memo_separates_timestamp_encodings(spark, sf_dir, tmp_path):
+    """events.ts written as TIMESTAMP(NANOS) and as TIMESTAMP(MICROS) in
+    one session: the footers differ, so the memo never serves the nanos
+    copy's LongType read schema to the micros file, and both load as
+    the same TimestampType values."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from monday_etl_automation_spark.sources.tables import parquet_schema
+
+    table = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    ts = table.schema.get_field_index("ts")
+    dirs = {}
+    for unit in ("ns", "us"):
+        d = tmp_path / unit
+        d.mkdir()
+        recast = table.set_column(ts, "ts", table.column("ts").cast(pa.timestamp(unit)))
+        pq.write_table(recast, str(d / "events.parquet"), version="2.6")
+        dirs[unit] = str(d)
+    values = {}
+    for unit, d in dirs.items():
+        df = load_table(spark, d, "events")
+        assert isinstance(df.schema["ts"].dataType, T.TimestampType)
+        values[unit] = sorted(r[0] for r in df.select(F.col("ts").cast("timestamp_ntz")).collect())
+    raw = {u: parquet_schema(spark, os.path.join(d, "events.parquet"))["ts"].dataType for u, d in dirs.items()}
+    assert isinstance(raw["ns"], T.LongType) and isinstance(raw["us"], T.TimestampNTZType)
+    assert len(values["us"]) == table.num_rows > 0
+    assert values["ns"] == values["us"]
+
+
+def test_table_cache_holds_only_live_snapshots(spark, sf_dir, tmp_path):
+    """A refresh loop lands each snapshot in a new directory and keeps
+    the newest two. After four landings the table cache holds exactly
+    the live snapshots' relations, and none whose file is gone."""
+    import shutil
+
+    from monday_etl_automation_spark.sources.tables import TABLES, register_views
+
+    saved = getattr(spark, "_mea_views_sf_dir", None)
+    live: list[str] = []
+    try:
+        for i in range(4):
+            d = str(tmp_path / f"snapshot_{i}")
+            shutil.copytree(sf_dir, d)
+            live.append(d)
+            while len(live) > 2:
+                shutil.rmtree(live.pop(0))
+            register_views(spark, d)
+        cache = spark._mea_table_cache
+        ours = [k for k in cache if k[0].startswith(str(tmp_path))]
+        assert sorted({k[0] for k in ours}) == sorted(live)
+        assert len(ours) == len(live) * len(TABLES)
+        gone = [k for k in cache if not os.path.exists(os.path.join(k[0], f"{k[1]}.parquet"))]
+        assert gone == []
+    finally:
+        _restore_views(spark, sf_dir, saved)
