@@ -368,21 +368,6 @@ def pii_aug_cte(dialect: str, prefix: str = "") -> str:
 )"""
 
 
-def pii_counts_ctes(dialect: str, prefix: str) -> str:
-    """WITH-fragment ending in ``{prefix}pii(doc_id, pii_found,
-    residual_pii)`` — pii_counts_exprs over the planted-aug corpus
-    (the standalone relation-level form; text_profile inlines the same
-    expressions over its single corpus pass)."""
-    found, residual = pii_counts_exprs(dialect)
-    return f"""{pii_aug_cte(dialect, prefix)},
-{prefix}pii AS (
-  SELECT doc_id,
-         CAST({found} AS BIGINT) AS pii_found,
-         CAST({residual} AS BIGINT) AS residual_pii
-  FROM {prefix}aug
-)"""
-
-
 def _pii_sql(dialect: str) -> str:
     scrubbed = scrub_expr(dialect, "text")
 

@@ -30,6 +30,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+# _*_TOKS split a document into tokens; _*_H60 is the 60-bit shingle hash
+# used where discrimination matters (simhash bit votes, jaccard join keys)
+from monday_etl_automation_spark.plans.text_ops import (
+    _DUCK_H60,
+    _DUCK_TOKS,
+    _SPARK_H60,
+    _SPARK_TOKS,
+)
 from monday_etl_automation_spark.sources.tables import register_views
 
 # --- shared hash/shingle SQL fragments --------------------------------------
@@ -48,18 +56,10 @@ _MINHASH_AB = [
 ]
 _N_BANDS = 4  # bands of 2 signatures each
 
-_SPARK_TOKS = "split(trim(coalesce(text, '')), '\\\\s+')"
-_DUCK_TOKS = "regexp_split_to_array(trim(coalesce(text, '')), '\\s+')"
-
 # 28-bit shingle base hash (md5 hex prefix of 7 chars) — small enough
 # that the minhash affine step a*h + b stays well inside int64
 _SPARK_H28 = "CAST(conv(substr(md5(s), 1, 7), 16, 10) AS BIGINT)"
 _DUCK_H28 = "CAST('0x' || substr(md5(s), 1, 7) AS BIGINT)"
-
-# 60-bit hash (15 hex chars) — used where discrimination matters
-# (simhash bit votes, jaccard shingle join keys)
-_SPARK_H60 = "CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)"
-_DUCK_H60 = "CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)"
 
 
 def _shingles(dialect: str) -> str:
@@ -349,11 +349,6 @@ hs AS (SELECT doc_id, lang, {hashes} AS hashes FROM t)
 SELECT doc_id, lang, CAST({sim} AS BIGINT) AS simhash FROM hs
 ORDER BY doc_id
 """.strip()
-
-
-def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(_simhash_sql("spark"))
 
 
 # pigeonhole-complete for the 4-band split: every pair with hamming

@@ -31,10 +31,6 @@ per-pass cost is the read path a dataloader manifest check pays.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,7 +40,12 @@ from monday_etl_automation_spark.sources.shard_writer import (
     shuffled_file_width,
     write_shuffled_split,
 )
-from monday_etl_automation_spark.sources.tables import register_views
+from monday_etl_automation_spark.sources.tables import (
+    owned_tempdir,
+    register_views,
+    snapshot_key,
+    snapshot_memo,
+)
 
 _EPERM_FILES = 8
 _EPERM_EPOCHS = (0, 1)
@@ -59,33 +60,15 @@ _DUCK_EPOCH_SHUF = (
 
 # --- Spark side ---------------------------------------------------------------
 
-_EP_DIRS: set[str] = set()
-
-
-def _drop_ep_dir(entry) -> None:
-    if isinstance(entry, tuple) and entry and isinstance(entry[0], str):
-        _EP_DIRS.discard(entry[0])
-        shutil.rmtree(entry[0], ignore_errors=True)
-
-
-@atexit.register
-def _drop_all_ep_dirs() -> None:
-    for path in list(_EP_DIRS):
-        shutil.rmtree(path, ignore_errors=True)
-    _EP_DIRS.clear()
-
 
 def _eperm_artifact(spark: SparkSession, sf_dir: str) -> tuple:
     """(base_path,) — both epochs written ONCE per (session, documents
     snapshot) through the real writer; superseded snapshots rmtree on
     eviction (the vstream/tokp artifact discipline)."""
-    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
-
     register_views(spark, sf_dir)
 
     def build() -> tuple:
-        base = tempfile.mkdtemp(prefix="eperm_split_")
-        _EP_DIRS.add(base)
+        base = owned_tempdir("eperm_split_")
         for e in _EPERM_EPOCHS:
             write_shuffled_split(
                 spark, sf_dir, f"{base}/epoch={e}", epoch=e, n_files=_EPERM_FILES
@@ -93,7 +76,7 @@ def _eperm_artifact(spark: SparkSession, sf_dir: str) -> tuple:
         return (base,)
 
     key = (snapshot_key(sf_dir, "documents"),)
-    return snapshot_memo(spark, "eperm_split", key, build, on_evict=_drop_ep_dir)
+    return snapshot_memo(spark, "eperm_split", key, build)
 
 
 def eperm_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -57,10 +57,6 @@ reference has no training-data surface at all — this is north-star
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -71,7 +67,7 @@ from monday_etl_automation_spark.plans.decontam_ops import (
 )
 from monday_etl_automation_spark.plans.sampling_ops import _split_sql
 from monday_etl_automation_spark.plans.text_ops import _chunk_sql
-from monday_etl_automation_spark.sources.tables import register_views
+from monday_etl_automation_spark.sources.tables import owned_tempdir, register_views
 
 _PACK_BUDGET = 128  # release_ops default (ws counter)
 _TOK_BUDGET = 512  # BPE budget (subword counts >= word counts)
@@ -352,22 +348,6 @@ GROUP BY shard
 
 # --- tokenized shard artifact -------------------------------------------------
 
-_TOKP_DIRS: set[str] = set()
-
-
-def _drop_tokp_dir(entry) -> None:
-    if isinstance(entry, tuple) and entry and isinstance(entry[0], str):
-        _TOKP_DIRS.discard(entry[0])
-        shutil.rmtree(entry[0], ignore_errors=True)
-
-
-@atexit.register
-def _drop_all_tokp_dirs() -> None:
-    for path in list(_TOKP_DIRS):
-        shutil.rmtree(path, ignore_errors=True)
-    _TOKP_DIRS.clear()
-
-
 def _tokenized_shard_artifact(spark: SparkSession, sf_dir: str) -> tuple:
     """(shard dir, manifest DataFrame) — built ONCE per (session,
     documents snapshot), like every persisted index: a release is a
@@ -377,9 +357,7 @@ def _tokenized_shard_artifact(spark: SparkSession, sf_dir: str) -> tuple:
     from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
 
     key = (snapshot_key(sf_dir, "documents"),)
-    return snapshot_memo(
-        spark, "tokp_shards", key, lambda: _build_tokenized_shards(spark, sf_dir), on_evict=_drop_tokp_dir
-    )
+    return snapshot_memo(spark, "tokp_shards", key, lambda: _build_tokenized_shards(spark, sf_dir))
 
 
 def _build_tokenized_shards(spark: SparkSession, sf_dir: str) -> tuple:
@@ -388,8 +366,7 @@ def _build_tokenized_shards(spark: SparkSession, sf_dir: str) -> tuple:
     from monday_etl_automation_spark.plans.tokenize_ops import packed_token_sequences
     from monday_etl_automation_spark.sources.shard_writer import write_tokenized_shards
 
-    out = tempfile.mkdtemp(prefix="tokp_shards_")
-    _TOKP_DIRS.add(out)
+    out = owned_tempdir("tokp_shards_")
     # corpus-adaptive budget: BPE counts of a 64-word chunk ride the
     # corpus's word lengths, and the testdata REGENERATES between
     # rounds — a fixed 512 would turn the whole entry red the round a

@@ -66,34 +66,6 @@ ORDER BY doc_id
     )
 
 
-def _text_stats_oracle() -> str:
-    stop_list = ", ".join(f"'{w}'" for w in _STOP_EN)
-    return f"""
-WITH t AS (
-  SELECT doc_id, lang, source, n_chars, {_DUCK_TOKS} AS toks FROM documents
-),
-s AS (
-  SELECT
-    doc_id, lang, source, n_chars,
-    CAST(len(toks) AS INT) AS n_tokens,
-    CAST(list_sum(list_transform(toks, x -> length(x))) AS BIGINT) AS sum_token_len,
-    CAST(len(list_filter(toks, x -> x IN ({stop_list}))) AS INT) AS n_stopwords,
-    CAST(len(list_distinct(toks)) AS INT) AS n_distinct_tokens
-  FROM t
-)
-SELECT
-  doc_id, lang, source, n_chars, n_tokens, sum_token_len, n_stopwords, n_distinct_tokens,
-  CAST(
-    CASE WHEN n_tokens BETWEEN 20 AND 1000 THEN 40 ELSE 0 END
-    + CASE WHEN n_tokens > 0 AND sum_token_len * 10 BETWEEN n_tokens * 30 AND n_tokens * 80 THEN 30 ELSE 0 END
-    + CASE WHEN n_stopwords * 100 >= n_tokens * 2 THEN 15 ELSE 0 END
-    + CASE WHEN n_distinct_tokens * 100 >= n_tokens * 30 THEN 15 ELSE 0 END
-  AS INT) AS quality_score
-FROM s
-ORDER BY doc_id
-""".strip()
-
-
 # ---------------------------------------------------------------------------
 # lang_id — n-gram/stopword-heuristic language guess + accuracy rollup
 # ---------------------------------------------------------------------------

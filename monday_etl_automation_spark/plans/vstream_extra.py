@@ -40,10 +40,6 @@ the read path a search service actually pays.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,7 +61,12 @@ from monday_etl_automation_spark.plans.pq_ops import (
     _pq_ex_sql,
     pq_train_ctes,
 )
-from monday_etl_automation_spark.sources.tables import register_views
+from monday_etl_automation_spark.sources.tables import (
+    owned_tempdir,
+    register_views,
+    snapshot_key,
+    snapshot_memo,
+)
 
 _VS_MOD = 7
 _VS_RES = 3
@@ -105,21 +106,6 @@ def _key(dialect: str, parts: list[str]) -> str:
 
 # --- Spark side ---------------------------------------------------------------
 
-_VS_DIRS: set[str] = set()
-
-
-def _drop_vs_dir(entry) -> None:
-    if isinstance(entry, tuple) and entry and isinstance(entry[0], str):
-        _VS_DIRS.discard(entry[0])
-        shutil.rmtree(entry[0], ignore_errors=True)
-
-
-@atexit.register
-def _drop_all_vs_dirs() -> None:
-    for path in list(_VS_DIRS):
-        shutil.rmtree(path, ignore_errors=True)
-    _VS_DIRS.clear()
-
 
 def _ingest_artifact(spark: SparkSession, sf_dir: str):
     """(base_path, sink) — the 3-batch ingest, run ONCE per (session,
@@ -127,14 +113,12 @@ def _ingest_artifact(spark: SparkSession, sf_dir: str):
     eviction. The REAL sink runs: its anti-join skip, deterministic
     dirty-batch pick, and dynamic-partition-overwrite writes are all
     on the path the hash then verifies."""
-    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
     from monday_etl_automation_spark.streaming.vector_ingest import VectorIngestSink
 
     register_views(spark, sf_dir)
 
     def build() -> tuple:
-        base = tempfile.mkdtemp(prefix="vstream_ingest_")
-        _VS_DIRS.add(base)
+        base = owned_tempdir("vstream_ingest_")
         sink = VectorIngestSink(spark, sf_dir, base)
         synth = spark.sql(_SYNTH).localCheckpoint(eager=True)
         sink.process_batch(synth.where("vec_id % 3 = 0"), 1)
@@ -145,7 +129,7 @@ def _ingest_artifact(spark: SparkSession, sf_dir: str):
         return base, sink
 
     key = (snapshot_key(sf_dir, "embeddings"),)
-    return snapshot_memo(spark, "vstream_ingest", key, build, on_evict=_drop_vs_dir)
+    return snapshot_memo(spark, "vstream_ingest", key, build)
 
 
 def vstream_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

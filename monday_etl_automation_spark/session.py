@@ -43,7 +43,16 @@ def get_spark(app_name: str = "monday_etl_automation_spark") -> SparkSession:
     (DuckDB timestamps are UTC-naive). AQE is on so that at scale the
     runtime re-plans: broadcast conversion, skew-join splitting,
     shuffle-partition coalescing.
+
+    Python UDF workers import this package, and they start from the
+    environment the JVM inherits, so the package's parent directory
+    goes on ``PYTHONPATH`` before the JVM starts — whatever the
+    caller's working directory.
     """
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join(p for p in [root, *paths] if p)
     cpus = _cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

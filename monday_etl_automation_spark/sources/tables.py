@@ -15,11 +15,18 @@ pyarrow, metadata only — so landing a byte-identical snapshot in a new
 directory runs no Spark job; only a footer schema the session has not
 seen pays Spark's schema-inference job. `event_stream` takes the stream
 schema from the same helper.
+
+Every directory the engine makes that outlives one call comes from
+`owned_tempdir`; evicting the artifact entry that names it, or
+interpreter exit, deletes it.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -228,6 +235,39 @@ def spread_n(spark: SparkSession, sf_dir: str, name: str) -> int | None:
     return None if ceiling * 2 > cpus else cpus
 
 
+_OWNED_DIRS: set[str] = set()
+
+
+def owned_tempdir(prefix: str) -> str:
+    """THE way to make a directory that outlives one call: a fresh
+    ``tempfile.mkdtemp`` (so ``tempfile.tempdir`` still places it) that
+    the engine owns. An artifact cache entry naming it deletes it on
+    eviction (``_ArtifactCache``); whatever is left goes at interpreter
+    exit."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _OWNED_DIRS.add(path)
+    return path
+
+
+def _drop_owned(paths) -> None:
+    for path in paths:
+        _OWNED_DIRS.discard(path)
+        shutil.rmtree(path, ignore_errors=True)  # cleanup never fails a query
+
+
+@atexit.register
+def _drop_all_owned() -> None:
+    _drop_owned(list(_OWNED_DIRS))
+
+
+def _owned_by(value) -> set[str]:
+    """The owned directories a cached value names: the value itself, or
+    the elements of a tuple value. Any other path (an sf_dir, say) is
+    never the engine's to delete."""
+    parts = value if isinstance(value, tuple) else (value,)
+    return {p for p in parts if isinstance(p, str) and p in _OWNED_DIRS}
+
+
 class _ArtifactCache(dict):
     """Snapshot-keyed artifact dict that EVICTS superseded snapshots on
     insert: a testdata regeneration changes the (mtime, size) part of
@@ -236,26 +276,18 @@ class _ArtifactCache(dict):
     executor storage for the session lifetime. Identity = the key with
     mtime/size stripped, so one entry per (sf_dir, table [, ...])
     survives. Dropping the reference lets Spark's ContextCleaner
-    unpersist the orphaned checkpoint blocks.
+    unpersist the orphaned checkpoint blocks; an evicted entry's owned
+    dirs (``owned_tempdir``), which no collector reclaims, are deleted.
 
-    ``on_evict``: optional callable invoked with each superseded
-    entry's VALUE — for artifacts that own resources the garbage
-    collector cannot reclaim (e.g. the timer replay's on-disk source
-    dirs), the hook is where they are released. Hook errors are
-    swallowed: eviction is best-effort cleanup, never a query failure.
-
-    CONSUMER CONTRACT (r16 advice): for tagged caches whose hook
-    deletes on-disk state, eviction (clear() or a snapshot
-    regeneration) invalidates any lazy DataFrame previously returned
-    for the evicted entry — its parquet source is gone, and executing
-    the stale handle fails with missing files. Consumers must
-    re-resolve the artifact through the builder after any
-    clear/regeneration, never hold a handle across one; every builder
-    in this repo is already re-entrant (cache-miss -> rebuild), so
-    "re-resolve" is just calling the builder again.
+    CONSUMER CONTRACT (r16 advice): for entries that name owned dirs,
+    eviction (clear() or a snapshot regeneration) invalidates any lazy
+    DataFrame previously returned for the evicted entry — its parquet
+    source is gone, and executing the stale handle fails with missing
+    files. Consumers must re-resolve the artifact through the builder
+    after any clear/regeneration, never hold a handle across one; every
+    builder in this repo is already re-entrant (cache-miss -> rebuild),
+    so "re-resolve" is just calling the builder again.
     """
-
-    on_evict = None
 
     @staticmethod
     def _identity(key):
@@ -268,57 +300,34 @@ class _ArtifactCache(dict):
     def __setitem__(self, key, value):
         ident = self._identity(key)
         for k in [k for k in self if self._identity(k) == ident and k != key]:
-            old = dict.pop(self, k)
-            if self.on_evict is not None and old is not value:
-                try:
-                    self.on_evict(old)
-                except Exception:  # noqa: BLE001 (cleanup is best-effort)
-                    pass
+            _drop_owned(_owned_by(dict.pop(self, k)))
         dict.__setitem__(self, key, value)
 
     def clear(self):
-        if self.on_evict is not None:
-            for old in self.values():
-                try:
-                    self.on_evict(old)
-                except Exception:  # noqa: BLE001
-                    pass
+        for old in self.values():
+            _drop_owned(_owned_by(old))
         dict.clear(self)
 
 
-def session_artifact_cache(spark: SparkSession, tag: str, on_evict=None) -> dict:
-    """Per-session dict for snapshot-keyed derived artifacts.
-
-    ``on_evict`` binds once per tag: a second call site passing a
-    DIFFERENT hook for the same tag raises instead of silently
-    replacing the first (r16 advice — last-caller-wins would let one
-    builder's cleanup discipline be swapped out by an unrelated
-    caller), and a call omitting it leaves the bound hook in place.
-    """
+def session_artifact_cache(spark: SparkSession, tag: str) -> dict:
+    """Per-session dict for snapshot-keyed derived artifacts."""
     attr = f"_mea_cache_{tag}"
     cache = getattr(spark, attr, None)
     if cache is None:
         cache = _ArtifactCache()
         setattr(spark, attr, cache)
-    if on_evict is not None:
-        if cache.on_evict is not None and cache.on_evict is not on_evict:
-            raise ValueError(
-                f"artifact cache {tag!r} already has a different on_evict hook"
-            )
-        cache.on_evict = on_evict
     return cache
 
 
-def snapshot_memo(spark: SparkSession, tag: str, key, build, on_evict=None):
+def snapshot_memo(spark: SparkSession, tag: str, key, build):
     """THE way to memoize a derived artifact per (session, file snapshot):
     return the ``tag`` cache's entry for ``key`` (built from
     ``snapshot_key``), calling ``build()`` and storing its result on a
     miss. DataFrames are immutable logical plans, so re-serving a stored
     handle is safe. A ``build()`` that raises stores nothing; storing a
     new snapshot's entry evicts the superseded one (``_ArtifactCache``).
-    ``on_evict`` as in ``session_artifact_cache``, which this resolves
-    through the module global on every call."""
-    cache = session_artifact_cache(spark, tag, on_evict)
+    Resolves the cache through ``session_artifact_cache`` on every call."""
+    cache = session_artifact_cache(spark, tag)
     hit = cache.get(key)
     if hit is None:
         hit = build()

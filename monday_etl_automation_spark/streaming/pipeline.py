@@ -25,7 +25,6 @@ is identical from the first transformation on.
 
 from __future__ import annotations
 
-import atexit
 import glob
 import os
 import shutil
@@ -40,6 +39,7 @@ from pyspark.sql import functions as F
 from monday_etl_automation_spark.sources.tables import (
     load_table,
     normalize_ts,
+    owned_tempdir,
     parquet_schema,
     snapshot_key,
     snapshot_memo,
@@ -517,24 +517,6 @@ def sessionize_with_timers(events: DataFrame, gap_seconds: int = 300) -> DataFra
     )
 
 
-# Live timer-replay source dirs (one per cached variant). Eviction and
-# interpreter exit both route through _drop_replay_dir so a long
-# driver/bench session's regenerations cannot accumulate orphan dirs.
-_REPLAY_SRC_DIRS: set[str] = set()
-
-
-def _drop_replay_dir(path) -> None:
-    if isinstance(path, str):
-        _REPLAY_SRC_DIRS.discard(path)
-        shutil.rmtree(path, ignore_errors=True)
-
-
-@atexit.register
-def _drop_all_replay_dirs() -> None:
-    for path in list(_REPLAY_SRC_DIRS):
-        _drop_replay_dir(path)
-
-
 def _timer_replay_source(
     spark: SparkSession, sf_dir: str, ev: DataFrame, variant: tuple
 ) -> str:
@@ -564,8 +546,7 @@ def _timer_replay_source(
     n_splits = variant[0]
 
     def build() -> str:
-        src = tempfile.mkdtemp(prefix="timer_src_")
-        _REPLAY_SRC_DIRS.add(src)
+        src = owned_tempdir("timer_src_")
         idxed = with_global_index(ev, ["ts", "event_id"], name="_rn")
         total = ev.count()
         sliced = (
@@ -587,12 +568,8 @@ def _timer_replay_source(
             _time.sleep(0.05)  # distinct mtimes at ms resolution
         return src
 
-    # superseded snapshots' source dirs are deleted on eviction (the
-    # cache drops only the path string; the directory itself would
-    # otherwise outlive every testdata regeneration and replay
-    # variant), and any dirs still cached at interpreter exit go too
     key = (snapshot_key(sf_dir, "events"), variant)
-    return snapshot_memo(spark, "timer_replay_src", key, build, on_evict=_drop_replay_dir)
+    return snapshot_memo(spark, "timer_replay_src", key, build)
 
 
 def run_timer_sessions_replay(
@@ -838,10 +815,15 @@ class DeadLetterSink:
     ``partitionBy`` append per micro-batch — the batch is scanned and
     parsed once, not once per disposition (at 100 TB a double-scan per
     micro-batch doubles the stream's input cost). Readers partition-prune
-    on disposition, so the two logical tables stay independent scans."""
+    on disposition, so the two logical tables stay independent scans.
 
-    def __init__(self, base_path: str | None = None) -> None:
-        self.base_path = base_path or tempfile.mkdtemp(prefix="dead_letter_")
+    The sink writes under ``base_path`` and never deletes it: the frames
+    ``table`` returns read it lazily. ``run_dead_letter`` (and so each
+    ``dead_letter_counts`` call, with its upsert sink) hands it an
+    ``owned_tempdir``, which therefore lives until interpreter exit."""
+
+    def __init__(self, base_path: str) -> None:
+        self.base_path = base_path
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         split_dead_letter(batch).write.mode("append").partitionBy("disposition").parquet(
@@ -859,7 +841,7 @@ class DeadLetterSink:
 def run_dead_letter(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Stream events (with injected corruption) through the dead-letter
     router; returns (delivered, quarantined) as batch frames."""
-    sink = DeadLetterSink()
+    sink = DeadLetterSink(owned_tempdir("dead_letter_"))
     _available_now(corrupt_some_props(event_stream(spark, sf_dir)), foreach=sink.process_batch)
     return (
         sink.table(spark, "delivered"),
@@ -882,12 +864,12 @@ class StatusUpsertSink:
     semantics.
     """
 
-    def __init__(self, spark: SparkSession, path: str | None = None, n_buckets: int = 8) -> None:
+    def __init__(self, spark: SparkSession, path: str, n_buckets: int = 8) -> None:
         # n_buckets sizes the state table's partition grain: production
         # sizes it so one bucket's state fits an executor (state_bytes /
         # ~256MB); locally 8 keeps per-batch task/file overhead low.
         self.spark = spark
-        self.path = path or tempfile.mkdtemp(prefix="status_upsert_")
+        self.path = path
         self.n_buckets = n_buckets
         # survive a restart-after-crash: state on disk IS state (the
         # latest-wins MERGE is replay-idempotent, but a restarted sink
@@ -991,9 +973,9 @@ class RollupSink:
 
     _KEYS = ("window_start", "event_type")
 
-    def __init__(self, spark: SparkSession, path: str | None = None, n_buckets: int = 8) -> None:
+    def __init__(self, spark: SparkSession, path: str, n_buckets: int = 8) -> None:
         self.spark = spark
-        self.path = path or tempfile.mkdtemp(prefix="rollup_")
+        self.path = path
         self.n_buckets = n_buckets
         # survive a restart-after-crash: state on disk IS state
         self._has_state = bool(glob.glob(os.path.join(self.path, "bucket=*")))
@@ -1094,7 +1076,7 @@ class RollupSink:
 def run_rollup_sink(spark: SparkSession, sf_dir: str, n_splits: int = 6) -> DataFrame:
     """Drive RollupSink across ``n_splits`` real micro-batches and
     return the maintained table."""
-    sink = RollupSink(spark)
+    sink = RollupSink(spark, owned_tempdir("rollup_"))
     _drain_in_splits(load_table(spark, sf_dir, "events"), n_splits, sink.process_batch)
     return sink.current()
 
@@ -1122,7 +1104,7 @@ def run_status_upsert(spark: SparkSession, sf_dir: str, n_splits: int = 4) -> Da
     is associative, so any split yields the same table — which is what
     the driver's latest-per-key SQL oracle computes directly.
     """
-    sink = StatusUpsertSink(spark)
+    sink = StatusUpsertSink(spark, owned_tempdir("status_upsert_"))
     statuses = derive_statuses(load_table(spark, sf_dir, "events"))
     _drain_in_splits(statuses, n_splits, sink.process_batch)
     return sink.current()
@@ -1159,9 +1141,9 @@ class DedupIngestSink:
 
     _HASH = "md5(regexp_replace(trim(lower(text)), '\\\\s+', ' '))"
 
-    def __init__(self, spark: SparkSession, base_path: str | None = None) -> None:
+    def __init__(self, spark: SparkSession, base_path: str) -> None:
         self.spark = spark
-        self.base_path = base_path or tempfile.mkdtemp(prefix="dedup_ingest_")
+        self.base_path = base_path
         self.corpus_path = os.path.join(self.base_path, "corpus")
         self.index_path = os.path.join(self.base_path, "index")
 
@@ -1216,6 +1198,6 @@ def run_dedup_ingest(
 ) -> DataFrame:
     """Drive DedupIngestSink over the documents table split into
     ``n_splits`` real micro-batches; returns the deduplicated corpus."""
-    sink = sink or DedupIngestSink(spark)
+    sink = sink or DedupIngestSink(spark, owned_tempdir("dedup_ingest_"))
     _drain_in_splits(load_table(spark, sf_dir, "documents"), n_splits, sink.process_batch)
     return sink.corpus()

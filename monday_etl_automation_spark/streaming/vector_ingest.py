@@ -35,7 +35,6 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,10 +50,10 @@ _VEC_SCHEMA = "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
 
 
 class VectorIngestSink:
-    def __init__(self, spark: SparkSession, sf_dir: str, base_path: str | None = None):
+    def __init__(self, spark: SparkSession, sf_dir: str, base_path: str):
         self.spark = spark
         self.sf_dir = sf_dir  # the snapshot whose trained quantizers encode every batch
-        self.base_path = base_path or tempfile.mkdtemp(prefix="vector_ingest_")
+        self.base_path = base_path
         self.vectors_path = os.path.join(self.base_path, "vectors")
         self.buckets_path = os.path.join(self.base_path, "buckets")
         self.ivf_path = os.path.join(self.base_path, "ivf")

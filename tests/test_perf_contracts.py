@@ -75,3 +75,38 @@ def test_driver_heap_default_fits_the_host(monkeypatch):
     heap_mb = int(_driver_memory().removesuffix("m"))
     phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
     assert 0 < heap_mb <= min(48 * 1024, phys_mb)
+
+
+def test_udf_workers_import_the_package_from_any_cwd(tmp_path):
+    """A Python UDF worker imports this package, so a session started
+    from another working directory, with the package reachable only
+    through ``sys.path``, must still run one."""
+    import pathlib
+    import subprocess
+    import sys
+
+    import monday_etl_automation_spark
+
+    root = pathlib.Path(monday_etl_automation_spark.__file__).parent.parent
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {str(root)!r})\n"
+        "from monday_etl_automation_spark.functions.scalar import unaccent_py\n"
+        "from monday_etl_automation_spark.session import get_spark\n"
+        "spark = get_spark('udf_cwd_probe')\n"
+        "df = spark.createDataFrame([('\\u00c9lan',)], 's STRING')\n"
+        "print(df.select(unaccent_py('s')).first()[0])\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().splitlines()[-1] == "Elan"

@@ -185,27 +185,114 @@ def test_cross_dir_subset_registration_drops_full_tag(spark, sf_dir):
         spark._mea_views_sf_dir = saved
 
 
-def test_artifact_cache_eviction_hook_fires():
-    """r16 (r15 ADVICE, low): superseded snapshot entries must release
-    owned resources — the hook fires on identity-eviction and on
-    clear(), never on unrelated keys, and hook errors never propagate."""
-    from monday_etl_automation_spark.sources.tables import _ArtifactCache
+def test_artifact_cache_eviction_removes_owned_dirs(tmp_path, monkeypatch):
+    """Superseded snapshot entries release the directories they own: an
+    owned dir named by an evicted value (the value itself, or a tuple
+    element) is removed on identity-eviction and on clear(), never for
+    an unrelated key; a path the engine does not own survives, and a
+    failing removal never propagates."""
+    import tempfile
 
-    seen = []
+    from monday_etl_automation_spark.sources.tables import _ArtifactCache, owned_tempdir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    d1, d2, other, bad = (owned_tempdir(f"probe{i}_") for i in range(4))
+    foreign = tmp_path / "sf_dir"
+    foreign.mkdir()
+
     c = _ArtifactCache()
-    c.on_evict = seen.append
-    c[("sfA", "events", 1, 10)] = "v1"
-    c[("sfB", "events", 1, 10)] = "other"  # different identity: no evict
-    assert seen == []
-    c[("sfA", "events", 2, 20)] = "v2"  # same identity, new snapshot
-    assert seen == ["v1"]
+    c[("sfA", "events", 1, 10)] = (d1, str(foreign))
+    c[("sfB", "events", 1, 10)] = other  # different identity: no evict
+    assert os.path.isdir(d1) and os.path.isdir(other)
+    c[("sfA", "events", 2, 20)] = d2  # same identity, new snapshot
+    assert not os.path.exists(d1)
+    assert os.path.isdir(d2) and os.path.isdir(other) and foreign.is_dir()
     c.clear()
-    assert sorted(seen) == sorted(["v1", "other", "v2"])
-    # a raising hook is swallowed
-    c.on_evict = lambda v: (_ for _ in ()).throw(RuntimeError("boom"))
-    c[("sfA", "events", 3, 30)] = "v3"
-    c[("sfA", "events", 4, 40)] = "v4"  # evicts v3; hook raises; survives
+    assert not os.path.exists(d2) and not os.path.exists(other)
+    assert foreign.is_dir()
+    # a removal that fails (the owned path is now a file) is swallowed
+    os.rmdir(bad)
+    open(bad, "w").close()
+    c[("sfA", "events", 3, 30)] = (bad,)
+    c[("sfA", "events", 4, 40)] = "v4"
     assert c[("sfA", "events", 4, 40)] == "v4"
+    assert os.path.isfile(bad)  # the removal did fail
+
+
+def test_only_owned_tempdir_makes_lasting_dirs():
+    """One owner for engine-made directories: in the package only
+    sources/tables.py:owned_tempdir and the two call-scoped streaming
+    helpers (whose ``finally`` deletes the dir) call
+    ``tempfile.mkdtemp``, no module outside sources/tables.py registers
+    an ``atexit`` hook, and no per-cache eviction hook exists."""
+    import ast
+    import pathlib
+
+    import monday_etl_automation_spark
+
+    pkg = pathlib.Path(monday_etl_automation_spark.__file__).parent
+    allowed = {
+        ("sources/tables.py", "owned_tempdir"),
+        ("streaming/pipeline.py", "_available_now"),
+        ("streaming/pipeline.py", "_drain_in_splits"),
+    }
+
+    class Sites(ast.NodeVisitor):
+        def __init__(self):
+            self.stack, self.found = ["<module>"], []
+
+        def visit_FunctionDef(self, node):
+            self.stack.append(node.name)
+            self.generic_visit(node)
+            self.stack.pop()
+
+        def visit_Call(self, node):
+            fn = node.func
+            if getattr(fn, "attr", getattr(fn, "id", None)) == "mkdtemp":
+                self.found.append(self.stack[-1])
+            self.generic_visit(node)
+
+    offenders, atexit_users, evict_users = [], [], []
+    for p in sorted(pkg.rglob("*.py")):
+        rel = p.relative_to(pkg).as_posix()
+        text = p.read_text()
+        sites = Sites()
+        sites.visit(ast.parse(text))
+        offenders += [f"{rel}:{fn}" for fn in sites.found if (rel, fn) not in allowed]
+        if "atexit" in text and rel != "sources/tables.py":
+            atexit_users.append(rel)
+        if "on_evict" in text:
+            evict_users.append(rel)
+    assert offenders == []
+    assert atexit_users == []
+    assert evict_users == []
+
+
+def test_owned_dirs_are_removed_at_exit(tmp_path):
+    """Owned dirs still alive when the interpreter exits are deleted,
+    contents and all, wherever ``TMPDIR`` placed them."""
+    import pathlib
+    import subprocess
+    import sys
+
+    import monday_etl_automation_spark
+
+    root = pathlib.Path(monday_etl_automation_spark.__file__).parent.parent
+    script = (
+        "import os, sys\n"
+        f"sys.path.insert(0, {str(root)!r})\n"
+        "from monday_etl_automation_spark.sources.tables import owned_tempdir\n"
+        "for prefix in ('dead_letter_', 'timer_src_'):\n"
+        "    open(os.path.join(owned_tempdir(prefix), 'part.parquet'), 'w').close()\n"
+        "print(len(os.listdir(os.environ['TMPDIR'])))\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    out = subprocess.run(
+        [sys.executable, "-c", script], env=env, capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "2"  # both existed before exit
+    assert os.listdir(tmp_path) == []
 
 
 def test_only_tables_module_calls_session_artifact_cache():
@@ -226,39 +313,47 @@ def test_only_tables_module_calls_session_artifact_cache():
     assert offenders == []
 
 
-def test_snapshot_memo_builds_once_per_snapshot(tmp_path):
+def test_snapshot_memo_builds_once_per_snapshot(tmp_path, monkeypatch):
     """snapshot_memo builds once per key, rebuilds (evicting the old
-    entry) when the file's (mtime, size) changes, and stores nothing
-    when the build raises. Only session attributes are touched, so a
-    bare namespace stands in for the SparkSession."""
+    entry and deleting the dir it owned) when the file's (mtime, size)
+    changes, and stores nothing when the build raises. Only session
+    attributes are touched, so a bare namespace stands in for the
+    SparkSession."""
+    import tempfile
     import types
 
     import pytest
 
-    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
+    from monday_etl_automation_spark.sources.tables import (
+        owned_tempdir,
+        snapshot_key,
+        snapshot_memo,
+    )
 
     session = types.SimpleNamespace()
     f = tmp_path / "events.parquet"
     f.write_bytes(b"a")
-    builds, evicted = [], []
-    on_evict = evicted.append  # one hook object: a tag binds exactly one
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    builds = []
 
     def build():
-        builds.append(1)
-        return f"v{len(builds)}"
+        builds.append(owned_tempdir("probe_"))
+        return builds[-1]
 
     def memo():
-        return snapshot_memo(session, "probe", snapshot_key(str(tmp_path), "events"), build, on_evict)
+        return snapshot_memo(session, "probe", snapshot_key(str(tmp_path), "events"), build)
 
-    assert memo() == "v1"
-    assert memo() == "v1"
-    assert builds == [1]
+    assert memo() == builds[0]
+    assert memo() == builds[0]
+    assert len(builds) == 1
 
     f.write_bytes(b"ab")
     os.utime(f, ns=(1, 1))
-    assert memo() == "v2"
-    assert evicted == ["v1"]
+    assert memo() == builds[1]
+    assert not os.path.exists(builds[0]), "the superseded entry's dir must go"
+    assert os.path.isdir(builds[1])
     assert list(session._mea_cache_probe) == [snapshot_key(str(tmp_path), "events")]
+    session._mea_cache_probe.clear()
 
     def boom():
         raise RuntimeError("build failed")

@@ -757,3 +757,34 @@ def test_only_the_launch_helper_starts_streaming_queries():
                 (inside if in_helper else outside).append(f"{f.relative_to(root)}:{no}")
     assert outside == [], outside
     assert len(inside) == 2, inside
+
+
+def test_sink_drivers_leave_only_owned_dirs(spark, sf_dir, tmp_path, monkeypatch):
+    """Every directory a sink driver leaves behind is an owned dir, so
+    interpreter exit deletes it; the returned frames still collect."""
+    import os
+    import tempfile
+
+    from monday_etl_automation_spark.sources import tables
+    from monday_etl_automation_spark.streaming.pipeline import (
+        run_dead_letter,
+        run_dedup_ingest,
+        run_rollup_sink,
+        run_status_upsert,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    delivered, quarantined = run_dead_letter(spark, sf_dir)
+    frames = [
+        delivered,
+        quarantined,
+        run_rollup_sink(spark, sf_dir, n_splits=2),
+        run_status_upsert(spark, sf_dir, n_splits=2),
+        run_dedup_ingest(spark, sf_dir, n_splits=2),
+    ]
+    assert all(len(f.collect()) > 0 for f in frames)
+    left = sorted(str(tmp_path / d) for d in os.listdir(tmp_path))
+    prefixes = sorted(os.path.basename(d).split("_")[0] for d in left)
+    assert prefixes == ["dead", "dedup", "rollup", "status"], left
+    assert all(d in tables._OWNED_DIRS for d in left), left
+    tables._drop_owned(left)

@@ -100,6 +100,8 @@ def _pytest_only_queries() -> dict:
 
 
 def main() -> int:
+    from dump_plans import explain_str
+
     from monday_etl_automation_spark.plans import registry
     from monday_etl_automation_spark.session import get_spark
 
@@ -113,9 +115,7 @@ def main() -> int:
             df = qs[name](spark, SF_DIR)
             props = audit_plan(final_plan(df))
             if name == "flagship_depot_selection":
-                flagship_plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-                    df._jdf.queryExecution(), "formatted"
-                )
+                flagship_plan = explain_str(df)
         except Exception as ex:  # noqa: BLE001
             rows.append((name, f"ERROR {type(ex).__name__}"))
             continue
