@@ -514,13 +514,6 @@ def near_dup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _assign_frame(spark, sf_dir)
 
 
-# standalone twin for the API-level callable (its driver coverage now
-# rides the near_dup_components entry); consumed by tests/test_dedup.py
-PYTEST_QUERIES: dict[str, tuple] = {
-    "near_dup_assign": (near_dup_assign, _assign_sql("duckdb")),
-}
-
-
 # ---------------------------------------------------------------------------
 # dedup_fingerprints — minhash signatures + simhash in ONE relation
 # (merged in round 2 for the 50-entry driver window; both fingerprint

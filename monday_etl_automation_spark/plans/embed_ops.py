@@ -152,7 +152,8 @@ _ANN_EXT_STRIDE = 32
 # pytest-SF corpus sits at the b=4 floor; the rung-1 fixtures at b=5);
 # from it on, pair flips keep hard-case recall above the 0.80 floor
 # (measured 0.575 -> ~0.9 at b=8 on the isotropic hard corpus,
-# tools/ann_hard_probe.py) at (1 + b + C(b,2)) probes/set ~ O(log^2 n).
+# tests/test_ann_recall.py:build_hard_corpus) at (1 + b + C(b,2))
+# probes/set ~ O(log^2 n).
 _ANN_DEEP_B = 8
 
 
@@ -329,8 +330,8 @@ def _ann_lsh_sql(dialect: str, modulus: int | None = None) -> str:
     depth: per-plane sign agreement for a cosine-0.45 neighbor is
     ~0.65, so the chance all b planes of a set agree decays ~0.65^b —
     at b=8, Hamming-1 measured recall@5 0.575 on the isotropic
-    hard-case corpus (tools/ann_hard_probe.py) while Hamming-2
-    measures ~0.9 (floor 0.80 pinned in tests/test_ann_recall.py).
+    hard-case corpus (tests/test_ann_recall.py:build_hard_corpus)
+    while Hamming-2 measures ~0.9 (floor 0.80 pinned in the same file).
     Candidates are deduplicated, then exact cosine re-ranks them — so
     precision is exact and the only approximation is candidate
     coverage. Measured recall@5 vs the brute-force baseline at the
@@ -1026,95 +1027,6 @@ qpick AS (
 ),
 {_ivf_rerank_sql('spark', 'qpick', 'asgf')}
 """.strip()
-    )
-
-
-# ---------------------------------------------------------------------------
-# ann_topk_auto — corpus-adaptive BACKEND router (r17, r16 verdict #1)
-# ---------------------------------------------------------------------------
-
-# Route boundary — SET BY MEASUREMENT, and the measurement REFUTED the
-# r16 working hypothesis. The hypothesis (SCALE.md r16): hyperplane
-# LSH loses FAR neighbors as the rung deepens (per-plane sign
-# agreement for a cosine-c neighbor is 1 - arccos(c)/pi ~ 0.65 at
-# c~0.45, so all-b agreement decays ~0.65^b), and IVF is the route at
-# depth. Measured r17 on the hard-case fixtures
-# (tools/ann_router_probe.py, plants at cosine 0.55, dated
-# BENCH_NOTES_r17.md):
-#
-#   rung  corpus   LSH(H<=2)  IVF(base ladder)
-#   b=8   17,000     0.895       0.900          (tie, both >= floor)
-#   b=10  65,000     0.840       0.755          (LSH wins; IVF < 0.80)
-#
-# Base-ladder IVF decays on hard data TOO — its probed cell share
-# nprobe/ncent shrinks as 2^(-b'/2) by design, and isotropic-hard
-# cells don't follow far-neighbor structure — and it decays FASTER
-# than the Hamming-<=2 LSH ladder. So the measured-best default is
-# LSH at every rung (route_b=None); the IVF path stays reachable via
-# an explicit boundary for corpora whose cell structure matches their
-# neighbor structure (clone-regime data measured 1.000 recall on both
-# backends at every rung — there the backends tie and IVF's smaller
-# probed share wins on cost past ~200k vectors by ladder arithmetic).
-_ANN_ROUTE_B = None
-
-
-def _ann_route(cnt: int, route_b: int | None = _ANN_ROUTE_B) -> tuple[str, int]:
-    """(backend, rung) for a corpus of ``cnt`` vectors — pure ladder
-    metadata (_ann_modulus), no I/O. backend is 'lsh' when route_b is
-    None (the measured default) or strictly below the boundary rung,
-    'ivf' at/above an explicit boundary."""
-    b = _ann_modulus(cnt).bit_length() - 1
-    return ("ivf" if route_b is not None and b >= route_b else "lsh"), b
-
-
-def ann_topk_auto(
-    spark: SparkSession, sf_dir: str, route_b: int | None = _ANN_ROUTE_B
-) -> DataFrame:
-    """ANN top-k with corpus-adaptive backend selection. The rung comes
-    from the SAME ladder metadata the LSH index derives its modulus
-    from (_ann_modulus over the snapshot's count), so router and index
-    can never disagree about the corpus's depth. The count is
-    snapshot-memoized (the eager-probe rule: one count(*) per
-    (session, embeddings snapshot), re-verified against fresh files on
-    regeneration via snapshot_key).
-
-    The DEFAULT boundary is None — LSH at every rung — because that is
-    what the r17 measurement supports (see the _ANN_ROUTE_B table: at
-    the b=10 hard fixture base-ladder IVF measured 0.755 < the 0.80
-    floor < LSH's 0.840, refuting the r16 route-to-IVF-at-depth
-    hypothesis). Callers whose corpora are cell-structured (neighbors
-    share k-means cells — the clone regime, where both backends
-    measured 1.000) may pass an explicit route_b to switch to IVF at
-    depth for its smaller probed share.
-
-    Output schema is the COMMON (query_id, neighbor_id, cosine, rk)
-    projection — ivf_topk's probe_cid column is dropped so callers see
-    one shape regardless of backend. Results are bit-identical to the
-    chosen backend's (pinned in tests/test_ann_recall.py at a shallow
-    and a deep synthetic rung), and both backends end in the same
-    exact-cosine re-rank, so precision is exact either way; the 0.80
-    floor holds on every path the router actually takes (LSH 0.895 /
-    0.840 at b=8/b=10 hard; IVF 0.900 at the b=8 fixture where the
-    explicit-boundary path is pinned).
-
-    Pytest-only by seat-map design (COVERAGE.md): both backends already
-    ride the driver hash (`ann_lsh_topk`, `ivf_topk`); the router adds
-    selection logic, not new query semantics, so it pins equality in
-    tests instead of spending a registry seat."""
-    bind_table(spark, sf_dir, "embeddings")
-    cnt = snapshot_memo(
-        spark,
-        "ann_corpus_count",
-        snapshot_key(sf_dir, "embeddings"),
-        lambda: spark.sql("SELECT count(*) FROM embeddings").collect()[0][0],
-    )
-    backend, _b = _ann_route(cnt, route_b)
-    if backend == "ivf":
-        return ivf_topk(spark, sf_dir).select(
-            "query_id", "neighbor_id", "cosine", "rk"
-        )
-    return ann_lsh_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id", "cosine", "rk"
     )
 
 

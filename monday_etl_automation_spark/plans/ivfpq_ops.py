@@ -476,9 +476,3 @@ final_rank AS (
 SELECT query_id, neighbor_id, cosine, rk
 FROM final_rank WHERE rk <= {_TOPK}"""
     )
-
-
-# pytest-only twins (registry capped at 50): consumed by tests/test_ivfpq.py
-PYTEST_QUERIES: dict[str, tuple] = {
-    "ivfpq_topk": (ivfpq_topk, _ivfpq_sql("duckdb")),
-}

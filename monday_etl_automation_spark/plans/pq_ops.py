@@ -410,9 +410,3 @@ final_rank AS (
 SELECT query_id, neighbor_id, cosine, rk
 FROM final_rank WHERE rk <= {_TOPK}"""
     )
-
-
-# pytest-only twins (registry capped at 50): consumed by tests/test_pq.py
-PYTEST_QUERIES: dict[str, tuple] = {
-    "pq_topk": (pq_topk, _pq_sql("duckdb")),
-}

@@ -355,12 +355,6 @@ def bm25_search(
     )
 
 
-# pytest-only twins (registry capped at 50): consumed by tests/test_search.py
-PYTEST_QUERIES: dict[str, tuple] = {
-    "bm25_topk": (bm25_topk, _bm25_sql("duckdb")),
-}
-
-
 # ---------------------------------------------------------------------------
 # hybrid retrieval — reciprocal-rank fusion of BM25 (lexical) and IVF
 # ANN (dense) result lists (Cormack et al. 2009, RRF). The fused score
@@ -463,9 +457,6 @@ WITH bmres AS ({_bm25_sql(dialect)}),
 annres AS ({_ivf_sql(dialect)}),
 {_rrf_tail_sql(dialect, 'bmres', 'annres')}
 """.strip()
-
-
-PYTEST_QUERIES["hybrid_rrf_topk"] = (hybrid_rrf_topk, _hybrid_sql("duckdb"))
 
 
 # ---------------------------------------------------------------------------

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from monday_etl_automation_spark.sources.tables import load_table, register_views
+from monday_etl_automation_spark.sources.tables import drop_owned_inputs, load_table, register_views
 from monday_etl_automation_spark.streaming import pipeline as streaming
 
 
@@ -448,9 +448,13 @@ def dead_letter_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    return tagged.groupBy("event_type", "disposition").agg(
+    # the counts are a few rows: materialize them, then the sink dirs
+    # go with this call instead of living until interpreter exit
+    counts = tagged.groupBy("event_type", "disposition").agg(
         F.count(F.lit(1)).alias("n_events")
-    )
+    ).localCheckpoint(eager=True)
+    drop_owned_inputs(delivered, quarantined, upserted)
+    return counts
 
 
 DEAD_LETTER_ORACLE = """

@@ -1,10 +1,11 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]``; the same config
-block is what we would ship on a 1000-executor cluster (AQE on, skew
-join on, Arrow on, UTC). Only the shuffle-partition count is
-environment-derived — on a real cluster it would be set to
-2-3x total executor cores, and AQE coalesces down from there.
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the cores
+this process may run on); the same config block is what we would ship
+on a 1000-executor cluster (AQE on, skew join on, Arrow on, UTC). Only
+the shuffle-partition count is environment-derived — on a real cluster
+it would be set to 2-3x total executor cores, and AQE coalesces down
+from there.
 """
 
 from __future__ import annotations
@@ -15,10 +16,12 @@ from pyspark.sql import SparkSession
 
 
 def _cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` if set to a number, else the cores this
+    process may run on."""
     try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    except ValueError:
-        return 32
+        return max(1, int(os.environ["SPARK_GRAFT_CPUS"]))
+    except (KeyError, ValueError):
+        return len(os.sched_getaffinity(0))
 
 
 def _driver_memory() -> str:

@@ -17,8 +17,9 @@ seen pays Spark's schema-inference job. `event_stream` takes the stream
 schema from the same helper.
 
 Every directory the engine makes that outlives one call comes from
-`owned_tempdir`; evicting the artifact entry that names it, or
-interpreter exit, deletes it.
+`owned_tempdir`; evicting the artifact entry that names it,
+`drop_owned_inputs` on the frames that read it, or interpreter exit
+deletes it.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ import atexit
 import os
 import shutil
 import tempfile
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -258,6 +260,14 @@ def _drop_owned(paths) -> None:
 @atexit.register
 def _drop_all_owned() -> None:
     _drop_owned(list(_OWNED_DIRS))
+
+
+def drop_owned_inputs(*frames: DataFrame) -> None:
+    """Delete the owned dirs that ``frames`` read, for a caller that has
+    already materialized all it needs from them: afterwards the frames
+    themselves can no longer run."""
+    files = [unquote(urlparse(f).path) for df in frames for f in df.inputFiles()]
+    _drop_owned([d for d in list(_OWNED_DIRS) if any(f.startswith(d + os.sep) for f in files)])
 
 
 def _owned_by(value) -> set[str]:

@@ -818,9 +818,9 @@ class DeadLetterSink:
     on disposition, so the two logical tables stay independent scans.
 
     The sink writes under ``base_path`` and never deletes it: the frames
-    ``table`` returns read it lazily. ``run_dead_letter`` (and so each
-    ``dead_letter_counts`` call, with its upsert sink) hands it an
-    ``owned_tempdir``, which therefore lives until interpreter exit."""
+    ``table`` returns read it lazily. ``run_dead_letter`` hands it an
+    ``owned_tempdir``; ``dead_letter_counts`` materializes its counts
+    and then drops that dir and its upsert sink's."""
 
     def __init__(self, base_path: str) -> None:
         self.base_path = base_path

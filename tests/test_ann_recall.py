@@ -12,6 +12,9 @@ query's centroid owning its true neighbors.
 
 from __future__ import annotations
 
+import os
+
+import numpy as np
 from pyspark.sql import functions as F
 
 from monday_etl_automation_spark.plans.embed_ops import ann_lsh_topk, cosine_topk, ivf_topk
@@ -20,6 +23,63 @@ from monday_etl_automation_spark.plans.embed_ops import ann_lsh_topk, cosine_top
 # ~4 queries x 5 neighbors) one boundary query swings the measurement
 # by 25%; measure at sf0.01 (~40 queries) where the floors are stable
 _RECALL_SF = "/root/testdata/sf0.01"
+
+
+# the deep-rung hard corpus: isotropic dim-64 background plus, for every
+# fixed query id, 5 planted neighbors at a controlled cosine. The
+# background's query cosines are ~N(0, 1/8); over tens of thousands of
+# draws their extreme tail reaches ~0.57, so plants below ~0.5 are not
+# the exact top-5 and the corpus degenerates to the pure isotropic case
+# (measured b=8, seed 20260816: Hamming-1 recall@5 0.575, Hamming-<=2
+# 0.800).
+_DIM = 64
+_COS = 0.55
+_K = 5
+_QUERY_IDS = list(range(0, 2000, 50))
+
+
+def build_hard_corpus(dst: str, n_total: int = 30000, seed: int = 20260816, plant_cos: float = _COS) -> None:
+    """Write embeddings.parquet: planted hard pairs + isotropic noise.
+    Deterministic per seed; plants live at vec_ids >= 50000 so the
+    fixed query-id set and the dense background ids never collide."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(seed)
+    rows_id: list[int] = []
+    vecs: list[np.ndarray] = []
+
+    def unit(v: np.ndarray) -> np.ndarray:
+        return v / np.linalg.norm(v)
+
+    # background: ids 0..n_bg-1 (includes the query ids themselves)
+    n_plant = len(_QUERY_IDS) * _K
+    n_bg = n_total - n_plant
+    bg = rng.standard_normal((n_bg, _DIM))
+    for i in range(n_bg):
+        rows_id.append(i)
+        vecs.append(unit(bg[i]))
+    # planted neighbors: v = cos*q + sin*r with r ⊥ q
+    by_id = {i: vecs[i] for i in _QUERY_IDS}
+    sin = float(np.sqrt(1.0 - plant_cos * plant_cos))
+    pid = 50000
+    for q in _QUERY_IDS:
+        qv = by_id[q]
+        for _ in range(_K):
+            r = rng.standard_normal(_DIM)
+            r = unit(r - np.dot(r, qv) * qv)
+            rows_id.append(pid)
+            vecs.append(unit(plant_cos * qv + sin * r))
+            pid += 1
+    emb = [[float(x) for x in v] for v in vecs]
+    table = pa.table(
+        {
+            "vec_id": pa.array(rows_id, pa.int64()),
+            "embedding": pa.array(emb, pa.list_(pa.float32())),
+            "label": pa.array([i % 10 for i in rows_id], pa.int64()),
+        }
+    )
+    pq.write_table(table, os.path.join(dst, "embeddings.parquet"))
 
 
 def _topk_sets(df, k=None):
@@ -68,65 +128,22 @@ def test_exact_is_self_consistent(spark, sf_dir):
     assert per_q[0] == per_q[1]  # uniform k
 
 
-def test_ann_router_boundary_is_ladder_derived():
-    """The router's rung comes from the SAME ladder metadata as the
-    LSH index modulus (_ann_modulus); the DEFAULT is LSH at every rung
-    (the r17 measurement: base-ladder IVF 0.755 < LSH 0.840 at the
-    b=10 hard fixture — see _ANN_ROUTE_B), and an explicit boundary
-    flips the backend exactly at its rung."""
-    from monday_etl_automation_spark.plans.embed_ops import (
-        _ANN_TARGET,
-        _ann_route,
-    )
-
-    assert _ann_route(2000) == ("lsh", 4)  # both pytest SFs: ladder floor
-    assert _ann_route(10**9)[0] == "lsh"  # measured default: LSH everywhere
-    at_boundary = _ANN_TARGET * 2**9
-    assert _ann_route(at_boundary, route_b=10) == ("lsh", 9)
-    assert _ann_route(at_boundary + 1, route_b=10) == ("ivf", 10)
-    # the override used by the deep fixture test routes at its own rung
-    assert _ann_route(17000, route_b=8) == ("ivf", 8)
-    assert _ann_route(17000) == ("lsh", 8)
-
-
-def test_ann_router_shallow_rung_equals_lsh(spark):
-    """At the shallow rung the router must hand back EXACTLY the LSH
-    backend's results (common projection) — recall transfer from
-    test_ann_lsh_recall_floor is only valid if the rows are identical."""
-    from monday_etl_automation_spark.plans.embed_ops import ann_topk_auto
-
-    want = sorted(
-        (r.query_id, r.neighbor_id, r.cosine, r.rk)
-        for r in ann_lsh_topk(spark, _RECALL_SF).collect()
-    )
-    got = sorted(map(tuple, ann_topk_auto(spark, _RECALL_SF).collect()))
-    assert got == want
-
-
 def test_ann_deep_rung_hard_case_recall_floor(spark, tmp_path_factory):
     """r16 (r15 verdict item 3): recall evidence at a DEEP rung on a
     HARD corpus — previously the 0.80 floor was pinned only at the b=4
     ladder floor, and sf1's deep-rung neighbors are near-clones
-    (easy). The corpus (tools/ann_hard_probe.build_hard_corpus,
-    deterministic seed): 17,000 dim-64 vectors force rung b=8; every
-    fixed query gets 5 planted neighbors at cosine 0.55 (per-plane
-    sign agreement ~0.69 — far from the ~0.95 near-clone regime;
-    plants below ~0.5 are dominated by the isotropic background's
-    extreme tail at this (n, dim), see the tool docstring). The
+    (easy). The corpus (build_hard_corpus, deterministic seed): 17,000
+    dim-64 vectors force rung b=8; every fixed query gets 5 planted
+    neighbors at cosine 0.55 (per-plane sign agreement ~0.69 — far
+    from the ~0.95 near-clone regime; plants below ~0.5 are dominated
+    by the isotropic background's extreme tail at this (n, dim)). The
     planted set IS the exact top-5 (asserted), so this pins the
     Hamming-<=2 deep-rung multiprobe escalation end to end: with
     Hamming-1 this corpus measures 0.575 via the isotropic variant and
     ~0.80 here — the escalation is what clears the floor (measured
-    0.895 at this seed; deterministic, not statistical)."""
-    import os
+    0.895 at this seed; deterministic, not statistical). ivf_topk on
+    the same fixture holds the same floor (measured 0.900)."""
     import shutil
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"),
-    )
-    from ann_hard_probe import build_hard_corpus
 
     from monday_etl_automation_spark.plans import embed_ops as eo
     from monday_etl_automation_spark.sources.tables import clear_artifact_caches
@@ -145,22 +162,8 @@ def test_ann_deep_rung_hard_case_recall_floor(spark, tmp_path_factory):
         approx = _topk_sets(ann_lsh_topk(spark, d))
         r = _recall(approx, exact)
         assert r >= 0.80, f"deep-rung hard-case recall {r:.3f} below floor"
-        # r17 router, IVF branch on the SAME deep fixture: with the
-        # boundary overridden to this corpus's rung the router must
-        # return EXACTLY ivf_topk's rows (common projection) and hold
-        # the 0.80 floor (IVF measured 0.900 here, LSH 0.895 — the
-        # b=8 tie in the _ANN_ROUTE_B table; it is b=10 where
-        # base-ladder IVF drops to 0.755 and the default stays LSH).
-        from monday_etl_automation_spark.plans.embed_ops import ann_topk_auto
-
-        want = sorted(
-            (x.query_id, x.neighbor_id, x.cosine, x.rk)
-            for x in ivf_topk(spark, d).collect()
-        )
-        got = sorted(map(tuple, ann_topk_auto(spark, d, route_b=8).collect()))
-        assert got == want
         r_ivf = _recall(_topk_sets(ivf_topk(spark, d)), exact)
-        assert r_ivf >= 0.80, f"router IVF-branch recall {r_ivf:.3f} below floor"
+        assert r_ivf >= 0.80, f"deep-rung IVF recall {r_ivf:.3f} below floor"
     finally:
         # this fixture dir registered its own views/artifacts — restore
         clear_artifact_caches(spark)

@@ -170,8 +170,7 @@ def test_near_dup_assign_standalone_twin(spark, sf_dir):
     near_dup_components entry (round 9); the standalone callable keeps
     its own DuckDB twin here so an API-level regression can't hide
     behind the fold."""
-    from monday_etl_automation_spark.plans.dedup_ops import PYTEST_QUERIES
+    from monday_etl_automation_spark.plans.dedup_ops import _assign_sql, near_dup_assign
     from tests.oracle_compare import assert_matches_oracle
 
-    fn, oracle = PYTEST_QUERIES["near_dup_assign"]
-    assert_matches_oracle(fn(spark, sf_dir), oracle, sf_dir)
+    assert_matches_oracle(near_dup_assign(spark, sf_dir), _assign_sql("duckdb"), sf_dir)

@@ -77,6 +77,31 @@ def test_driver_heap_default_fits_the_host(monkeypatch):
     assert 0 < heap_mb <= min(48 * 1024, phys_mb)
 
 
+def test_core_count_defaults_to_usable_cores():
+    """With no ``SPARK_GRAFT_CPUS`` a session runs on the cores this
+    process may use, whichever tool or test starts it; the variable
+    still wins when set."""
+    import subprocess
+    import sys
+
+    import monday_etl_automation_spark
+
+    root = os.path.dirname(os.path.dirname(monday_etl_automation_spark.__file__))
+    script = "from monday_etl_automation_spark.session import _cpus; print(_cpus())"
+
+    def cpus(**extra) -> int:
+        env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+        env.update(extra)
+        out = subprocess.run(
+            [sys.executable, "-c", script], cwd=root, env=env, capture_output=True, text=True, timeout=60
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        return int(out.stdout)
+
+    assert cpus() == len(os.sched_getaffinity(0))
+    assert cpus(SPARK_GRAFT_CPUS="3") == 3
+
+
 def test_udf_workers_import_the_package_from_any_cwd(tmp_path):
     """A Python UDF worker imports this package, so a session started
     from another working directory, with the package reachable only

@@ -18,9 +18,15 @@ count falls and this file fails.
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 
 from monday_etl_automation_spark.plans import registry
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+from plan_audit import audit_plan, final_plan  # noqa: E402
 
 # query -> (max hash exchanges, min broadcasts, pushdown required)
 _PINS: dict[str, tuple[int, int, bool]] = {
@@ -105,20 +111,8 @@ _PINS: dict[str, tuple[int, int, bool]] = {
 
 @pytest.mark.parametrize("name", sorted(_PINS))
 def test_plan_pin(spark, sf_dir, name):
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
-    )
-    from plan_audit import audit_plan
-
     max_shuffle, min_bcast, need_pushdown = _PINS[name]
-    df = registry.queries()[name](spark, sf_dir)
-    # executing THIS frame finalizes the AQE plan (same rule as
-    # tools/plan_audit.py)
-    df.collect()
-    props = audit_plan(df._jdf.queryExecution().executedPlan().toString())  # noqa: SLF001
+    props = audit_plan(final_plan(registry.queries()[name](spark, sf_dir)))
     assert props["n_exchange"] <= max_shuffle, (
         f"{name}: {props['n_exchange']} hash exchanges (pinned <= {max_shuffle})"
         " — a new shuffle entered the plan"
@@ -131,17 +125,6 @@ def test_plan_pin(spark, sf_dir, name):
         assert props["pushed"], f"{name}: parquet scan lost its PushedFilters"
 
 
-def _final_plan(spark, sf_dir, name):
-    df = registry.queries()[name](spark, sf_dir)
-    df.collect()
-    return (
-        df._jdf.queryExecution()  # noqa: SLF001
-        .executedPlan()
-        .toString()
-        .split("== Initial Plan ==")[0]
-    )
-
-
 def test_cosine_topk_fixed_query_plan(spark, sf_dir):
     """Post-r13 shape of the exact search (the quadratic fix): the
     query side is the FIXED 40-id literal set, pushed to the parquet
@@ -150,7 +133,7 @@ def test_cosine_topk_fixed_query_plan(spark, sf_dir):
     nested-loop of a 40-row side; a CartesianProduct (both sides
     unbounded) or a shuffle join here means the fixed side stopped
     being broadcast and the plan no longer caps work at k·n."""
-    plan = _final_plan(spark, sf_dir, "cosine_topk")
+    plan = final_plan(registry.queries()["cosine_topk"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "In(vec_id" in plan, "fixed query-id IN list no longer pushed to the scan"
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
@@ -224,7 +207,7 @@ def test_fuzzy_name_match_blocks_on_word_band(spark, sf_dir):
     Runs at sf0.01, not the fixture SF: sf0.001 has zero fuzzy pairs,
     and AQE's empty-relation propagation replaces the whole join
     subtree with EmptyRelation — no Join node survives to inspect."""
-    plan = _final_plan(spark, "/root/testdata/sf0.01", "fuzzy_name_match")
+    plan = final_plan(registry.queries()["fuzzy_name_match"](spark, "/root/testdata/sf0.01"))
     join_lines = [
         ln
         for ln in plan.splitlines()

@@ -40,6 +40,34 @@ def test_registry_fits_driver_window():
     assert len(_QUERIES) <= 50, f"registry has {len(_QUERIES)} queries; driver checks only 50"
 
 
+def test_no_side_registries_or_probe_imports():
+    """Registered queries are the only query table: no package module
+    keeps a ``PYTEST_QUERIES`` dict beside the registry (tests import
+    builders and oracles directly), and no test reaches into ``tools/``
+    for an ``ann_*`` probe module."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    side = [
+        str(p.relative_to(root))
+        for p in sorted((root / "monday_etl_automation_spark").rglob("*.py"))
+        if any(
+            isinstance(n, ast.Name) and n.id == "PYTEST_QUERIES" and isinstance(n.ctx, ast.Store)
+            for n in ast.walk(ast.parse(p.read_text()))
+        )
+    ]
+    probes = [
+        f"{p.name}:{n.lineno}"
+        for p in sorted((root / "tests").glob("*.py"))
+        for n in ast.walk(ast.parse(p.read_text()))
+        if (isinstance(n, ast.ImportFrom) and (n.module or "").startswith("ann_"))
+        or (isinstance(n, ast.Import) and any(a.name.startswith("ann_") for a in n.names))
+    ]
+    assert side == [], f"side query registries: {side}"
+    assert probes == [], f"tests importing tools/ ann_* probes: {probes}"
+
+
 def test_quantile_matches_independent_quantile_cont():
     """QUANTILE_ORACLE is the same SQL text as the Spark side (shared
     rank construct), so the driver compare alone would let a bug in

@@ -156,10 +156,9 @@ SELECT qid, doc_id, score, rk FROM ranked WHERE rk <= {_TOPK} ORDER BY qid, rk
 
 
 def test_hybrid_rrf_matches_oracle(spark, sf_dir):
-    from monday_etl_automation_spark.plans.search_ops import PYTEST_QUERIES
+    from monday_etl_automation_spark.plans.search_ops import _hybrid_sql, hybrid_rrf_topk
 
-    fn, oracle = PYTEST_QUERIES["hybrid_rrf_topk"]
-    assert_matches_oracle(fn(spark, sf_dir), oracle, sf_dir)
+    assert_matches_oracle(hybrid_rrf_topk(spark, sf_dir), _hybrid_sql("duckdb"), sf_dir)
 
 
 def test_hybrid_rrf_fuses_both_lists(spark, sf_dir):

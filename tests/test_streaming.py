@@ -788,3 +788,19 @@ def test_sink_drivers_leave_only_owned_dirs(spark, sf_dir, tmp_path, monkeypatch
     assert prefixes == ["dead", "dedup", "rollup", "status"], left
     assert all(d in tables._OWNED_DIRS for d in left), left
     tables._drop_owned(left)
+
+
+def test_dead_letter_counts_drops_its_sink_dirs(spark, sf_dir, tmp_path, monkeypatch):
+    """A dead_letter_counts call keeps no sink table once it returns:
+    repeated calls in one session give the same counts and leave no
+    ``dead_letter_*`` or ``status_upsert_*`` dir behind."""
+    import os
+    import tempfile
+
+    from monday_etl_automation_spark.plans.windows_ops import dead_letter_counts
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    runs = [sorted(map(tuple, dead_letter_counts(spark, sf_dir).collect())) for _ in range(3)]
+    assert runs[0] and runs[1] == runs[0] and runs[2] == runs[0]
+    left = [d for d in os.listdir(tmp_path) if d.startswith(("dead_letter_", "status_upsert_"))]
+    assert left == [], left

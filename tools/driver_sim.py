@@ -23,7 +23,6 @@ from oracle_compare import assert_matches_oracle, duckdb_con  # noqa: E402
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     from monday_etl_automation_spark.session import get_spark
 
     spark = get_spark("driver_sim")

@@ -78,7 +78,6 @@ def main() -> int:
         dirs = [(d, os.path.basename(d.rstrip("/"))) for d in opts["--dirs"].split(":")]
     else:
         dirs = [("/root/testdata/sf0.1", "sf0.1"), (sf1_dir, "sf1")]
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
     from monday_etl_automation_spark.plans import registry
     from monday_etl_automation_spark.session import get_spark

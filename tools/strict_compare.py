@@ -110,7 +110,6 @@ def _pandas_str(pdf):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     import __spark_entry__ as e
     from monday_etl_automation_spark.session import get_spark
 
