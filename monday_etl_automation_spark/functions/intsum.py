@@ -50,9 +50,9 @@ from pyspark.sql import functions as F
 SPLIT = 1_000_000
 
 
-def unscaled(col: Column, scale: int = 2) -> Column:
-    """Exact unscaled int64 of a fixture money double (see module doc)."""
-    return F.round(col * (10**scale)).cast("bigint")
+def unscaled(col: Column) -> Column:
+    """Exact unscaled int64 (cents) of a fixture money double (see module doc)."""
+    return F.round(col * 100).cast("bigint")
 
 
 def itrunc(c: Column, d: int) -> Column:
@@ -65,18 +65,17 @@ def itrunc(c: Column, d: int) -> Column:
 class SplitSum:
     """An exact SUM of a long expression as two int64 accumulators."""
 
-    def __init__(self, expr: Column, name: str, d: int = SPLIT) -> None:
+    def __init__(self, expr: Column, name: str) -> None:
         self._hi = f"_{name}_hi"
         self._lo = f"_{name}_lo"
-        self._d = d
         self.aggs = [
-            F.sum(itrunc(expr, d)).alias(self._hi),
-            F.sum(expr % F.lit(d)).alias(self._lo),
+            F.sum(itrunc(expr, SPLIT)).alias(self._hi),
+            F.sum(expr % F.lit(SPLIT)).alias(self._lo),
         ]
 
     def unscaled_total(self) -> Column:
         """hi*D + lo as decimal(38,0) — the exact unscaled sum."""
-        return F.col(self._hi).cast("decimal(38,0)") * F.lit(self._d).cast(
+        return F.col(self._hi).cast("decimal(38,0)") * F.lit(SPLIT).cast(
             "decimal(7,0)"
         ) + F.col(self._lo).cast("decimal(38,0)")
 

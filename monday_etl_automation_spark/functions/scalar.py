@@ -95,16 +95,20 @@ def trim_ws(col: Column) -> Column:
     return F.regexp_replace(col, r"^\s+|\s+$", "")
 
 
-def make_signed_filename(name: Column, suffix: str = " SIGNÉ") -> Column:
+#: appended before ``.pdf`` to a signed document's name
+_SIGNED_SUFFIX = " SIGNÉ"
+
+
+def make_signed_filename(name: Column) -> Column:
     """Exact reference semantics (fixed_signature_utils.py:116-124):
     trim; if the suffix is already present (case-insensitive) return the
     name, appending '.pdf' only when missing; otherwise replace a
     trailing '.pdf' (any case) with '<suffix>.pdf', or append
     '<suffix>.pdf' to extensionless names."""
-    return signed_filename_from_trimmed(trim_ws(name), suffix)
+    return signed_filename_from_trimmed(trim_ws(name))
 
 
-def signed_filename_from_trimmed(name: Column, suffix: str = " SIGNÉ") -> Column:
+def signed_filename_from_trimmed(name: Column) -> Column:
     """``make_signed_filename`` minus the trim — for callers that have
     already materialized the trimmed name in a projection. Catalyst
     inlines a non-trivial argument into EVERY branch of the CASE below
@@ -113,14 +117,14 @@ def signed_filename_from_trimmed(name: Column, suffix: str = " SIGNÉ") -> Colum
     regexp evaluations per row; staging it through a projection
     boundary costs one."""
     lower = F.lower(name)
-    has_sfx = lower.contains(suffix.lower())
+    has_sfx = lower.contains(_SIGNED_SUFFIX.lower())
     is_pdf = lower.endswith(".pdf")
     base = F.substring(name, 1, F.length(name) - F.lit(4))
     return (
         F.when(has_sfx & is_pdf, name)
         .when(has_sfx, F.concat(name, F.lit(".pdf")))
-        .when(is_pdf, F.concat(base, F.lit(suffix + ".pdf")))
-        .otherwise(F.concat(name, F.lit(suffix + ".pdf")))
+        .when(is_pdf, F.concat(base, F.lit(_SIGNED_SUFFIX + ".pdf")))
+        .otherwise(F.concat(name, F.lit(_SIGNED_SUFFIX + ".pdf")))
     )
 
 
@@ -168,15 +172,15 @@ def _map_literal(d: dict[str, str]) -> Column:
     return F.create_map(*pairs)
 
 
-def mime_from_name(name: Column, fallback: str = "application/octet-stream") -> Column:
+def mime_from_name(name: Column) -> Column:
     """Name -> MIME via the extension map, fallback passthrough (F6)."""
-    return mime_from_ext(file_ext(name), fallback)
+    return mime_from_ext(file_ext(name))
 
 
-def mime_from_ext(ext: Column, fallback: str = "application/octet-stream") -> Column:
+def mime_from_ext(ext: Column) -> Column:
     """MIME from a precomputed extension (one regexp per row when the
     caller stages ``file_ext`` in a projection)."""
-    return F.coalesce(_map_literal(_MIME_BY_EXT)[ext], F.lit(fallback))
+    return F.coalesce(_map_literal(_MIME_BY_EXT)[ext], F.lit("application/octet-stream"))
 
 
 def ext_from_name_or_ctype(name: Column, content_type: Column) -> Column:

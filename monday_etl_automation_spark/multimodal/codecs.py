@@ -176,16 +176,13 @@ def jpeg_encode(img: bytes, quality: int) -> bytes:
     return b"JPG:" + seed[:16] + _stream(seed, out_len)
 
 
-def scan_effects(img: bytes, *, key: bytes, preset: str = "balanced", deterministic: bool = True) -> bytes:
+def scan_effects(img: bytes, *, key: bytes, preset: str = "balanced") -> bytes:
     """Seeded scan-look perturbation (B2/B3 stand-in).
 
     The reference's B3 uses module-level random (fixed_signature_
     utils.py:453-558) — unsafe under Spark task retry. Here the PRNG
-    seed is (key, preset), so retries reproduce bytes exactly; the
-    ``deterministic`` flag only asserts the caller passed a real key.
+    seed is (key, preset), so retries reproduce bytes exactly.
     """
-    if not deterministic and not key:
-        raise ValueError("non-deterministic scan effects require a per-row key")
     seed = _digest(img, key, preset.encode())
     noise = _stream(seed, len(img) - 20 if len(img) > 20 else len(img))
     head, body = img[:20], img[20:]

@@ -51,7 +51,7 @@ def stream(seed: bytes, n: int) -> bytes:
     return bytes(out[:n])
 
 
-def paginate(text: str, page_chars: int = PAGE_CHARS) -> list[str]:
+def paginate(text: str) -> list[str]:
     """Split text into page-sized CHARACTER chunks; an empty document
     still has one (empty) page.
 
@@ -64,7 +64,7 @@ def paginate(text: str, page_chars: int = PAGE_CHARS) -> list[str]:
     mixes backends within one pipeline run (resolve_name pins one
     backend per job)."""
     data = text or ""
-    return [data[i : i + page_chars] for i in range(0, len(data), page_chars)] or [""]
+    return [data[i : i + PAGE_CHARS] for i in range(0, len(data), PAGE_CHARS)] or [""]
 
 
 def scan_seed(img_head: bytes, key: bytes, preset: str) -> int:

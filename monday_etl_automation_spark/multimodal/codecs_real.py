@@ -89,7 +89,7 @@ def pdf_page_count(pdf: bytes) -> int:
 
 def pdf_pages(pdf: bytes) -> list[bytes]:
     """Split into one single-page PDF per page (the per-page fan-out
-    unit explode_pages distributes)."""
+    unit)."""
     out: list[bytes] = []
     with fitz.open(stream=pdf, filetype="pdf") as doc:
         for i in range(doc.page_count):
@@ -130,12 +130,10 @@ def jpeg_encode(img: bytes, quality: int) -> bytes:
     return buf.getvalue()
 
 
-def scan_effects(img: bytes, *, key: bytes, preset: str = "balanced", deterministic: bool = True) -> bytes:
+def scan_effects(img: bytes, *, key: bytes, preset: str = "balanced") -> bytes:
     """Seeded scan look (B2/B3): slight rotation + luminance noise +
     mild contrast wobble. All randomness comes from sha256(key, preset)
     — task retries reproduce bytes exactly."""
-    if not deterministic and not key:
-        raise ValueError("non-deterministic scan effects require a per-row key")
     rng = _np.random.default_rng(_common.scan_seed(img[:64], key, preset))
     im = Image.open(io.BytesIO(img)).convert("RGB")
     angle = float(rng.uniform(-0.7, 0.7))

@@ -61,22 +61,16 @@ def documents_to_binary(documents: DataFrame, backend: str = "auto") -> DataFram
 B1_SCHEMA = "doc_id BIGINT, n_pages BIGINT, in_bytes BIGINT, out_bytes BIGINT, out_sha STRING"
 
 
-def compress_pdf(
-    docs_bin: DataFrame,
-    preset: str = "balanced",
-    backend: str = "auto",
-    with_sha: bool = True,
-) -> DataFrame:
+def compress_pdf(docs_bin: DataFrame, backend: str = "auto", with_sha: bool = True) -> DataFrame:
     """B1 (fixed_signature_utils.py:38-110): page-at-a-time rasterize at
     the preset DPI, 'sharpen', JPEG re-encode, rebuild the container.
 
-    The preset is resolved PER ROW: a constant ``preset`` argument
-    stamps one preset on every document, while a ``preset`` column
-    already on ``docs_bin`` wins — so heterogeneous presets run in ONE
-    scan/pass instead of one branch (and one full input scan) per
-    preset."""
+    The preset is resolved PER ROW: a ``preset`` column on ``docs_bin``
+    runs heterogeneous presets in ONE scan/pass instead of one branch
+    (and one full input scan) per preset; without one, every document
+    is stamped ``balanced``."""
     if "preset" not in docs_bin.columns:
-        docs_bin = docs_bin.withColumn("preset", F.lit(preset))
+        docs_bin = docs_bin.withColumn("preset", F.lit("balanced"))
     backend_name = codecs.resolve_name(backend)
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -100,60 +94,11 @@ def compress_pdf(
 
 
 # ---------------------------------------------------------------------------
-# B7 — scan pipeline with per-page fan-out: explode pages -> effects ->
+# B7 — scan pipeline with per-page fan-out: pages -> effects ->
 #       A4 normalize -> reassemble (the distributed page-parallel shape)
 # ---------------------------------------------------------------------------
 
-PAGE_SCHEMA = "doc_id BIGINT, page_idx INT, page BINARY, preset STRING"
 B7_SCHEMA = "doc_id BIGINT, page_idx INT, out_page BINARY"
-
-
-def explode_pages(docs_bin: DataFrame, dpi: int | None = 150, backend: str = "auto") -> DataFrame:
-    """Fan a document out to one row per rastered page — at scale the
-    page rows redistribute across the cluster, so one huge document
-    cannot hot-spot a single task.
-
-    Rasterizes at the row's ``preset`` DPI when the input carries a
-    ``preset`` column (one pass for mixed presets); otherwise at the
-    constant ``dpi``."""
-    per_row = "preset" in docs_bin.columns
-    if not per_row:
-        docs_bin = docs_bin.withColumn("preset", F.lit("balanced"))
-    backend_name = codecs.resolve_name(backend)
-
-    def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codec = codecs.resolve(backend_name)
-        for pdf in batches:
-            out: list[tuple] = []
-            for doc_id, content, pr in zip(pdf["doc_id"], pdf["content"], pdf["preset"]):
-                page_dpi = codec.quality_preset(pr)[0] if per_row else dpi
-                for i, p in enumerate(codec.pdf_pages(bytes(content))):
-                    out.append((doc_id, i, codec.rasterize_page(p, page_dpi), pr))
-            yield pd.DataFrame(out, columns=["doc_id", "page_idx", "page", "preset"])
-
-    return docs_bin.mapInPandas(split, PAGE_SCHEMA)
-
-
-def scan_pages(pages: DataFrame, preset: str | None = "balanced", backend: str = "auto") -> DataFrame:
-    """B2/B3: seeded scan effects + A4 normalization per page. The seed
-    is (doc_id, page_idx, preset) — retry-reproducible (§7.5 item 4).
-    A ``preset`` column on ``pages`` (from explode_pages) overrides the
-    constant argument per row."""
-    per_row = "preset" in pages.columns
-    backend_name = codecs.resolve_name(backend)
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codec = codecs.resolve(backend_name)
-        for pdf in batches:
-            out = []
-            prs = pdf["preset"] if per_row else [preset] * len(pdf)
-            for doc_id, idx, page, pr in zip(pdf["doc_id"], pdf["page_idx"], pdf["page"], prs):
-                key = f"{doc_id}:{idx}".encode()
-                eff = codec.scan_effects(bytes(page), key=key, preset=pr)
-                out.append((doc_id, idx, codec.a4_normalize(eff)))
-            yield pd.DataFrame(out, columns=["doc_id", "page_idx", "out_page"])
-
-    return pages.mapInPandas(work, B7_SCHEMA)
 
 
 def reassemble(scanned: DataFrame) -> DataFrame:
@@ -174,15 +119,14 @@ def reassemble(scanned: DataFrame) -> DataFrame:
 
 
 def explode_scan_pages(docs_bin: DataFrame, backend: str = "auto") -> DataFrame:
-    """Fused explode_pages + scan_pages (r18, guide §4.1): the two
-    stages are back-to-back mapInPandas with NO exchange between them,
-    so the split form paid a second JVM->Python->JVM round trip of
-    every page raster for zero redistribution. One worker rasterizes
-    at the row's preset DPI and applies the seeded scan effects + A4
-    normalization page-at-a-time — byte-identical to the split
-    operators (same seeds, same calls), one Arrow crossing instead of
-    two. The distributed page fan-out still happens where it always
-    did: at the reassembly exchange."""
+    """B2/B3 page fan-out in one mapInPandas (r18, guide §4.1): one
+    worker rasterizes each page at the row's preset DPI and applies the
+    seeded scan effects + A4 normalization page-at-a-time, so every
+    page raster makes one Arrow crossing. The seed is (doc_id,
+    page_idx, preset) — retry-reproducible (§7.5 item 4). A ``preset``
+    column on ``docs_bin`` wins; without one, every document is
+    stamped ``balanced``. The distributed page fan-out happens at the
+    reassembly exchange."""
     if "preset" not in docs_bin.columns:
         docs_bin = docs_bin.withColumn("preset", F.lit("balanced"))
     backend_name = codecs.resolve_name(backend)
@@ -203,23 +147,13 @@ def explode_scan_pages(docs_bin: DataFrame, backend: str = "auto") -> DataFrame:
     return docs_bin.mapInPandas(split_scan, B7_SCHEMA)
 
 
-def scanned_pdf(
-    docs_bin: DataFrame,
-    preset: str = "balanced",
-    dpi: int = 150,
-    backend: str = "auto",
-    with_sha: bool = True,
-) -> DataFrame:
-    """Full B7: explode+scan (fused) -> reassemble -> rebuild container.
+def scanned_pdf(docs_bin: DataFrame, backend: str = "auto", with_sha: bool = True) -> DataFrame:
+    """Full B7: page scan -> reassemble -> rebuild container.
 
-    Per-row ``preset`` column (if present) wins over the constant
-    arguments; otherwise every document is stamped with ``preset`` and
-    rasterized at that preset's DPI (the ``dpi`` argument is kept for
-    direct explode callers). ``with_sha=False`` skips the output
-    sha256 for callers that drop the column (guide §1.2: don't compute
-    what is thrown away) — every kept column is unchanged."""
-    if "preset" not in docs_bin.columns:
-        docs_bin = docs_bin.withColumn("preset", F.lit(preset))
+    Presets resolve per row as in ``explode_scan_pages``.
+    ``with_sha=False`` skips the output sha256 for callers that drop
+    the column (guide §1.2: don't compute what is thrown away) — every
+    kept column is unchanged."""
     backend_name = codecs.resolve_name(backend)
     parts = reassemble(explode_scan_pages(docs_bin, backend=backend_name))
 

@@ -15,28 +15,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def next_start_id(listing: DataFrame, name_col: str = "name", pattern: str = r"^ACT_(\d+)_") -> DataFrame:
+def next_start_id(listing: DataFrame) -> DataFrame:
     """A1: coalesce(max(captured int), 0) + 1 as ``next_id``.
 
     Case-insensitive match (Leyton_depot.py:521 uses lower()).
     """
-    captured = F.regexp_extract(F.upper(F.col(name_col)), pattern.replace("ACT_", "ACT_"), 1)
+    captured = F.regexp_extract(F.upper(F.col("name")), r"^ACT_(\d+)_", 1)
     as_int = F.when(captured != "", captured.cast("long"))
     return listing.agg((F.coalesce(F.max(as_int), F.lit(0)) + 1).alias("next_id"))
 
 
-def success_counts(uploads: DataFrame, group_cols: list[str], success_col: str = "file_id") -> DataFrame:
+def success_counts(uploads: DataFrame, group_cols: list[str]) -> DataFrame:
     """A2: (n_success, n_total) per group; success = non-null file_id."""
     return uploads.groupBy(*group_cols).agg(
-        F.sum(F.when(F.col(success_col).isNotNull(), 1).otherwise(0)).alias("n_success"),
+        F.sum(F.when(F.col("file_id").isNotNull(), 1).otherwise(0)).alias("n_success"),
         F.count(F.lit(1)).alias("n_total"),
     )
 
 
-def processed_counters(processed: DataFrame, col_col: str = "column_id") -> DataFrame:
+def processed_counters(processed: DataFrame) -> DataFrame:
     """A3: per-column counts plus a grand-total row (rollup)."""
     return (
-        processed.rollup(col_col)
+        processed.rollup("column_id")
         .agg(F.count(F.lit(1)).alias("n_processed"))
-        .select(F.coalesce(F.col(col_col), F.lit("__total__")).alias(col_col), "n_processed")
+        .select(F.coalesce(F.col("column_id"), F.lit("__total__")).alias("column_id"), "n_processed")
     )

@@ -24,13 +24,7 @@ from pyspark.sql import functions as F
 from monday_etl_automation_spark.sources.tables import normalize_ts
 
 
-def enrich_with_assets(
-    selected: DataFrame,
-    assets: DataFrame,
-    key: str = "asset_id",
-    url_col: str = "public_url",
-    hint: bool = True,
-) -> DataFrame:
+def enrich_with_assets(selected: DataFrame, assets: DataFrame, hint: bool = True) -> DataFrame:
     """Left-join the asset registry's public_url onto ``selected``.
 
     ``hint=True`` pins the broadcast (deterministic plan for the pin
@@ -40,8 +34,8 @@ def enrich_with_assets(
     converts to broadcast at runtime) and degrades to a shuffle join
     above it instead of force-collecting a fact-scale relation onto
     the driver."""
-    dim = assets.select(key, url_col)
-    return selected.join(F.broadcast(dim) if hint else dim, key, "left")
+    dim = assets.select("asset_id", "public_url")
+    return selected.join(F.broadcast(dim) if hint else dim, "asset_id", "left")
 
 
 def asof_join_backward(
@@ -111,10 +105,10 @@ def bucketed_range_join(
     left_ts: str,
     right_ts: str,
     window_seconds: int,
-    right_prefix: str = "r_",
 ) -> DataFrame:
     """Pairs (l, r) with same ``key`` and ``r.ts`` in
-    ``[l.ts - window_seconds, l.ts)`` — a sliding-lookback range join.
+    ``[l.ts - window_seconds, l.ts)`` — a sliding-lookback range join;
+    right columns come out prefixed ``r_``.
 
     A naive theta-join on the range predicate degenerates to
     per-key nested loops; the scale shape is candidate pruning by
@@ -136,7 +130,7 @@ def bucketed_range_join(
         F.col(key).alias("_rk"),
         F.col(right_ts).alias("_rt"),
         (F.unix_micros(F.col(right_ts)) / F.lit(w_us)).cast("long").alias("_rbucket"),
-        *[F.col(c).alias(f"{right_prefix}{c}") for c in right.columns],
+        *[F.col(c).alias(f"r_{c}") for c in right.columns],
     )
     l = left.withColumn(
         "_lbucket",

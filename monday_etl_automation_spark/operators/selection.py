@@ -36,7 +36,7 @@ CELL_SCHEMA = "STRUCT<files: ARRAY<STRUCT<assetId BIGINT, name STRING, createdAt
 EPOCH0 = "TIMESTAMP '1970-01-01 00:00:00'"
 
 
-def parse_file_cells(cells: DataFrame, cell_col: str = "cell") -> DataFrame:
+def parse_file_cells(cells: DataFrame) -> DataFrame:
     """P1+P2: JSON file-column cell -> one row per file.
 
     Malformed / NULL cells silently yield zero rows (the reference
@@ -44,7 +44,7 @@ def parse_file_cells(cells: DataFrame, cell_col: str = "cell") -> DataFrame:
     permissive ``from_json`` gives NULL, coalesced to an empty array
     before the explode.
     """
-    parsed = F.coalesce(F.from_json(F.col(cell_col), CELL_SCHEMA)["files"], F.array())
+    parsed = F.coalesce(F.from_json(F.col("cell"), CELL_SCHEMA)["files"], F.array())
     return (
         cells.withColumn("_file", F.explode(parsed))
         .select(

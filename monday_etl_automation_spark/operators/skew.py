@@ -160,9 +160,7 @@ def salted_aggregate(
     return partial.groupBy(*keys).agg(*merge_exprs)
 
 
-def salted_distinct_count(
-    df: DataFrame, keys: list[str], distinct_col: str, n_salts: int = 8
-) -> DataFrame:
+def salted_distinct_count(df: DataFrame, keys: list[str], distinct_col: str) -> DataFrame:
     """Exact COUNT(DISTINCT x) per hot key without routing every
     occurrence of the key to one reducer: phase 1 dedups on
     (keys, x) — the distinct shuffle spreads by (keys, x), which is

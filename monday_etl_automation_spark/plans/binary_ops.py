@@ -71,8 +71,8 @@ def _docs_bin_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WIDE_COLS = ("stage", "preset", "doc_id", "n_pages", "in_bytes", "out_bytes", "file_name")
 
 
-def _widen(df: DataFrame, stage: str, preset: str) -> DataFrame:
-    out = df.withColumn("stage", F.lit(stage)).withColumn("preset", F.lit(preset))
+def _widen(df: DataFrame, stage: str, preset: F.Column) -> DataFrame:
+    out = df.withColumn("stage", F.lit(stage)).withColumn("preset", preset)
     for c, t in (("in_bytes", "bigint"), ("file_name", "string")):
         if c not in df.columns:
             out = out.withColumn(c, F.lit(None).cast(t))
@@ -94,23 +94,24 @@ def binary_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_bin = _docs_bin(spark, sf_dir).withColumn("preset", _preset_of_doc())
     docs_bin_spread = _docs_bin_spread(spark, sf_dir).withColumn("preset", _preset_of_doc())
 
-    def tag(df: DataFrame, stage: str) -> DataFrame:
-        out = df.withColumn("stage", F.lit(stage)).withColumn("preset", _preset_of_doc())
-        for c, t in (("in_bytes", "bigint"), ("file_name", "string")):
-            if c not in df.columns:
-                out = out.withColumn(c, F.lit(None).cast(t))
-        return out.select(*_WIDE_COLS)
-
     # r18: with_sha=False — this query drops out_sha, so the workers
     # skip the sha256 entirely (guide §1.2); kept columns unchanged.
-    compress = tag(pipeline.compress_pdf(docs_bin, backend="stub", with_sha=False).drop("out_sha"), "compress")
-    scan = tag(pipeline.scanned_pdf(docs_bin_spread, backend="stub", with_sha=False).drop("out_sha"), "scan")
+    compress = _widen(
+        pipeline.compress_pdf(docs_bin, backend="stub", with_sha=False).drop("out_sha"),
+        "compress",
+        _preset_of_doc(),
+    )
+    scan = _widen(
+        pipeline.scanned_pdf(docs_bin_spread, backend="stub", with_sha=False).drop("out_sha"),
+        "scan",
+        _preset_of_doc(),
+    )
     sign = _widen(
         pipeline.sign_pipeline(
             docs_bin.drop("preset"), signer="engine", preset=_SIGN_PRESET, backend="stub", with_sha=False
         ).drop("out_sha"),
         "sign",
-        _SIGN_PRESET,
+        F.lit(_SIGN_PRESET),
     )
     return compress.unionByName(scan).unionByName(sign)
 

@@ -359,10 +359,10 @@ def pii_counts_exprs(
     return found, residual
 
 
-def pii_aug_cte(dialect: str, prefix: str = "") -> str:
-    """``{prefix}aug(doc_id, text)``: the corpus with the pii_text_expr
-    plant applied."""
-    return f"""{prefix}aug AS (
+def pii_aug_cte(dialect: str) -> str:
+    """``aug(doc_id, text)``: the corpus with the pii_text_expr plant
+    applied."""
+    return f"""aug AS (
   SELECT doc_id, {pii_text_expr(dialect)} AS text
   FROM documents
 )"""

@@ -109,7 +109,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# minhash_signatures — row-local signature computation (no shuffle)
+# minhash signatures — row-local signature computation (no shuffle)
 # ---------------------------------------------------------------------------
 
 
@@ -135,11 +135,6 @@ SELECT doc_id,
 FROM hs
 ORDER BY doc_id
 """.strip()
-
-
-def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(_minhash_sql("spark"))
 
 
 # ---------------------------------------------------------------------------
@@ -617,11 +612,7 @@ def _local_components(edges: DataFrame) -> DataFrame:
     )
 
 
-def _converge_components(
-    edges: DataFrame,
-    max_iters: int = _CC_MAX_ITERS,
-    local_max_edges: int = _CC_LOCAL_MAX_EDGES,
-):
+def _converge_components(edges: DataFrame, local_max_edges: int = _CC_LOCAL_MAX_EDGES):
     """Connected components over a both-directions edge list
     ``(src, dst)`` (pre-checkpointed) — two-level, like every
     production CC implementation:
@@ -689,7 +680,7 @@ def _converge_components(
         )
 
     rounds = 0
-    for _ in range(max_iters):
+    for _ in range(_CC_MAX_ITERS):
         rounds += 1
         cur = labels.withColumn("_old", F.col("label"))
         for _s in range(_CC_STEPS_PER_ROUND):

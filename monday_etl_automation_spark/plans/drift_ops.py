@@ -81,5 +81,5 @@ def source_drift(spark: SparkSession, dir_a: str, dir_b: str) -> DataFrame:
     return spark.sql(_drift_sql("spark", "_drift_docs_a", "_drift_docs_b"))
 
 
-def source_drift_oracle(rel_a: str = "documents_a", rel_b: str = "documents_b") -> str:
-    return _drift_sql("duckdb", rel_a, rel_b)
+def source_drift_oracle() -> str:
+    return _drift_sql("duckdb", "documents_a", "documents_b")

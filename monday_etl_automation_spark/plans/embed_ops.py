@@ -47,9 +47,9 @@ _N_QUERIES = 40
 _QUERY_IDS = ", ".join(str(i) for i in range(0, _N_QUERIES * _QUERY_MOD, _QUERY_MOD))
 
 
-def _query_pred(col: str = "vec_id") -> str:
-    """Membership predicate of the fixed query-id set for ``col``."""
-    return f"{col} IN ({_QUERY_IDS})"
+def _query_pred() -> str:
+    """Membership predicate of the fixed query-id set for ``vec_id``."""
+    return f"vec_id IN ({_QUERY_IDS})"
 
 
 def _dot(dialect: str, a: str, b: str) -> str:
@@ -244,13 +244,13 @@ def _ivf_params(cnt: int) -> tuple[int, int]:
     return nc, npr
 
 
-def _ivf_ncent_case(cnt: str = "cnt") -> str:
-    branches = " ".join(f"WHEN {cnt} <= {t} THEN {nc}" for t, nc, _ in _ivf_ladder())
+def _ivf_ncent_case() -> str:
+    branches = " ".join(f"WHEN cnt <= {t} THEN {nc}" for t, nc, _ in _ivf_ladder())
     return f"CASE {branches} ELSE {_ivf_ladder()[-1][1]} END"
 
 
-def _ivf_nprobe_case(cnt: str = "cnt") -> str:
-    branches = " ".join(f"WHEN {cnt} <= {t} THEN {npr}" for t, _, npr in _ivf_ladder())
+def _ivf_nprobe_case() -> str:
+    branches = " ".join(f"WHEN cnt <= {t} THEN {npr}" for t, _, npr in _ivf_ladder())
     return f"CASE {branches} ELSE {_ivf_ladder()[-1][2]} END"
 
 
@@ -580,15 +580,15 @@ _PLANT_OFFSET = 10_000_000  # planted near-dup ids = original + offset
 _ND_PLANE_BASE = 101
 
 
-def _nd_bucket_sql(dialect: str, emb: str = "embedding") -> str:
-    """Full {_NEARDUP_BITS_MAX}-bit near-dup sign bucket of ``emb``
+def _nd_bucket_sql(dialect: str) -> str:
+    """Full {_NEARDUP_BITS_MAX}-bit near-dup sign bucket of ``embedding``
     (mix-planes BASE..BASE+MAX-1; bit i weights plane BASE+i by 2^i,
     so the ndm prefix divisor keeps the HIGHEST-indexed planes)."""
     bits = []
     for i in range(_NEARDUP_BITS_MAX):
         p = _ND_PLANE_BASE + i
         bits.append(
-            f"(CASE WHEN {_proj_mix(dialect, emb, p)} > 0 THEN {2 ** i} ELSE 0 END)"
+            f"(CASE WHEN {_proj_mix(dialect, 'embedding', p)} > 0 THEN {2 ** i} ELSE 0 END)"
         )
     return " + ".join(bits)
 

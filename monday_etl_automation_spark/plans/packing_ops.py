@@ -34,13 +34,11 @@ is a pipeline-wiring bug, not data.
 
 from __future__ import annotations
 
-from collections.abc import Iterator  # noqa: F401 (mirrors sibling pipelines)
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from monday_etl_automation_spark.plans.text_ops import chunk_documents
+from monday_etl_automation_spark.plans.text_ops import CHUNK_SIZE, chunk_documents
 
 # deterministic cross-engine shard hash (same md5 trick as _SPARK_H60)
 _SHARD = "pmod(CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT), {n})"
@@ -100,8 +98,7 @@ def pack_sequences(
     sf_dir: str,
     budget: int = 256,
     n_shards: int = 8,
-    chunk_size: int = 64,
-    overlap: int = 16,
+    chunk_size: int = CHUNK_SIZE,
     doc_ids: DataFrame | None = None,
     counter: str = "ws",
     chunks: DataFrame | None = None,
@@ -115,14 +112,14 @@ def pack_sequences(
     subword counts (a chunk's BPE count is >= its word count).
     ``chunks`` overrides the chunk source with a caller-prebuilt frame
     carrying (doc_id, chunk_idx, n_chunk_tokens) — tokenize-once reuse
-    (plans/tokenize_ops.py); ``chunk_size``/``overlap``/``counter``
-    are ignored when it is given."""
+    (plans/tokenize_ops.py); ``chunk_size``/``counter`` are ignored
+    when it is given."""
     if chunks is None:
         # ordered=False: packing is order-independent — pack() sorts
         # each shard group deterministically before assigning seq_idx,
         # so the chunker's global ORDER BY only added a range exchange
         # + sort of every chunk row per execution (r18).
-        chunks = chunk_documents(spark, sf_dir, chunk_size, overlap, counter, ordered=False)
+        chunks = chunk_documents(spark, sf_dir, chunk_size, counter=counter, ordered=False)
     chunks = chunks.select("doc_id", "chunk_idx", "n_chunk_tokens")
     if doc_ids is not None:
         chunks = chunks.join(doc_ids.select("doc_id"), "doc_id", "left_semi")

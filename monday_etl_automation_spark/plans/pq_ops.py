@@ -357,12 +357,12 @@ SELECT c.vec_id, c.ca, v.vnorm FROM folded c JOIN vn v ON c.vec_id = v.vec_id"""
     return lutarr, codesarr
 
 
-def _adc_arr_expr(lut_alias: str = "l", codes_alias: str = "a") -> str:
+def _adc_arr_expr() -> str:
     """The ADC sum as {_M} unrolled 0-based array lookups —
     whole-stage-codegen'd static indexing (a higher-order-function
     fold would run interpreted; the simhash r13 lesson)."""
     return " + ".join(
-        f"{lut_alias}.pa[{_K} * {s} + {codes_alias}.ca[{s}]]" for s in range(_M)
+        f"l.pa[{_K} * {s} + a.ca[{s}]]" for s in range(_M)
     )
 
 

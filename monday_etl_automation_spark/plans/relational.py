@@ -669,10 +669,7 @@ def _build_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    # zorder: shared SQL text over the part view. Full registration,
-    # never a names=("part",) subset: register_views marks the WHOLE
-    # sf_dir as registered, so a partial call would leave every other
-    # view unregistered for the rest of the session.
+    # zorder: shared SQL text over the part view
     register_views(spark, sf_dir)
     zorder = spark.sql(_zorder_sql("part"))
 

@@ -66,17 +66,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _rev():
-    return (
-        F.col("l_extendedprice").cast("decimal(12,2)")
-        * (F.lit(1).cast("decimal(4,2)") - F.col("l_discount").cast("decimal(4,2)"))
-    ).cast("decimal(18,4)")
-
-
 def _rev_long():
-    """r18 (guide §2.3): the same scale-4 unscaled integer _rev()'s
-    decimal multiply produces, as a plain long — feeds SplitSum
-    accumulators; reconstructed decimal(28,4) == the old sum exactly."""
+    """r18 (guide §2.3): the scale-4 unscaled integer that
+    price * (1 - discount) as decimal(12,2) * decimal(4,2) produces, as
+    a plain long — feeds SplitSum accumulators; reconstructed
+    decimal(28,4) == the decimal sum exactly."""
     return unscaled(F.col("l_extendedprice")) * (
         F.lit(100) - unscaled(F.col("l_discount"))
     )

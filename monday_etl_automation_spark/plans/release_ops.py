@@ -88,10 +88,8 @@ def release_training_corpus(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
-    fracs: dict[str, float] | None = None,
     pack_budget: int = 128,
     tokens_per_file: int = 2048,
-    n_shards: int = 8,
     tokenizer: str = "ws",
     merges=None,
     eod: bool = False,
@@ -108,7 +106,7 @@ def release_training_corpus(
         .localCheckpoint(eager=True)
     )
 
-    splits = corpus_splits(spark, sf_dir, fracs).select("doc_id", "split")
+    splits = corpus_splits(spark, sf_dir).select("doc_id", "split")
     released = (
         spark.table("documents")
         .join(released_ids, "doc_id", "left_semi")
@@ -155,7 +153,6 @@ def release_training_corpus(
             spark,
             sf_dir,
             budget=pack_budget,
-            n_shards=n_shards,
             doc_ids=train_ids,
             merges=merges,
             eod=eod,
@@ -164,9 +161,7 @@ def release_training_corpus(
             seqs, f"{out_dir}/shards", tokens_per_file=tokens_per_file
         ).localCheckpoint(eager=True)
     else:
-        packed = pack_sequences(
-            spark, sf_dir, budget=pack_budget, n_shards=n_shards, doc_ids=train_ids
-        )
+        packed = pack_sequences(spark, sf_dir, budget=pack_budget, doc_ids=train_ids)
         manifest = write_training_shards(
             packed, f"{out_dir}/shards", tokens_per_file=tokens_per_file
         ).localCheckpoint(eager=True)

@@ -268,6 +268,9 @@ _SPARK_SHUF_H = "CAST(conv(substr(md5('order:' || CAST(doc_id AS STRING)), 1, 15
 _DUCK_SHUF_H = "CAST('0x' || substr(md5('order:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)"
 
 
+_SPLIT_FRACS = {"train": 0.90, "val": 0.05, "test": 0.05}
+
+
 def _split_sql(dialect: str, fracs: dict[str, float]) -> str:
     """Hash-range split assignment + deterministic shuffle key.
 
@@ -307,13 +310,10 @@ ORDER BY doc_id
 """.strip()
 
 
-def corpus_splits(
-    spark: SparkSession, sf_dir: str, fracs: dict[str, float] | None = None
-) -> DataFrame:
-    fracs = fracs or {"train": 0.90, "val": 0.05, "test": 0.05}
+def corpus_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
-    return spark.sql(_split_sql("spark", fracs))
+    return spark.sql(_split_sql("spark", _SPLIT_FRACS))
 
 
-def corpus_splits_oracle(fracs: dict[str, float] | None = None) -> str:
-    return _split_sql("duckdb", fracs or {"train": 0.90, "val": 0.05, "test": 0.05})
+def corpus_splits_oracle() -> str:
+    return _split_sql("duckdb", _SPLIT_FRACS)

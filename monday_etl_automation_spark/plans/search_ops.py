@@ -83,8 +83,8 @@ _QUERIES: tuple[tuple[str, str], ...] = (
 )
 
 
-def _qterms_sql(dialect: str, queries: tuple[tuple[str, str], ...] = _QUERIES) -> str:
-    rows = ", ".join(f"('{q}', '{t}')" for q, t in queries)
+def _qterms_sql(dialect: str) -> str:
+    rows = ", ".join(f"('{q}', '{t}')" for q, t in _QUERIES)
     if dialect == "spark":
         return f"SELECT * FROM VALUES {rows} AS t(qid, term)"
     return f"SELECT * FROM (VALUES {rows}) AS t(qid, term)"
@@ -471,10 +471,10 @@ annres AS ({_ivf_sql(dialect)}),
 # corpus.
 # ---------------------------------------------------------------------------
 
+_BATCH_MOD, _BATCH_RES = 10, 7  # the ingest batch is doc_id % 10 = 7
 
-def bm25_incremental_topk(
-    spark: SparkSession, sf_dir: str, batch_mod: int = 10, batch_res: int = 7
-) -> DataFrame:
+
+def bm25_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The incremental-maintenance path under the driver's hash oracle
     (vector_extra shape ``bm25i``): the corpus is split into a base
     snapshot (doc_id % mod != res — indexed ONCE per (session, file
@@ -495,13 +495,12 @@ def bm25_incremental_topk(
 
     def build_base() -> DataFrame:
         spark.table("documents").where(
-            f"doc_id % {batch_mod} <> {batch_res}"
+            f"doc_id % {_BATCH_MOD} <> {_BATCH_RES}"
         ).createOrReplaceTempView("_bm_base")
         return spark.sql(_postings_sql("spark", rel="_bm_base")).localCheckpoint(eager=True)
 
-    key = (snapshot_key(sf_dir, "documents"), batch_mod, batch_res)
-    base_po = snapshot_memo(spark, "bm25i_base", key, build_base)
-    batch = spark.table("documents").where(f"doc_id % {batch_mod} = {batch_res}")
+    base_po = snapshot_memo(spark, "bm25i_base", snapshot_key(sf_dir, "documents"), build_base)
+    batch = spark.table("documents").where(f"doc_id % {_BATCH_MOD} = {_BATCH_RES}")
     # materialize the merged postings before the scoring tail — the
     # tail references the relation several times (df/dl/tf derive from
     # it), i.e. a self-join (repo rule: materialize first; unionByName

@@ -30,25 +30,25 @@ from pyspark.sql import functions as F
 
 from monday_etl_automation_spark.sources.tables import load_table
 
+# lg_k=12 → 4 KB sketches, ~1.6% relative standard error — the trade
+# for billion-key cardinalities.
+_LG_K = 12
+_GK_ACCURACY = 10000  # rank error <= 1/accuracy
+_CMS_EPS, _CMS_CONFIDENCE, _CMS_SEED = 0.001, 0.99, 42
 
-def hll_distinct_per_group(
-    df: DataFrame, keys: list[str], col: str, lg_k: int = 12
-) -> DataFrame:
-    """Per-group distinct-count estimates via DataSketches HLL.
 
-    lg_k=12 → 4 KB sketches, ~1.6% relative standard error — the
-    default trade for billion-key cardinalities.
-    """
+def hll_distinct_per_group(df: DataFrame, keys: list[str], col: str) -> DataFrame:
+    """Per-group distinct-count estimates via DataSketches HLL."""
     return df.groupBy(*keys).agg(
-        F.hll_sketch_estimate(F.hll_sketch_agg(F.col(col), F.lit(lg_k))).alias("n_distinct_est")
+        F.hll_sketch_estimate(F.hll_sketch_agg(F.col(col), F.lit(_LG_K))).alias("n_distinct_est")
     )
 
 
-def hll_sketch_per_group(df: DataFrame, keys: list[str], col: str, lg_k: int = 12) -> DataFrame:
+def hll_sketch_per_group(df: DataFrame, keys: list[str], col: str) -> DataFrame:
     """Materialize the per-group sketches themselves (BINARY) — the
     shape for incremental pipelines: store sketches per partition/day,
     answer any rollup later with hll_union_agg, never rescan."""
-    return df.groupBy(*keys).agg(F.hll_sketch_agg(F.col(col), F.lit(lg_k)).alias("hll"))
+    return df.groupBy(*keys).agg(F.hll_sketch_agg(F.col(col), F.lit(_LG_K)).alias("hll"))
 
 
 def hll_union_estimate(sketches: DataFrame, keys: list[str] | None = None) -> DataFrame:
@@ -59,14 +59,14 @@ def hll_union_estimate(sketches: DataFrame, keys: list[str] | None = None) -> Da
 
 
 def approx_quantiles_per_group(
-    df: DataFrame, keys: list[str], col: str, probabilities: list[float], accuracy: int = 10000
+    df: DataFrame, keys: list[str], col: str, probabilities: list[float]
 ) -> DataFrame:
     """Per-group approximate percentiles (Greenwald-Khanna): rank error
     <= 1/accuracy, state O(accuracy * log n) per group vs O(n) for the
     exact sort-based quantile (`quantile_stats` is the exact twin)."""
     return df.groupBy(*keys).agg(
         F.approx_percentile(
-            F.col(col), F.array(*[F.lit(p) for p in probabilities]), F.lit(accuracy)
+            F.col(col), F.array(*[F.lit(p) for p in probabilities]), F.lit(_GK_ACCURACY)
         ).alias("quantiles")
     )
 
@@ -80,16 +80,16 @@ def frequent_items(df: DataFrame, col: str, support: float = 0.01) -> DataFrame:
     return df.stat.freqItems([col], support)
 
 
-def count_min_error_bound(
-    df: DataFrame, col: str, eps: float = 0.001, confidence: float = 0.99, seed: int = 42
-):
+def count_min_error_bound(df: DataFrame, col: str):
     """Count-min sketch over a column; returns the sketch (binary,
     mergeable) — point-lookup frequency estimates with additive error
     <= eps * N at the given confidence. Exposed for feature pipelines
     that need per-token/user counts without a groupBy the size of the
     vocabulary."""
     return df.select(
-        F.count_min_sketch(F.col(col), F.lit(eps), F.lit(confidence), F.lit(seed)).alias("cms")
+        F.count_min_sketch(
+            F.col(col), F.lit(_CMS_EPS), F.lit(_CMS_CONFIDENCE), F.lit(_CMS_SEED)
+        ).alias("cms")
     )
 
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from monday_etl_automation_spark.plans.text_ops import CHUNK_OVERLAP, CHUNK_SIZE
 from monday_etl_automation_spark.sources.tables import register_views
 
 
@@ -72,14 +73,13 @@ ORDER BY event_type
 """.strip()
 
 
-def chunk_documents_udtf(
-    spark: SparkSession, sf_dir: str, size: int = 64, overlap: int = 16
-) -> DataFrame:
+def chunk_documents_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The chunker as a Python UDTF + LATERAL join. Same contract as
     text_ops.chunk_documents (ws counter): identical rows, different
     execution surface."""
     from pyspark.sql.functions import udtf
 
+    size, overlap = CHUNK_SIZE, CHUNK_OVERLAP
     stride = size - overlap
 
     @udtf(returnType="chunk_idx BIGINT, chunk_text STRING, n_chunk_tokens BIGINT")

@@ -2,7 +2,7 @@
 
 Large-scale training-data pipeline surface: token statistics, quality
 scoring, stopword-based language ID, BPE-ish token counting, and
-document fingerprinting. Everything is row-local array/string compute
+chunking. Everything is row-local array/string compute
 (whole-stage codegen, zero shuffles except final ordering) — the shape
 that scales linearly to 100 TB: no UDFs, no driver state, no
 cross-row dependencies.
@@ -23,47 +23,10 @@ _SPARK_TOKS = "split(trim(coalesce(text, '')), '\\\\s+')"
 _DUCK_TOKS = "regexp_split_to_array(trim(coalesce(text, '')), '\\s+')"
 
 _STOP_EN = ("the", "a", "of", "and", "to", "in")
-_STOP_TABLE = "table", "row", "join", "merge"  # domain words, non-stop
 
 # Spark SQL string literals process backslash escapes; DuckDB's do not.
 _BPE_RE_SPARK = "[a-z]+|[0-9]+|[^a-z0-9\\\\s]"
 _BPE_RE_DUCK = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
-
-
-# ---------------------------------------------------------------------------
-# text_stats — per-document statistics + quality score
-# ---------------------------------------------------------------------------
-
-
-def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    stop_list = ", ".join(f"'{w}'" for w in _STOP_EN)
-    return spark.sql(
-        f"""
-WITH t AS (
-  SELECT doc_id, lang, source, n_chars, {_SPARK_TOKS} AS toks FROM documents
-),
-s AS (
-  SELECT
-    doc_id, lang, source, n_chars,
-    size(toks) AS n_tokens,
-    CAST(aggregate(toks, 0, (acc, x) -> acc + length(x)) AS BIGINT) AS sum_token_len,
-    size(filter(toks, x -> x IN ({stop_list}))) AS n_stopwords,
-    size(array_distinct(toks)) AS n_distinct_tokens
-  FROM t
-)
-SELECT
-  doc_id, lang, source, n_chars, n_tokens, sum_token_len, n_stopwords, n_distinct_tokens,
-  CAST(
-    CASE WHEN n_tokens BETWEEN 20 AND 1000 THEN 40 ELSE 0 END
-    + CASE WHEN n_tokens > 0 AND sum_token_len * 10 BETWEEN n_tokens * 30 AND n_tokens * 80 THEN 30 ELSE 0 END
-    + CASE WHEN n_stopwords * 100 >= n_tokens * 2 THEN 15 ELSE 0 END
-    + CASE WHEN n_distinct_tokens * 100 >= n_tokens * 30 THEN 15 ELSE 0 END
-  AS INT) AS quality_score
-FROM s
-ORDER BY doc_id
-""".strip()
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -162,46 +125,11 @@ def token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 TOKEN_COUNT_ORACLE = _token_count_sql("duckdb")
 
 
-# ---------------------------------------------------------------------------
-# doc_fingerprint — shingle-hash fingerprints (min + xor folds)
-# ---------------------------------------------------------------------------
-
 # 60-bit hash of a shingle from its md5 hex prefix — identical in both
-# engines: Spark conv(hex,16,10), DuckDB CAST('0x'||hex AS BIGINT).
+# engines: Spark conv(hex,16,10), DuckDB CAST('0x'||hex AS BIGINT);
+# dedup_ops builds its shingle signatures on it.
 _SPARK_H60 = "CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)"
 _DUCK_H60 = "CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)"
-
-
-def _fingerprint_sql(dialect: str) -> str:
-    toks = _SPARK_TOKS if dialect == "spark" else _DUCK_TOKS
-    if dialect == "spark":
-        shingles = (
-            "CASE WHEN size(toks) >= 3 THEN transform(sequence(0, size(toks) - 3),"
-            " i -> concat_ws(' ', toks[i], toks[i + 1], toks[i + 2])) ELSE array(coalesce(text, '')) END"
-        )
-        hashes = f"transform(shingles, s -> {_SPARK_H60})"
-        fp_min = "array_min(hashes)"
-        fp_xor = "aggregate(hashes, CAST(0 AS BIGINT), (acc, h) -> acc ^ h)"
-    else:
-        shingles = (
-            "CASE WHEN len(toks) >= 3 THEN [toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]"
-            " for i in range(1, len(toks) - 1)] ELSE [coalesce(text, '')] END"
-        )
-        hashes = f"list_transform(shingles, s -> {_DUCK_H60})"
-        fp_min = "list_min(hashes)"
-        fp_xor = "reduce(hashes, (acc, h) -> xor(acc, h))"
-    return f"""
-WITH t AS (SELECT doc_id, text, {toks} AS toks FROM documents),
-sh AS (SELECT doc_id, {shingles} AS shingles FROM t),
-hs AS (SELECT doc_id, {hashes} AS hashes FROM sh)
-SELECT doc_id, {fp_min} AS fp_min, {fp_xor} AS fp_xor FROM hs
-ORDER BY doc_id
-""".strip()
-
-
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(_fingerprint_sql("spark"))
 
 
 # ---------------------------------------------------------------------------
@@ -448,6 +376,8 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 100 TB chunking is a map stage, never a repartition.
 # ---------------------------------------------------------------------------
 
+CHUNK_SIZE, CHUNK_OVERLAP = 64, 16  # window tokens, tokens shared by neighbours
+
 
 def _chunk_sql(
     dialect: str, size: int, overlap: int, counter: str = "ws", with_units: bool = False
@@ -534,8 +464,8 @@ ORDER BY doc_id, chunk_idx
 def chunk_documents(
     spark: SparkSession,
     sf_dir: str,
-    size: int = 64,
-    overlap: int = 16,
+    size: int = CHUNK_SIZE,
+    overlap: int = CHUNK_OVERLAP,
     counter: str = "ws",
     with_units: bool = False,
     ordered: bool = True,
@@ -551,8 +481,8 @@ def chunk_documents(
     return spark.sql(sql)
 
 
-def chunk_oracle(size: int = 64, overlap: int = 16, counter: str = "ws") -> str:
-    return _chunk_sql("duckdb", size, overlap, counter)
+def chunk_oracle(counter: str = "ws") -> str:
+    return _chunk_sql("duckdb", CHUNK_SIZE, CHUNK_OVERLAP, counter)
 
 
 # ---------------------------------------------------------------------------

@@ -116,8 +116,6 @@ def packed_token_sequences(
     sf_dir: str,
     budget: int = 512,
     n_shards: int = 8,
-    chunk_size: int = 64,
-    overlap: int = 16,
     doc_ids: DataFrame | None = None,
     merges=None,
     eod: bool = False,
@@ -155,7 +153,7 @@ def packed_token_sequences(
         from monday_etl_automation_spark.functions.bpe_fast import bpe_ids_udf
 
         udf = bpe_ids_udf(spark, merges)
-        chunks = chunk_documents(spark, sf_dir, chunk_size, overlap, counter="ws")
+        chunks = chunk_documents(spark, sf_dir, counter="ws")
         chunks = chunks.withColumn("chunk_ids", udf(F.col("chunk_text"))).withColumn(
             "n_chunk_tokens", F.size("chunk_ids").cast("int")
         )
@@ -166,9 +164,7 @@ def packed_token_sequences(
         # the packer, the chunk re-read, and a unit-string
         # re-derivation each re-ran the 48-replace BPE chain over every
         # chunk (3x the corpus cost; round-9 code-review finding).
-        chunks = chunk_documents(
-            spark, sf_dir, chunk_size, overlap, counter="bpe", with_units=True
-        )
+        chunks = chunk_documents(spark, sf_dir, counter="bpe", with_units=True)
     if eod:
         # the terminator costs one budget slot per chunk — bump BEFORE
         # packing so no sequence exceeds the budget after EOD insertion
@@ -188,8 +184,7 @@ def packed_token_sequences(
         if mx is not None and mx > budget:
             raise ValueError(
                 f"eod=True charges 1 budget slot per chunk: largest chunk has "
-                f"{mx - 1} text tokens + EOD > budget {budget}; raise budget or "
-                f"shrink chunk_size"
+                f"{mx - 1} text tokens + EOD > budget {budget}; raise budget"
             )
     packed = pack_sequences(
         spark, sf_dir, budget=budget, n_shards=n_shards, chunks=chunks

@@ -55,13 +55,12 @@ def write_bucketed(
     writer.format("parquet").saveAsTable(table)
 
 
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner"
-) -> DataFrame:
-    """Join two tables bucketed on ``on`` — when both sides have the
-    same bucket count on the join key, Catalyst plans a SortMergeJoin
-    with NO Exchange on either side (reads are already co-located)."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
+def bucketed_join(spark: SparkSession, left_table: str, right_table: str, on: list[str]) -> DataFrame:
+    """Inner-join two tables bucketed on ``on`` — when both sides have
+    the same bucket count on the join key, Catalyst plans a
+    SortMergeJoin with NO Exchange on either side (reads are already
+    co-located)."""
+    return spark.table(left_table).join(spark.table(right_table), on, "inner")
 
 
 def plan_has_exchange(df: DataFrame) -> bool:

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
@@ -40,14 +40,13 @@ def dir_stats(path: str) -> dict[str, int]:
     return {"n_files": n, "total_bytes": total}
 
 
-def plan_compaction(
-    path: str, target_file_bytes: int = 128 * 1024 * 1024, min_files_to_compact: int = 2
-) -> dict:
-    """Decide whether ``path`` needs compaction and into how many
-    files. Metadata-only (no data scan)."""
+def plan_compaction(path: str, target_file_bytes: int = 128 * 1024 * 1024) -> dict:
+    """Decide whether ``path`` needs compaction (two or more files,
+    more than the target count) and into how many files.
+    Metadata-only (no data scan)."""
     stats = dir_stats(path)
     want_files = max(1, -(-stats["total_bytes"] // target_file_bytes))  # ceil
-    needed = stats["n_files"] >= min_files_to_compact and stats["n_files"] > want_files
+    needed = stats["n_files"] >= 2 and stats["n_files"] > want_files
     return {**stats, "target_files": int(want_files), "compact": needed}
 
 

@@ -106,12 +106,10 @@ def write_shuffled_split(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
-    split: str = "train",
     epoch: int = 0,
     n_files: int = 8,
-    fracs: dict[str, float] | None = None,
 ) -> DataFrame:
-    """Write one corpus split in reproducible globally-shuffled order —
+    """Write the train split in reproducible globally-shuffled order —
     the materialization of SCALE.md's claim that "training order =
     ORDER BY shuffle_key is a distributed range write, not a sort on
     one machine": bucket rows by FIXED-WIDTH ranges of the epoch-salted
@@ -138,8 +136,8 @@ def write_shuffled_split(
 
     width = shuffled_file_width(n_files)
     df = (
-        corpus_splits(spark, sf_dir, fracs)
-        .where(F.col("split") == F.lit(split))
+        corpus_splits(spark, sf_dir)
+        .where(F.col("split") == F.lit("train"))
         .drop("shuffle_key")
         .withColumn("shuffle_key", F.expr(_EPOCH_SHUF.format(e=epoch)))
         .withColumn("file_id", F.expr(f"shuffle_key DIV {width}"))

@@ -378,8 +378,9 @@ def clear_artifact_caches(spark: SparkSession) -> None:
             getattr(spark, attr).clear()
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register the test tables as temp views for the SQL surface.
+def register_views(spark: SparkSession, sf_dir: str) -> None:
+    """Register all the test tables as temp views for the SQL surface
+    (``bind_table`` rebinds a single view).
 
     Idempotent per (session, sf_dir): repeat calls with the same
     sf_dir skip the parquet re-open (file listing + footer read per
@@ -388,19 +389,8 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TA
     """
     if getattr(spark, "_mea_views_sf_dir", None) == sf_dir:
         return
-    for name in names:
+    for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    if tuple(names) != TABLES:
-        # a subset registration must NOT mark the sf_dir as fully
-        # registered — it would turn every later full call into a
-        # no-op and leave the remaining views unresolvable (r15 bug:
-        # a names=("part",) call broke every lineitem query after it).
-        # It must also DROP any existing tag: if the session was fully
-        # bound to dir A and this subset rebinds some views to dir B,
-        # the mapping is now mixed and a later register_views(spark, A)
-        # must not early-return against it (mirrors bind_table).
-        spark._mea_views_sf_dir = None  # noqa: SLF001 (mixed mapping)
-        return
     spark._mea_views_sf_dir = sf_dir  # noqa: SLF001 (own session tag)
     # base views changed — any fixture views derived from them are stale
     spark._mea_fixtures_sf_dir = None  # noqa: SLF001

@@ -98,7 +98,9 @@ def _available_now(df: DataFrame, *, mode: str | None = None, foreach=None) -> D
 
     ``foreach``: a foreachBatch function (the sinks' ``process_batch``);
     returns None. Otherwise the query writes a uniquely-named memory
-    sink in output ``mode`` and its table is returned."""
+    sink in output ``mode`` and its rows are returned as a frame; the
+    sink's temp view is dropped, so the frame's lifetime bounds the
+    rows' (the session catalog would keep them for the session)."""
     spark = df.sparkSession
     writer = df.writeStream
     if foreach is None:
@@ -111,9 +113,11 @@ def _available_now(df: DataFrame, *, mode: str | None = None, foreach=None) -> D
         with _replay_partitions(spark):
             q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
             q.awaitTermination()
+        return None if foreach is not None else spark.table(sink)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-    return None if foreach is not None else spark.table(sink)
+        if foreach is None:
+            spark.catalog.dropTempView(sink)
 
 
 def _drain_in_splits(df: DataFrame, n_splits: int, foreach) -> None:
@@ -182,13 +186,17 @@ def tumbling_counts(events: DataFrame, watermark: str = "1 day") -> DataFrame:
     )
 
 
-def sliding_stats(events: DataFrame, watermark: str = "100 days") -> DataFrame:
+# Watermark delay of the sliding, session and interval-join replays.
+_WATERMARK = "100 days"
+
+
+def sliding_stats(events: DataFrame) -> DataFrame:
     """Watermarked 1-hour/30-minute sliding stats per event_type —
     identical expression in batch and streaming (the batch twin in
     plans/windows_ops.py calls this with a batch frame, where
     withWatermark is a no-op)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", _WATERMARK)
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -203,11 +211,11 @@ def sliding_stats(events: DataFrame, watermark: str = "100 days") -> DataFrame:
     )
 
 
-def session_stats(events: DataFrame, watermark: str = "100 days") -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """Watermarked 5-minute-gap session windows per user — the
     merge-on-gap stateful aggregation, shared by batch and streaming."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", _WATERMARK)
         .groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -224,10 +232,7 @@ def session_stats(events: DataFrame, watermark: str = "100 days") -> DataFrame:
 
 
 def stream_stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    window_seconds: int = 600,
-    watermark: str = "100 days",
+    left: DataFrame, right: DataFrame, window_seconds: int = 600
 ) -> DataFrame:
     """Stream-stream inner interval join: for each left event, the
     right events of the same user with ``r.ts`` in
@@ -245,13 +250,13 @@ def stream_stream_interval_join(
         F.col("event_id").alias("l_event_id"),
         F.col("user_id").alias("l_user_id"),
         F.col("ts").alias("l_ts"),
-    ).withWatermark("l_ts", watermark)
+    ).withWatermark("l_ts", _WATERMARK)
     r = right.select(
         F.col("event_id").alias("r_event_id"),
         F.col("user_id").alias("r_user_id"),
         F.col("ts").alias("r_ts"),
         F.col("event_type").alias("r_event_type"),
-    ).withWatermark("r_ts", watermark)
+    ).withWatermark("r_ts", _WATERMARK)
     return l.join(
         r,
         F.expr(
@@ -263,14 +268,10 @@ def stream_stream_interval_join(
     )
 
 
-def run_interval_join_replay(
-    spark: SparkSession, sf_dir: str, window_seconds: int = 600
-) -> DataFrame:
+def run_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """availableNow replay of the stream-stream interval join (append
     mode — inner interval joins emit rows as watermarks close)."""
-    joined = stream_stream_interval_join(
-        event_stream(spark, sf_dir), event_stream(spark, sf_dir), window_seconds
-    )
+    joined = stream_stream_interval_join(event_stream(spark, sf_dir), event_stream(spark, sf_dir))
     return _available_now(joined, mode="append")
 
 
@@ -304,10 +305,10 @@ def run_error_context_replay(
     )
 
 
-def dedup_events(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def dedup_events(events: DataFrame) -> DataFrame:
     """Webhook-retry suppression: drop duplicate event_ids while their
-    watermark window is open (at-least-once -> effectively-once)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
+    1-hour watermark window is open (at-least-once -> effectively-once)."""
+    return events.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(["event_id"])
 
 
 def run_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,22 +382,15 @@ def run_stateful_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     posture is a continuously-running stateful query whose state
     ALREADY reflects the stream; a batch consumer reads current state,
     it does not re-replay history per query."""
-    from pyspark.sql import Window
 
     def replay() -> DataFrame:
         updates = _available_now(
             stateful_user_totals_stream(event_stream(spark, sf_dir)), mode="update"
         )
-        w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
         # materialize the per-user totals (tiny: |users| rows) so the
         # cached artifact survives later memory-sink churn and joins
         # against it never re-read the sink table
-        return (
-            updates.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-            .localCheckpoint(eager=True)
-        )
+        return _reduce_updates_to_final(updates, ["user_id"]).localCheckpoint(eager=True)
 
     return snapshot_memo(spark, "stateful_totals", snapshot_key(sf_dir, "events"), replay)
 
@@ -785,12 +779,12 @@ def run_type_counts_tws_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PROPS_SCHEMA = "k INT"
 
 
-def corrupt_some_props(events: DataFrame, every: int = 13) -> DataFrame:
-    """Deterministically inject malformed JSON payloads (one in
-    ``every`` events) — the test harness for the quarantine path."""
+def corrupt_some_props(events: DataFrame) -> DataFrame:
+    """Deterministically inject malformed JSON payloads (one in 13
+    events) — the test harness for the quarantine path."""
     return events.withColumn(
         "props",
-        F.when(F.col("event_id") % every == 0, F.lit("{broken")).otherwise(F.col("props")),
+        F.when(F.col("event_id") % 13 == 0, F.lit("{broken")).otherwise(F.col("props")),
     )
 
 
@@ -849,6 +843,13 @@ def run_dead_letter(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     )
 
 
+# Bucket count of the sinks' state tables — the partition grain:
+# production sizes it so one bucket's state fits an executor
+# (state_bytes / ~256MB); locally 8 keeps per-batch task/file overhead
+# low.
+_SINK_BUCKETS = 8
+
+
 class StatusUpsertSink:
     """S12 analog: MERGE-style latest-status upsert via foreachBatch.
 
@@ -864,13 +865,11 @@ class StatusUpsertSink:
     semantics.
     """
 
-    def __init__(self, spark: SparkSession, path: str, n_buckets: int = 8) -> None:
-        # n_buckets sizes the state table's partition grain: production
-        # sizes it so one bucket's state fits an executor (state_bytes /
-        # ~256MB); locally 8 keeps per-batch task/file overhead low.
+    n_buckets = _SINK_BUCKETS
+
+    def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path
-        self.n_buckets = n_buckets
         # survive a restart-after-crash: state on disk IS state (the
         # latest-wins MERGE is replay-idempotent, but a restarted sink
         # must not treat its first delivery as a from-scratch write)
@@ -973,10 +972,11 @@ class RollupSink:
 
     _KEYS = ("window_start", "event_type")
 
-    def __init__(self, spark: SparkSession, path: str, n_buckets: int = 8) -> None:
+    n_buckets = _SINK_BUCKETS
+
+    def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path
-        self.n_buckets = n_buckets
         # survive a restart-after-crash: state on disk IS state
         self._has_state = bool(glob.glob(os.path.join(self.path, "bucket=*")))
 

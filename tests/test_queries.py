@@ -68,6 +68,83 @@ def test_no_side_registries_or_probe_imports():
     assert probes == [], f"tests importing tools/ ann_* probes: {probes}"
 
 
+def test_every_default_parameter_has_a_caller():
+    """Every defaulted parameter of a package function or constructor
+    is set — by keyword or by position — by some call in the package,
+    ``tools/``, ``perfbench/``, ``tests/``, ``bench.py`` or
+    ``__spark_entry__.py``. A knob no caller turns is a constant; keep
+    it as one. Callees match by bare name, and a function referenced
+    other than by a direct call (``pool.submit(fn)``, ``partial``,
+    ``foreachBatch(sink.process_batch)``) counts as fully set."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    pkg = sorted((root / "monday_etl_automation_spark").rglob("*.py"))
+    scope = [
+        *pkg,
+        *(p for d in ("tools", "perfbench", "tests") for p in sorted((root / d).rglob("*.py"))),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+    ]
+
+    def defaulted(fn, shift):
+        a = fn.args
+        pos = [*a.posonlyargs, *a.args]
+        first = len(pos) - len(a.defaults)
+        out = [(p.arg, i - shift) for i, p in enumerate(pos) if i >= first]
+        return out + [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+
+    knobs = []  # (where, callee name, parameter, positional index or None)
+    for path in pkg:
+        tree = ast.parse(path.read_text())
+        methods = set()
+        for cls in (n for n in ast.walk(tree) if isinstance(n, ast.ClassDef)):
+            for fn in cls.body:
+                if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    methods.add(fn)
+                    static = any(getattr(d, "id", None) == "staticmethod" for d in fn.decorator_list)
+                    name = cls.name if fn.name == "__init__" else fn.name
+                    for arg, idx in defaulted(fn, 0 if static else 1):
+                        knobs.append((f"{path.name}:{fn.lineno}", name, arg, idx))
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) and fn not in methods:
+                for arg, idx in defaulted(fn, 0):
+                    knobs.append((f"{path.name}:{fn.lineno}", fn.name, arg, idx))
+
+    keywords: dict[str, set[str]] = {}
+    n_positional: dict[str, int] = {}
+    opaque: set[str] = set()
+    for path in scope:
+        tree = ast.parse(path.read_text())
+        callees = set()
+        for call in (n for n in ast.walk(tree) if isinstance(n, ast.Call)):
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name is None:
+                continue
+            callees.add(f)
+            if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
+                opaque.add(name)
+            keywords.setdefault(name, set()).update(k.arg for k in call.keywords)
+            n_positional[name] = max(n_positional.get(name, 0), len(call.args))
+        for n in ast.walk(tree):
+            if n not in callees and isinstance(getattr(n, "ctx", None), ast.Load):
+                if isinstance(n, ast.Name):
+                    opaque.add(n.id)
+                elif isinstance(n, ast.Attribute):
+                    opaque.add(n.attr)
+
+    never = [
+        f"{where} {name}({arg})"
+        for where, name, arg, idx in knobs
+        if name not in opaque
+        and arg not in keywords.get(name, ())
+        and (idx is None or idx >= n_positional.get(name, 0))
+    ]
+    assert never == [], f"{len(never)} defaulted parameters no caller sets: {never}"
+
+
 def test_quantile_matches_independent_quantile_cont():
     """QUANTILE_ORACLE is the same SQL text as the Spark side (shared
     rank construct), so the driver compare alone would let a bug in

@@ -134,57 +134,6 @@ def test_normalize_ts_handles_all_known_encodings(spark):
     assert outs == [base, base, base]
 
 
-def test_partial_register_views_does_not_mark_sf_dir_registered(spark, sf_dir):
-    """r15 regression: register_views(names=subset) used to set the
-    session's 'views registered for this sf_dir' tag, turning every
-    later FULL registration into a no-op — the first lineitem query
-    after a names=("part",) call failed with TABLE_OR_VIEW_NOT_FOUND."""
-    from monday_etl_automation_spark.sources.tables import register_views
-
-    saved = getattr(spark, "_mea_views_sf_dir", None)
-    try:
-        spark._mea_views_sf_dir = None
-        spark.catalog.dropTempView("lineitem")
-        register_views(spark, sf_dir, ("part",))
-        assert getattr(spark, "_mea_views_sf_dir", None) != sf_dir
-        register_views(spark, sf_dir)  # must NOT be a no-op
-        assert spark.sql("SELECT count(*) AS n FROM lineitem").collect()[0][0] > 0
-    finally:
-        spark._mea_views_sf_dir = None
-        register_views(spark, sf_dir)
-        spark._mea_views_sf_dir = saved
-
-
-def test_cross_dir_subset_registration_drops_full_tag(spark, sf_dir):
-    """r16 (r15 ADVICE, medium): a subset registration against a
-    DIFFERENT sf_dir leaves the session with a MIXED view mapping —
-    the tag must drop so a later full registration of the original dir
-    cannot early-return and silently serve the other dir's rows."""
-    from monday_etl_automation_spark.sources.tables import (
-        clear_artifact_caches,
-        register_views,
-    )
-
-    other = "/root/testdata/sf0.01"
-    saved = getattr(spark, "_mea_views_sf_dir", None)
-    try:
-        clear_artifact_caches(spark)
-        spark._mea_views_sf_dir = None
-        register_views(spark, sf_dir)  # full: tag = sf_dir
-        assert getattr(spark, "_mea_views_sf_dir", None) == sf_dir
-        n_before = spark.sql("SELECT count(*) AS n FROM documents").collect()[0][0]
-        register_views(spark, other, ("documents",))  # subset, other dir
-        assert getattr(spark, "_mea_views_sf_dir", None) is None
-        register_views(spark, sf_dir)  # must rebind EVERY view
-        n_after = spark.sql("SELECT count(*) AS n FROM documents").collect()[0][0]
-        assert n_after == n_before
-    finally:
-        clear_artifact_caches(spark)
-        spark._mea_views_sf_dir = None
-        register_views(spark, sf_dir)
-        spark._mea_views_sf_dir = saved
-
-
 def test_artifact_cache_eviction_removes_owned_dirs(tmp_path, monkeypatch):
     """Superseded snapshot entries release the directories they own: an
     owned dir named by an evicted value (the value itself, or a tuple

@@ -27,6 +27,20 @@ def test_replay_is_deterministic(spark, sf_dir):
     assert len(a) > 0
 
 
+def test_replays_release_their_memory_sinks(spark, sf_dir):
+    """A memory-sink replay leaves no ``stream_*`` view in the session
+    catalog (each would pin its rows in driver memory for the life of
+    the session); the returned frames still hold the batch answer."""
+    from monday_etl_automation_spark.plans.windows_ops import tumbling_window_counts
+
+    frames = [run_replay(spark, sf_dir) for _ in range(3)]
+    leaked = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_")]
+    assert leaked == []
+    want = sorted(map(tuple, tumbling_window_counts(spark, sf_dir).collect()))
+    for df in frames:
+        assert sorted(map(tuple, df.collect())) == want
+
+
 def test_sliding_and_session_replays_equal_batch(spark, sf_dir):
     """Replay determinism for the sliding and merge-on-gap session
     windows — the stateful shapes where streaming diverges most from
