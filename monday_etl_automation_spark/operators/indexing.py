@@ -15,6 +15,16 @@ so Spark funnels the ENTIRE table through one task (the
 4. global index = local row_number + broadcast offset of the
    partition.
 
+That path runs eager jobs inside the builder: step 1's boundary
+sample, the ``localCheckpoint`` that pins it, step 3's counts collect.
+When the caller does not fix ``num_partitions`` and the input's
+Catalyst size estimate (driver-side plan statistics, no job) is at
+most the session's ``spark.sql.autoBroadcastJoinThreshold`` — a
+relation Spark would broadcast whole anyway — the range repartition
+goes to ONE partition instead: its only offset is ``start - 1``, so the
+sampling, the checkpoint and the counts all go and the build runs no
+job. The window keeps its ``partitionBy("_pid")`` on both paths.
+
 The order must be total (tie-free) for the result to be well defined;
 given that, the output is deterministic regardless of where the range
 sampler happens to place partition boundaries.
@@ -24,6 +34,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _fits_one_partition(df: DataFrame) -> bool:
+    """True when the optimizer's size estimate of ``df`` is at most the
+    session's broadcast threshold (a disabled threshold, -1, never fits)."""
+    jss = df.sparkSession._jsparkSession  # noqa: SLF001
+    bound = jss.sessionState().conf().autoBroadcastJoinThreshold()
+    size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))  # noqa: SLF001
+    return size <= bound
 
 
 def with_global_index(
@@ -37,11 +56,16 @@ def with_global_index(
     the total order ``order_cols``, without a single-task global sort."""
     spark = df.sparkSession
     if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        num_partitions = 1 if _fits_one_partition(df) else int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     ranged = df.repartitionByRange(num_partitions, *[F.col(c) for c in order_cols]).withColumn(
         "_pid", F.spark_partition_id()
     )
     w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
+    if num_partitions == 1:  # one partition: the only offset is start - 1
+        return (
+            ranged.withColumn(name, (F.row_number().over(w) + F.lit(start - 1)).cast("int"))
+            .drop("_pid")
+        )
     # MATERIALIZE before reading partition counts: repartitionByRange
     # SAMPLES its boundaries with a per-execution seed, so without a
     # barrier the counts pass and the final pass could see DIFFERENT

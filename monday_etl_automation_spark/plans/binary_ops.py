@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from monday_etl_automation_spark.multimodal import codecs, pipeline
-from monday_etl_automation_spark.sources.tables import load_table
+from monday_etl_automation_spark.sources.tables import load_table, snapshot_plan
 
 _PRESETS = ("minimum", "balanced", "high", "premium", "ultra")
 _SIGN_PRESET = "balanced"
@@ -85,6 +85,7 @@ def _preset_of_doc() -> F.Column:
     return F.element_at(F.array(*[F.lit(p) for p in _PRESETS]), (F.col("doc_id") % 5 + 1).cast("int"))
 
 
+@snapshot_plan
 def binary_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B1 + B7 across all presets + B5 signed — THREE single-pass
     stages. The preset is a per-row COLUMN (``presets[doc_id % 5]``)

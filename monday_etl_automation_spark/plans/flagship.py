@@ -19,12 +19,15 @@ which independently cross-checks the JSON round-trip.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from monday_etl_automation_spark.operators.joins import enrich_with_assets
 from monday_etl_automation_spark.operators.selection import apply_rules, parse_file_cells
 from monday_etl_automation_spark.sources.fixtures import register_fixture_views, with_fixtures
+from monday_etl_automation_spark.sources.tables import snapshot_plan, spread_n
 
 # Spark-only: fold the exploded fixture back into JSON cells, injecting
 # the malformed / NULL cells the silent-null path must survive.
@@ -61,20 +64,6 @@ def build_file_cells(spark: SparkSession, spread: bool = False) -> DataFrame:
     return spark.sql(FILE_CELLS_SQL.format(src=_REPART_SRC if spread else "files"))
 
 
-def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run the flagship selection pipeline over ``sf_dir``.
-
-    Memoized per (session, snapshot) — the tpch_extra pattern:
-    analyzing the fold→parse→rules→window→join chain costs ~0.3s of
-    driver-side Catalyst work per build (measured r15), and a
-    DataFrame is an immutable logical plan, so re-serving one is free.
-    """
-    from monday_etl_automation_spark.sources.tables import snapshot_key, snapshot_memo
-
-    key = tuple(snapshot_key(sf_dir, t) for t in ("lineitem", "part", "orders"))
-    return snapshot_memo(spark, "flagship_plan", key, lambda: _build_flagship(spark, sf_dir))
-
-
 # Broadcast the assets join only while the base snapshot is small
 # enough that the DISTINCT-derived assets view is genuinely dim-sized
 # (it scales WITH lineitem, unlike a real asset registry). 32 MB of
@@ -90,11 +79,14 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ASSETS_BCAST_FILE_MAX = 32 * 1024 * 1024
 
 
-def _build_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+@snapshot_plan
+def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Run the flagship selection pipeline over ``sf_dir``.
 
-    from monday_etl_automation_spark.sources.tables import spread_n
-
+    Memoized per (session, snapshot): analyzing the
+    fold→parse→rules→window→join chain costs ~0.3s of driver-side
+    Catalyst work per build (measured r15), and the build runs no job.
+    """
     register_fixture_views(spark, sf_dir)
     cells = build_file_cells(spark, spread=spread_n(spark, sf_dir, "lineitem") is not None)
     files = parse_file_cells(cells)

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from monday_etl_automation_spark.multimodal import media
-from monday_etl_automation_spark.sources.tables import load_table
+from monday_etl_automation_spark.sources.tables import load_table, snapshot_plan
 
 _W = "100 + n_chars % 512"
 _H = "100 + (n_chars * 7) % 512"
@@ -60,6 +60,7 @@ def _unpivot(df: DataFrame, kind: str, metrics: list[str]) -> DataFrame:
     )
 
 
+@snapshot_plan
 def media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All three media dataflows in one long-format relation."""
     img = _unpivot(

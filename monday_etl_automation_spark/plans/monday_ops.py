@@ -34,7 +34,7 @@ from monday_etl_automation_spark.operators.aggregates import (
     success_counts,
 )
 from monday_etl_automation_spark.sources.fixtures import register_fixture_views, with_fixtures
-from monday_etl_automation_spark.sources.tables import load_table
+from monday_etl_automation_spark.sources.tables import load_table, snapshot_plan
 
 
 def _fixtures(spark: SparkSession, sf_dir: str) -> None:
@@ -49,6 +49,7 @@ def _fixtures(spark: SparkSession, sf_dir: str) -> None:
 _LOOKUP_IDS = (1, 42, 512, 1024, 4096, 9999)
 
 
+@snapshot_plan
 def s1_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     _fixtures(spark, sf_dir)
     return (
@@ -75,6 +76,7 @@ ORDER BY item_id
 # ---------------------------------------------------------------------------
 
 
+@snapshot_plan
 def s4_formula_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     _fixtures(spark, sf_dir)
     items = spark.table("items")
@@ -120,6 +122,7 @@ ORDER BY item_id
 # ---------------------------------------------------------------------------
 
 
+@snapshot_plan
 def p1_extract_pdf_asset_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     _fixtures(spark, sf_dir)
     return (
@@ -151,6 +154,7 @@ ORDER BY item_id, column_id, asset_id
 # ---------------------------------------------------------------------------
 
 
+@snapshot_plan
 def a1_next_start_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     _fixtures(spark, sf_dir)
     c = load_table(spark, sf_dir, "customer")
@@ -182,6 +186,7 @@ FROM listing
 # ---------------------------------------------------------------------------
 
 
+@snapshot_plan
 def a2_success_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     _fixtures(spark, sf_dir)
     uploads = (
@@ -218,6 +223,7 @@ ORDER BY f.item_id
 # ---------------------------------------------------------------------------
 
 
+@snapshot_plan
 def a3_processed_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     _fixtures(spark, sf_dir)
     processed = spark.table("files").where(F.lower(F.col("file_name")).endswith(".pdf"))
@@ -241,9 +247,11 @@ ORDER BY column_id
 # ---------------------------------------------------------------------------
 
 
+@snapshot_plan
 def w3_auto_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Auto-increment over a total order WITHOUT a global single-task
-    window: two-pass range-partitioned index (operators/indexing.py).
+    window: range-partitioned index (operators/indexing.py; one
+    partition while the input is broadcast-sized, two-pass above).
     Byte-identical output to ROW_NUMBER() OVER (ORDER BY ...) + 99."""
     _fixtures(spark, sf_dir)
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
@@ -265,6 +273,7 @@ ORDER BY auto_id
 # ---------------------------------------------------------------------------
 
 
+@snapshot_plan
 def f_naming_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     _fixtures(spark, sf_dir)
     files = spark.table("files")
@@ -410,6 +419,7 @@ _SECTIONS = (
 )
 
 
+@snapshot_plan
 def g1_structure_lot(spark: SparkSession, sf_dir: str) -> DataFrame:
     _fixtures(spark, sf_dir)
     clients = (
@@ -417,7 +427,7 @@ def g1_structure_lot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("item_id") % 100 == 0)
         .select("item_id", "item_name", "text_lot")
     )
-    # two-pass global index: no single-task ORDER BY window (scale fix)
+    # range-partitioned global index: no single-task ORDER BY window (scale fix)
     numbered = with_global_index(clients, ["item_id"], name="auto_id")
     sections = F.array(
         *[

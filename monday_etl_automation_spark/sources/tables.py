@@ -25,6 +25,7 @@ deletes it.
 from __future__ import annotations
 
 import atexit
+import functools
 import os
 import shutil
 import tempfile
@@ -343,6 +344,27 @@ def snapshot_memo(spark: SparkSession, tag: str, key, build):
         hit = build()
         cache[key] = hit
     return hit
+
+
+def snapshot_plan(build):
+    """Decorator: serve a plan builder ``build(spark, sf_dir)`` once per
+    (session, snapshot of every table in ``TABLES``) via ``snapshot_memo``.
+    A repeat request on an unchanged snapshot skips the Python-side plan
+    construction and Catalyst analysis; each write of the served
+    DataFrame (the noop sink included) still plans and runs a fresh
+    QueryExecution. Only for
+    builders that run NO Spark job: it memoizes plans, never data. (An
+    input past the broadcast threshold sends ``with_global_index`` down
+    its two-pass path, whose checkpoint the memo would then keep for as
+    long as the snapshot lasts.)"""
+    tag = f"plan_{build.__module__}.{build.__qualname__}"
+
+    @functools.wraps(build)
+    def serve(spark: SparkSession, sf_dir: str) -> DataFrame:
+        key = tuple(snapshot_key(sf_dir, t) for t in TABLES)
+        return snapshot_memo(spark, tag, key, lambda: build(spark, sf_dir))
+
+    return serve
 
 
 def bind_table(spark: SparkSession, sf_dir: str, name: str) -> None:

@@ -523,7 +523,7 @@ def _timer_replay_source(
     repartitionByRange write finishes its part files in arbitrary
     order — the replay must control mtime order explicitly or the
     "later" file can land first and stall the watermark. Slices come
-    from the two-pass global index (no single-task global-sort
+    from the range-partitioned global index (no single-task global-sort
     window — the repo-wide rule holds in harness code too); ties on
     ts are broken by event_id so the order is total.
 

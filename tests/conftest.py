@@ -18,3 +18,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` -> ``(fn(), ids of the Spark jobs it ran)``: the
+    call runs under a fresh job group, read back once the listener bus
+    has delivered every event (the status tracker is fed from it)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -68,6 +68,24 @@ def test_no_side_registries_or_probe_imports():
     assert probes == [], f"tests importing tools/ ann_* probes: {probes}"
 
 
+def test_no_global_sort_windows(tmp_path):
+    """The gate's static rule, run in tier-1 too: no ``Window.orderBy``
+    (a window with no partition spec) anywhere in the package. The rule
+    itself must catch a planted offender."""
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    sys.path.insert(0, str(root / "tools"))
+    try:
+        from gate import global_window_hits
+    finally:
+        sys.path.remove(str(root / "tools"))
+    assert global_window_hits(str(root / "monday_etl_automation_spark")) == []
+    (tmp_path / "offender.py").write_text("w = Window.orderBy('ts')\n")
+    assert len(global_window_hits(str(tmp_path))) == 1
+
+
 def test_every_default_parameter_has_a_caller():
     """Every defaulted parameter of a package function or constructor
     is set — by keyword or by position — by some call in the package,

@@ -321,32 +321,25 @@ def _restore_views(spark, sf_dir, saved) -> None:
     spark._mea_views_sf_dir = saved
 
 
-def test_landing_a_byte_identical_snapshot_runs_no_spark_job(spark, sf_dir, tmp_path):
+def test_landing_a_byte_identical_snapshot_runs_no_spark_job(spark, sf_dir, tmp_path, spark_jobs):
     """Once the session has seen a snapshot's parquet footers, landing a
     byte-identical copy in a new directory opens every table from the
     footer-keyed schema memo: no schema-inference job (one per table
     when each open inferred its schema), and the fixture views over the
     copy serve the same rows."""
     import shutil
-    import uuid
 
     from monday_etl_automation_spark.sources.fixtures import register_fixture_views
 
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     shutil.copytree(sf_dir, a)
-    sc = spark.sparkContext
     saved = getattr(spark, "_mea_views_sf_dir", None)
     try:
         register_fixture_views(spark, a)
         want = {t: sorted(spark.table(t).collect()) for t in ("items", "files")}
         shutil.copytree(a, b)
-        group = f"landing-{uuid.uuid4().hex[:8]}"
-        sc.setJobGroup(group, "land a byte-identical snapshot")
-        try:
-            register_fixture_views(spark, b)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        _, jobs = spark_jobs(lambda: register_fixture_views(spark, b))
+        assert jobs == []
         assert {t: sorted(spark.table(t).collect()) for t in ("items", "files")} == want
         assert want["items"] and want["files"]
     finally:
@@ -420,3 +413,94 @@ def test_table_cache_holds_only_live_snapshots(spark, sf_dir, tmp_path):
         assert gone == []
     finally:
         _restore_views(spark, sf_dir, saved)
+
+
+# the job-free builders served through sources/tables.py:snapshot_plan
+_PLAN_MEMO_ENTRIES = {
+    "flagship_depot_selection",
+    "binary_pipeline",
+    "media_pipeline",
+    "s1_point_lookup",
+    "s4_formula_routing",
+    "p1_extract_pdf_asset_ids",
+    "a1_next_start_id",
+    "a2_success_counts",
+    "a3_processed_counters",
+    "w3_auto_increment",
+    "f_naming_pipeline",
+    "g1_structure_lot",
+}
+
+
+def _plan_memo_builders() -> dict:
+    from monday_etl_automation_spark.plans import registry
+
+    return {n: fn for n, fn in registry.queries().items() if hasattr(fn, "__wrapped__")}
+
+
+def _drop_plan_memos(spark) -> None:
+    for attr in list(vars(spark)):
+        if attr.startswith("_mea_cache_plan_"):
+            getattr(spark, attr).clear()
+
+
+def test_plan_memo_reserves_the_same_handle(spark, sf_dir):
+    """Each memoized builder hands back the very same DataFrame on a
+    repeat call for the same snapshot."""
+    builders = _plan_memo_builders()
+    assert set(builders) == _PLAN_MEMO_ENTRIES
+    for name, fn in builders.items():
+        assert fn(spark, sf_dir) is fn(spark, sf_dir), name
+
+
+def test_plan_memo_fresh_build_runs_no_job(spark, sf_dir, spark_jobs):
+    """A memoized plan is only a plan: building one afresh (views and
+    schema memo already warm) runs no Spark job."""
+    builders = _plan_memo_builders()
+    assert set(builders) == _PLAN_MEMO_ENTRIES
+    for fn in builders.values():
+        fn(spark, sf_dir)
+    _drop_plan_memos(spark)
+    ran = {}
+    for name, fn in builders.items():
+        _, ran[name] = spark_jobs(lambda fn=fn: fn(spark, sf_dir))
+    assert ran == dict.fromkeys(builders, [])
+
+
+def test_plan_memo_rebuilds_for_a_copied_snapshot(spark, sf_dir, tmp_path):
+    """A byte-identical copy at a new path is a new snapshot: the memo
+    builds a new handle for it, over the copy, with the same rows."""
+    import shutil
+
+    copy = str(tmp_path / "copy")
+    shutil.copytree(sf_dir, copy)
+    builders = _plan_memo_builders()
+    saved = getattr(spark, "_mea_views_sf_dir", None)
+    try:
+        for name in ("s1_point_lookup", "w3_auto_increment", "media_pipeline"):
+            fn = builders[name]
+            here = fn(spark, sf_dir)
+            want = sorted(here.collect())
+            there = fn(spark, copy)
+            assert there is not here, name
+            files = there.inputFiles()
+            assert files and all(copy in f for f in files), name
+            assert sorted(there.collect()) == want, name
+    finally:
+        _restore_views(spark, sf_dir, saved)
+
+
+def test_reserved_plan_reexecutes_every_write(spark, sf_dir, spark_jobs):
+    """A re-served handle never reuses a QueryExecution: each noop write
+    runs as many jobs and stages (with tasks) as the first."""
+    df = _plan_memo_builders()["a2_success_counts"](spark, sf_dir)
+    st = spark.sparkContext.statusTracker()
+
+    def write():
+        _, jobs = spark_jobs(lambda: df.write.format("noop").mode("overwrite").save())
+        stages = {s for j in jobs for s in st.getJobInfo(j).stageIds}
+        return len(jobs), sum(1 for s in stages if st.getStageInfo(s).numCompletedTasks > 0)
+
+    first = write()
+    assert first[0] > 1 and first[1] > 1, first
+    assert write() == first

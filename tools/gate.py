@@ -41,14 +41,12 @@ def run(label: str, args: list[str], timeout: int) -> bool:
     return rc == 0
 
 
-def static_checks() -> bool:
-    """Repo-rule greps that need no JVM. Currently: no global-sort
-    window (``Window.orderBy`` with no partition spec funnels the
-    whole relation through one task) anywhere in the package — use
-    operators/indexing.py:with_global_index instead."""
-    print("=== static checks ===", flush=True)
+def global_window_hits(pkg: str) -> list[str]:
+    """Every ``Window.orderBy`` line under ``pkg``: a window with no
+    partition spec funnels the whole relation through one task — use
+    operators/indexing.py:with_global_index instead. tier-1 runs the
+    same rule (tests/test_queries.py)."""
     bad: list[str] = []
-    pkg = os.path.join(REPO, "monday_etl_automation_spark")
     for root, _dirs, files in os.walk(pkg):
         for fn in files:
             if not fn.endswith(".py"):
@@ -58,6 +56,14 @@ def static_checks() -> bool:
                 for i, line in enumerate(f, 1):
                     if "Window.orderBy" in line:
                         bad.append(f"{path}:{i}: {line.strip()}")
+    return bad
+
+
+def static_checks() -> bool:
+    """Repo-rule greps that need no JVM: no global-sort window
+    (``global_window_hits``) anywhere in the package."""
+    print("=== static checks ===", flush=True)
+    bad = global_window_hits(os.path.join(REPO, "monday_etl_automation_spark"))
     for hit in bad:
         print(f"GLOBAL-WINDOW {hit}")
     print(f"=== static checks: {'OK' if not bad else 'FAIL'} ===\n", flush=True)

@@ -51,8 +51,6 @@ POST_HOC = {
     "vector_extra",
     "binary_pipeline",
     "media_pipeline",
-    "w3_auto_increment",
-    "g1_structure_lot",
     "f_naming_pipeline",
 }
 
