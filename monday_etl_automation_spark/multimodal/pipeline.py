@@ -176,10 +176,6 @@ def scanned_pdf(docs_bin: DataFrame, backend: str = "auto", with_sha: bool = Tru
 # B4/B5 — compress + sign + rename (the /sign-pdf/ composition)
 # ---------------------------------------------------------------------------
 
-B5_SCHEMA = (
-    "doc_id BIGINT, file_name STRING, n_pages BIGINT, out_bytes BIGINT, out_sha STRING"
-)
-
 
 def sign_pipeline(
     docs_bin: DataFrame,

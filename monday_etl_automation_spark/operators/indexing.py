@@ -16,10 +16,10 @@ so Spark funnels the ENTIRE table through one task (the
    partition.
 
 That path runs eager jobs inside the builder: step 1's boundary
-sample, the ``localCheckpoint`` that pins it, step 3's counts collect.
-When the caller does not fix ``num_partitions`` and the input's
-Catalyst size estimate (driver-side plan statistics, no job) is at
-most the session's ``spark.sql.autoBroadcastJoinThreshold`` — a
+sample, the ``localCheckpoint`` that pins it, step 3's counts collect,
+over ``spark.sql.shuffle.partitions`` range partitions. When the
+input's Catalyst size estimate (driver-side plan statistics, no job) is
+at most the session's ``spark.sql.autoBroadcastJoinThreshold`` — a
 relation Spark would broadcast whole anyway — the range repartition
 goes to ONE partition instead: its only offset is ``start - 1``, so the
 sampling, the checkpoint and the counts all go and the build runs no
@@ -50,13 +50,11 @@ def with_global_index(
     order_cols: list[str],
     name: str = "rn",
     start: int = 1,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Add a dense 1-based (plus ``start - 1``) global index following
     the total order ``order_cols``, without a single-task global sort."""
     spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = 1 if _fits_one_partition(df) else int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    num_partitions = 1 if _fits_one_partition(df) else int(spark.conf.get("spark.sql.shuffle.partitions"))
     ranged = df.repartitionByRange(num_partitions, *[F.col(c) for c in order_cols]).withColumn(
         "_pid", F.spark_partition_id()
     )

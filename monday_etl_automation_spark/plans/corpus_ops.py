@@ -9,7 +9,8 @@ pre-training data team actually runs, with per-document dispositions:
                        the gate survivors
   4. near-dup dedup  — simhash pair graph restricted to survivors;
                        drop any doc with a smaller-id surviving
-                       neighbor (near_dup_assign's rule)
+                       neighbor (the one-step assignment rule of
+                       dedup_ops._assign_frame)
   5. chunking        — kept docs fan out to 64-token/16-overlap chunks
                        (reported as n_chunks)
 

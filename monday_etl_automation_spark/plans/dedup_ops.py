@@ -398,7 +398,7 @@ def _simhash_sigs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _near_pairs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The simhash near-pair relation (doc_id_a, doc_id_b, hamming),
     MATERIALIZED once per (session, documents snapshot) and shared by
-    its three consumers (the simhash_near_pairs entry, near_dup_assign,
+    its consumers (the simhash_near_pairs entry and both halves of
     near_dup_components) — each used to recompute signatures + the
     band self-join from scratch. A dedup pipeline at scale persists
     its signature/pair index next to the corpus for exactly this
@@ -443,44 +443,18 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# near_dup_assign — per-doc canonical assignment (what a pipeline
-# actually consumes: keep/drop, not a pair list)
+# one-step canonical assignment — each doc -> min doc_id among {itself}
+# ∪ its simhash near-pair neighbors (what a pipeline consumes: keep/drop,
+# not a pair list); rides near_dup_components as its assign_* columns
 # ---------------------------------------------------------------------------
 
 
-def _assign_sql(dialect: str) -> str:
-    """Each doc -> min doc_id among {itself} ∪ its simhash near-pair
-    neighbors (one min-propagation step over the banded pair list).
-    Dropping every doc with canonical_id < doc_id removes one member
-    of every near-dup pair; at 100 TB you iterate this step to a fixed
-    point for full connected components — each iteration is the same
-    join+min shuffle."""
-    pairs = _simhash_pairs_sql(dialect).replace("\nORDER BY doc_id_a, doc_id_b", "")
-    return f"""
-WITH pairs AS ({pairs}),
-edges AS (
-  SELECT doc_id_a AS doc_id, doc_id_b AS nbr FROM pairs
-  UNION ALL
-  SELECT doc_id_b AS doc_id, doc_id_a AS nbr FROM pairs
-),
-assign AS (
-  SELECT d.doc_id,
-         LEAST(d.doc_id, COALESCE(min(e.nbr), d.doc_id)) AS canonical_id
-  FROM documents d LEFT JOIN edges e ON d.doc_id = e.doc_id
-  GROUP BY d.doc_id
-)
-SELECT doc_id, canonical_id,
-       CAST(CASE WHEN canonical_id = doc_id THEN 1 ELSE 0 END AS INT) AS is_kept
-FROM assign
-ORDER BY doc_id
-""".strip()
-
-
 def _assign_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The one-step assignment WITHOUT the final ORDER BY — consumed
-    both by near_dup_assign (which adds the sort) and by the folded
-    near_dup_components entry (where a pre-join sort would only add a
-    useless range exchange)."""
+    """The one-step assignment, with no ORDER BY — its consumer, the
+    near_dup_components entry, joins it on doc_id (a pre-join sort
+    would only add a useless range exchange). Dropping every doc with
+    canonical_id < doc_id removes one member of every near-dup pair;
+    iterating the step to a fixed point is near_dup_components."""
     register_views(spark, sf_dir)
     # reuse the persisted near-pair index (order-free consumer)
     pairs = _near_pairs_index(spark, sf_dir)
@@ -503,10 +477,6 @@ SELECT doc_id, canonical_id,
 FROM assign
 """.strip()
     )
-
-
-def near_dup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _assign_frame(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -548,8 +518,8 @@ ORDER BY mh.doc_id
 
 # ---------------------------------------------------------------------------
 # near_dup_components — fixed-point connected components over the
-# simhash near-pair graph (the full multi-hop version of
-# near_dup_assign: A~B, B~C => {A,B,C} all collapse to min(doc_id))
+# simhash near-pair graph (the full multi-hop version of the one-step
+# assignment: A~B, B~C => {A,B,C} all collapse to min(doc_id))
 # ---------------------------------------------------------------------------
 
 _CC_MAX_ITERS = 20  # materialization rounds; reach grows 2^_CC_STEPS_PER_ROUND per round
@@ -756,10 +726,9 @@ def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("is_kept"),
         )
     )
-    # near_dup_assign folded in (round 9): the one-step assignment
-    # rides as two extra columns so the driver's 50-entry window
-    # verifies BOTH operators under one registry slot. Same key, same
-    # row count — a doc_id equi-join, nothing more.
+    # the one-step assignment rides as two extra columns so the
+    # driver's 50-entry window verifies BOTH operators under one
+    # registry slot. Same key, same row count — a doc_id equi-join.
     assign = _assign_frame(spark, sf_dir).selectExpr(
         "doc_id",
         "canonical_id AS assign_canonical_id",
@@ -769,8 +738,8 @@ def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _components_sql(dialect: str) -> str:
-    """Recursive-CTE fixed point PLUS the folded one-step assignment
-    (near_dup_assign) over the same edge list — five columns matching
+    """Recursive-CTE fixed point PLUS the one-step assignment
+    (_assign_frame) over the same edge list — five columns matching
     the Spark entry."""
     pairs = _simhash_pairs_sql(dialect).replace("\nORDER BY doc_id_a, doc_id_b", "")
     return f"""
@@ -808,10 +777,8 @@ ORDER BY c.doc_id
 
 QUERIES: dict[str, tuple] = {
     "dedup_exact": (dedup_exact, _dedup_exact_sql("duckdb")),
-    # near_dup_assign is FOLDED into near_dup_components (round 9):
-    # its columns ride that entry so the freed slot holds vector_extra
-    # under the driver's 50-entry window. The standalone callable and
-    # its oracle stay for the API and tests/test_dedup.py.
+    # the one-step assignment rides near_dup_components as its
+    # assign_* columns (one slot in the driver's 50-entry window)
     "near_dup_components": (near_dup_components, _components_sql("duckdb")),
     "dedup_fingerprints": (dedup_fingerprints, _fingerprints_sql("duckdb")),
     "minhash_lsh_candidates": (minhash_lsh_candidates, _lsh_sql("duckdb")),

@@ -925,13 +925,6 @@ SELECT query_id, probe_cid, neighbor_id, cosine, rk
 FROM final_rank WHERE rk <= {_TOPK}{tail_order(dialect, "query_id, rk")}"""
 
 
-def _train_ivf_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Back-compat wrapper: the full vector→centroid ranking frame of
-    the persisted quantizer (see _train_ivf for the cache contract)."""
-    ranked, _, _, _ = _train_ivf(spark, sf_dir)
-    return ranked
-
-
 def _train_ivf(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, int, int]:

@@ -34,7 +34,8 @@ nprobe=12, cand=200 — the probed lists cap recall exactly as plain IVF
 (quantization only reorders candidates before the exact re-rank), so
 the recall floor is shared with the IVF path's posture.
 
-Pytest-only (registry capped at 50); twin under tests/test_ivfpq.py.
+Served as the ``ivfpq`` shape of the ``vector_extra`` entry
+(plans/vector_extra.py); twin under tests/test_ivfpq.py.
 """
 
 from __future__ import annotations

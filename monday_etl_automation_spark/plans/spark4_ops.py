@@ -1,39 +1,30 @@
-"""Spark 4 native surface: VARIANT semi-structured processing and
-Python UDTFs (SURVEY.md §2.11/§2.12 extensions — the modern API
-twins of operators this engine already serves through classic paths).
+"""Spark 4 native surface: VARIANT semi-structured processing
+(SURVEY.md §2.11 extension — the modern API twin of an operator this
+engine already serves through the classic path).
 
-Both operators are TWINNED against the engine's existing,
-battle-tested equivalents, so the new API surface can never drift
-from the proven semantics:
-
-- ``variant_props_stats`` — the P2 silent-null JSON analog over the
-  events stream using Spark 4's VARIANT type (``try_parse_json`` +
-  ``variant_get``) instead of ``get_json_object``. VARIANT is the
-  100 TB answer to repeated JSON-path extraction: parse once into a
-  binary-encoded document, then O(1)-ish typed path reads — versus
-  re-parsing the string per path expression. try_parse_json keeps the
-  reference's silent-null posture (malformed payloads yield NULL, not
-  an error — Leyton_depot.py's _parse_column_value behavior).
-- ``chunk_documents_udtf`` — the token-window chunker as a Python
-  UDTF consumed via LATERAL join. The SQL expression chunker
-  (plans/text_ops.py) stays the production path (JVM codegen, no
-  Python); the UDTF exists for the operator class built-ins cannot
-  express — per-row fan-out with imperative logic — and is pinned
-  row-identical to the SQL chunker so the two paths cannot diverge.
+``variant_props_stats`` is the P2 silent-null JSON analog over the
+events stream using Spark 4's VARIANT type (``try_parse_json`` +
+``variant_get``) instead of ``get_json_object``. VARIANT is the 100 TB
+answer to repeated JSON-path extraction: parse once into a
+binary-encoded document, then O(1)-ish typed path reads — versus
+re-parsing the string per path expression. try_parse_json keeps the
+reference's silent-null posture (malformed payloads yield NULL, not an
+error — Leyton_depot.py's _parse_column_value behavior). It rides the
+``event_hygiene`` entry (plans/windows_ops.py) as its ``*_variant``
+columns, so the driver hash pins it against DuckDB's JSON extraction.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from monday_etl_automation_spark.plans.text_ops import CHUNK_OVERLAP, CHUNK_SIZE
 from monday_etl_automation_spark.sources.tables import register_views
 
 
 def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event_type stats over VARIANT-parsed props — must equal the
-    classic get_json_object aggregation (pinned in tests/test_spark4.py
-    and against the DuckDB oracle below)."""
+    classic JSON extraction, as computed by the DuckDB oracle below
+    (pinned in tests/test_spark4.py and by ``event_hygiene``)."""
     register_views(spark, sf_dir)
     return spark.sql(
         """
@@ -71,40 +62,3 @@ FROM v
 GROUP BY event_type
 ORDER BY event_type
 """.strip()
-
-
-def chunk_documents_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The chunker as a Python UDTF + LATERAL join. Same contract as
-    text_ops.chunk_documents (ws counter): identical rows, different
-    execution surface."""
-    from pyspark.sql.functions import udtf
-
-    size, overlap = CHUNK_SIZE, CHUNK_OVERLAP
-    stride = size - overlap
-
-    @udtf(returnType="chunk_idx BIGINT, chunk_text STRING, n_chunk_tokens BIGINT")
-    class ChunkText:
-        def eval(self, text: str):  # noqa: ANN001
-            import re
-
-            # mirror the SQL chunker EXACTLY: Spark's split('', '\\s+')
-            # yields [''] (size 1), which re.split reproduces and
-            # str.split() would not — an empty text therefore emits ONE
-            # ('', 1) chunk on both paths (re.split never returns [],
-            # matching the SQL side's n_tokens > 0 always holding)
-            toks = re.split(r"\s+", (text or "").strip())
-            n = len(toks)
-            n_chunks = max(-(-(n - overlap) // stride), 1)
-            for i in range(n_chunks):
-                piece = toks[i * stride : i * stride + size]
-                yield i, " ".join(piece), min(n - i * stride, size)
-
-    register_views(spark, sf_dir)
-    spark.udtf.register("_chunk_text_udtf", ChunkText)
-    return spark.sql(
-        """
-SELECT d.doc_id, c.chunk_idx, c.chunk_text, c.n_chunk_tokens
-FROM documents d, LATERAL _chunk_text_udtf(d.text) c
-ORDER BY d.doc_id, c.chunk_idx
-""".strip()
-    )

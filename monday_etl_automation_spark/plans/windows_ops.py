@@ -8,8 +8,8 @@ REAL Structured Streaming pipeline (availableNow over the parquet
 source, memory sink) and must reproduce the batch answer the DuckDB
 oracle computes directly — replay determinism is the §2.10 test
 strategy, and it covers the batch operator and the streaming replay
-in a single driver-checked entry. The batch twins below stay exported
-for tests (tests/test_streaming.py asserts batch == replay).
+in a single driver-checked entry; tests compare other replays
+(multi-batch, RocksDB state) against the same oracles.
 
 DuckDB oracles: tumbling = time_bucket; sliding = each event assigned
 to size/slide buckets; session = gaps-and-islands (lag + cumulative
@@ -25,21 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from monday_etl_automation_spark.sources.tables import drop_owned_inputs, load_table, register_views
+from monday_etl_automation_spark.sources.tables import drop_owned_inputs, load_table
 from monday_etl_automation_spark.streaming import pipeline as streaming
 
 
 # ---------------------------------------------------------------------------
 # tumbling — 1-hour fixed windows
 # ---------------------------------------------------------------------------
-
-
-def tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events")
-    return (
-        streaming.tumbling_counts(events.withWatermark("ts", "100 days"))
-        .orderBy("window_start", "event_type")
-    )
 
 
 TUMBLING_ORACLE = """
@@ -56,7 +48,7 @@ ORDER BY window_start, event_type
 
 
 def stream_tumbling_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """True Structured Streaming replay — must equal the batch twin."""
+    """True Structured Streaming replay — must equal the oracle's batch answer."""
     return streaming.run_replay(spark, sf_dir)
 
 
@@ -65,14 +57,8 @@ def stream_tumbling_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def sliding_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin (shared expression) — used by tests for replay parity."""
-    events = load_table(spark, sf_dir, "events")
-    return streaming.sliding_stats(events).orderBy("window_start", "event_type")
-
-
 def stream_sliding_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """True Structured Streaming replay — must equal the batch twin."""
+    """True Structured Streaming replay — must equal the oracle's batch answer."""
     return streaming.run_sliding_replay(spark, sf_dir)
 
 
@@ -97,12 +83,6 @@ ORDER BY window_start, event_type
 # ---------------------------------------------------------------------------
 # session — 5-minute-gap sessions per user
 # ---------------------------------------------------------------------------
-
-
-def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin (shared expression) — used by tests for replay parity."""
-    events = load_table(spark, sf_dir, "events")
-    return streaming.session_stats(events).orderBy("user_id", "session_start")
 
 
 def stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,10 +7,10 @@ duplicate-event suppression (``dropDuplicatesWithinWatermark`` — the
 webhook-retry path), and a ``foreachBatch`` MERGE-style upsert (the
 S12 status-mutation path, Leyton_depot.py:594-613).
 
-Batch/stream parity: every streaming aggregation here has the exact
-same expression as its batch twin in ``plans/windows_ops.py``, so a
-full replay with ``availableNow`` must reproduce the batch answer —
-that property is what the driver's oracle checks.
+Batch/stream parity: every streaming aggregation here is a function of
+an events frame with batch semantics, so a full replay with
+``availableNow`` must reproduce the batch answer — that property is
+what the driver's DuckDB oracle checks (``plans/windows_ops.py``).
 
 Every query here starts through ``_available_now``: one availableNow
 trigger at the replay width, into a memory sink or a ``foreachBatch``
@@ -163,8 +163,8 @@ def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tumbling_counts(events: DataFrame, watermark: str = "1 day") -> DataFrame:
     """Watermarked 1-hour tumbling counts per event_type.
 
-    Identical aggregation expression to the batch twin; DECIMAL sums
-    for engine-exact totals.
+    The batch answer is TUMBLING_ORACLE (plans/windows_ops.py); DECIMAL
+    sums for engine-exact totals.
     """
     return (
         events.withWatermark("ts", watermark)
@@ -191,10 +191,8 @@ _WATERMARK = "100 days"
 
 
 def sliding_stats(events: DataFrame) -> DataFrame:
-    """Watermarked 1-hour/30-minute sliding stats per event_type —
-    identical expression in batch and streaming (the batch twin in
-    plans/windows_ops.py calls this with a batch frame, where
-    withWatermark is a no-op)."""
+    """Watermarked 1-hour/30-minute sliding stats per event_type (on a
+    batch frame withWatermark is a no-op)."""
     return (
         events.withWatermark("ts", _WATERMARK)
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
@@ -370,6 +368,18 @@ def stateful_user_totals_stream(events: DataFrame) -> DataFrame:
         stateStructType="n BIGINT, s BIGINT",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _reduce_updates_to_final(updates: DataFrame, keys: list[str]) -> DataFrame:
+    """Reduce an update-mode replay's emission log to the final state:
+    counts are monotone per key, so the final row is the max-n_events
+    one (max-of-struct: partial-aggregates map-side, no sort)."""
+    value_cols = [c for c in updates.columns if c not in keys]
+    return (
+        updates.groupBy(*keys)
+        .agg(F.max(F.struct(*value_cols)).alias("_top"))
+        .select(*keys, *[F.col(f"_top.{c}").alias(c) for c in value_cols])
     )
 
 
@@ -606,168 +616,6 @@ def run_timer_sessions_replay(
             "sum_micros",
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithState (Spark 4.x) — the successor API to
-# applyInPandasWithState: typed state variables (ValueState / ListState /
-# MapState), per-key timers, TTL, and initial-state bootstrap. The
-# processors below are twins of the applyInPandasWithState operator above
-# and of batch SQL aggregations, so every path is oracle-checked.
-# ---------------------------------------------------------------------------
-
-
-def _tws_totals_processor():
-    """Build the running-totals StatefulProcessor (executor-picklable:
-    imports stay inside methods, state handles are created in init)."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.stateful_processor import (  # noqa: PLC0415
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        """Per-user (n_events, sum_micros) in a typed ValueState —
-        identical accumulator (functions/numeric.py:checked_micros_sum)
-        and null semantics to the applyInPandasWithState operator and
-        the batch GROUPED_AGG UDAF, so all three can never drift.
-
-        `handleInitialState` seeds the ValueState from a batch frame —
-        the backfill→streaming handoff: aggregate history once in
-        batch, hand the totals to the stream, and the stream continues
-        exactly where batch left off (at 100 TB you never replay
-        history through the state store; you bootstrap it).
-        """
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n BIGINT, s BIGINT")
-
-        def handleInitialState(self, key, initialState, timerValues) -> None:
-            n = int(initialState["n_events"].iloc[0])
-            s = int(initialState["sum_micros"].iloc[0])
-            self._totals.update((n, s))
-
-        def handleInputRows(self, key, rows, timerValues):
-            from monday_etl_automation_spark.functions.numeric import (  # noqa: PLC0415
-                checked_micros_sum,
-            )
-
-            n, s = self._totals.get() if self._totals.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                s += checked_micros_sum(pdf["value"].dropna().to_numpy(dtype="float64"))
-            self._totals.update((n, s))
-            yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "sum_micros": [s]})
-
-        def close(self) -> None:
-            pass
-
-    return RunningTotals()
-
-
-_TWS_TOTALS_OUT = "user_id BIGINT, n_events BIGINT, sum_micros BIGINT"
-
-
-def stateful_user_totals_tws(events: DataFrame, initial_state=None) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` twin of
-    ``stateful_user_totals_stream`` — same output contract, so a full
-    replay's final (max-n_events) row per user must equal both the
-    applyInPandasWithState replay and the batch SQL twin (asserted in
-    tests/test_streaming.py).
-
-    ``initial_state``: optional batch frame
-    (user_id, n_events, sum_micros) used to bootstrap the state store
-    on the first micro-batch (pass ``df.groupBy("user_id")``'s shape —
-    this function applies the groupBy).
-    """
-    kwargs = {}
-    if initial_state is not None:
-        kwargs["initialState"] = initial_state.groupBy("user_id")
-    return events.groupBy("user_id").transformWithStateInPandas(
-        _tws_totals_processor(),
-        outputStructType=_TWS_TOTALS_OUT,
-        outputMode="Update",
-        timeMode="None",
-        **kwargs,
-    )
-
-
-def _tws_type_counts_processor():
-    """Per-user MapState keyed by event_type — the state shape for
-    per-key sub-dictionaries (feature counters, per-entity tallies)
-    that ValueState can't express without packing."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.stateful_processor import (  # noqa: PLC0415
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TypeCounts(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._counts = handle.getMapState("counts", "t STRING", "n BIGINT")
-
-        def handleInputRows(self, key, rows, timerValues):
-            touched: dict[str, int] = {}
-            for pdf in rows:
-                for t, c in pdf["event_type"].value_counts().items():
-                    touched[t] = touched.get(t, 0) + int(c)
-            for t, add in touched.items():
-                prev = self._counts.getValue((t,))
-                n = (prev[0] if prev is not None else 0) + add
-                self._counts.updateValue((t,), (n,))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(touched),
-                    "event_type": list(touched),
-                    "n_events": [self._counts.getValue((t,))[0] for t in touched],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return TypeCounts()
-
-
-def event_type_counts_tws(events: DataFrame) -> DataFrame:
-    """Per-(user, event_type) counts in per-user MapState. Counts are
-    monotone, so a replay's final answer is the max-count row per
-    (user_id, event_type) — which must equal the batch
-    ``groupBy(user_id, event_type).count()``."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        _tws_type_counts_processor(),
-        outputStructType="user_id BIGINT, event_type STRING, n_events BIGINT",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def _reduce_updates_to_final(updates: DataFrame, keys: list[str]) -> DataFrame:
-    """Reduce an update-mode replay's emission log to the final state:
-    counts are monotone per key, so the final row is the max-n_events
-    one (max-of-struct: partial-aggregates map-side, no sort)."""
-    value_cols = [c for c in updates.columns if c not in keys]
-    return (
-        updates.groupBy(*keys)
-        .agg(F.max(F.struct(*value_cols)).alias("_top"))
-        .select(*keys, *[F.col(f"_top.{c}").alias(c) for c in value_cols])
-    )
-
-
-def run_stateful_tws_replay(
-    spark: SparkSession, sf_dir: str, initial_state=None, events: DataFrame | None = None
-) -> DataFrame:
-    """availableNow replay of the transformWithState totals operator."""
-    stream = events if events is not None else event_stream(spark, sf_dir)
-    updates = _available_now(
-        stateful_user_totals_tws(stream, initial_state=initial_state), mode="update"
-    )
-    return _reduce_updates_to_final(updates, ["user_id"])
-
-
-def run_type_counts_tws_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    updates = _available_now(event_type_counts_tws(event_stream(spark, sf_dir)), mode="update")
-    return _reduce_updates_to_final(updates, ["user_id", "event_type"])
 
 
 # ---------------------------------------------------------------------------
@@ -1015,25 +863,8 @@ class RollupSink:
             touched = [
                 r["bucket"] for r in partial.select("bucket").distinct().collect()
             ]
-            # mergeSchema: the NORMAL post-upgrade state is MIXED —
-            # touched buckets carry applied_batch_id, untouched
-            # pre-stamp buckets do not — and default schema inference
-            # picks one arbitrary footer, which could silently drop
-            # the stamp column and let a replayed batch double-count
-            prev = (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(self.path)
-                .where(F.col("bucket").isin(touched))
-            )
-            if "applied_batch_id" not in prev.columns:
-                # all-pre-stamp state: treat as applied by batch -1
-                prev = prev.withColumn("applied_batch_id", F.lit(-1).cast("bigint"))
-            else:
-                # mixed state: pre-stamp rows surface as NULL stamps
-                prev = prev.withColumn(
-                    "applied_batch_id",
-                    F.coalesce(F.col("applied_batch_id"), F.lit(-1).cast("bigint")),
-                )
+            # every bucket file this sink writes carries the stamp
+            prev = self.spark.read.parquet(self.path).where(F.col("bucket").isin(touched))
             # replay guard: a touched bucket already stamped with this
             # (or a later) batch_id has applied this delivery — skip it
             done = {

@@ -164,13 +164,3 @@ def test_local_and_distributed_components_agree(spark):
     d = {r.doc_id: r.label for r in dist.collect()}
     assert l == d
 
-
-def test_near_dup_assign_standalone_twin(spark, sf_dir):
-    """near_dup_assign's driver coverage now rides the folded
-    near_dup_components entry (round 9); the standalone callable keeps
-    its own DuckDB twin here so an API-level regression can't hide
-    behind the fold."""
-    from monday_etl_automation_spark.plans.dedup_ops import _assign_sql, near_dup_assign
-    from tests.oracle_compare import assert_matches_oracle
-
-    assert_matches_oracle(near_dup_assign(spark, sf_dir), _assign_sql("duckdb"), sf_dir)

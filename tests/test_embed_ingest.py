@@ -16,7 +16,7 @@ from monday_etl_automation_spark.plans.embed_ingest import (
 from monday_etl_automation_spark.plans.embed_ops import (
     _IVF_NPROBE,
     _ann_bucket_index,
-    _train_ivf_ranked,
+    _train_ivf,
 )
 from monday_etl_automation_spark.plans.pq_ops import _train_pq
 from monday_etl_automation_spark.sources.tables import register_views
@@ -69,7 +69,7 @@ def test_frozen_quantizer_clone_identity(spark, sf_dir, batch):
 
     want = sorted(
         (r.cid, r.rc)
-        for r in _train_ivf_ranked(spark, sf_dir)
+        for r in _train_ivf(spark, sf_dir)[0]
         .where(f"vec_id = {_CLONE} AND rc <= {_IVF_NPROBE}")
         .collect()
     )

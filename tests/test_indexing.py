@@ -8,6 +8,8 @@ ids that only showed up at sf0.1 (caught by tools/strict_compare.py).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from monday_etl_automation_spark.operators.indexing import with_global_index
 from monday_etl_automation_spark.sources.tables import load_table
 
@@ -20,11 +22,26 @@ def _rows(df) -> list[tuple]:
     return sorted(tuple(r) for r in df.collect())
 
 
+@contextmanager
+def _two_pass(spark):
+    """Force the two-pass path: with the broadcast threshold disabled
+    (-1) no input fits one partition, so the index range-partitions
+    over ``spark.sql.shuffle.partitions``. Restores the threshold."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
+
+
 def test_global_index_is_correct_and_stable(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    idx = with_global_index(o, ["o_orderkey"], name="rn", start=1, num_partitions=7)
-    a = sorted((r.o_orderkey, r.rn) for r in idx.collect())
-    b = sorted((r.o_orderkey, r.rn) for r in idx.collect())  # re-execution
+    with _two_pass(spark):
+        idx = with_global_index(o, ["o_orderkey"], name="rn", start=1)
+        a = sorted((r.o_orderkey, r.rn) for r in idx.collect())
+        b = sorted((r.o_orderkey, r.rn) for r in idx.collect())  # re-execution
     assert a == b, "global index changed between executions"
     keys = sorted(r.o_orderkey for r in o.collect())
     want = [(k, i + 1) for i, k in enumerate(keys)]
@@ -45,9 +62,10 @@ def test_one_partition_path_matches_two_pass(spark, sf_dir):
     forced multi-partition two-pass path does."""
     c = _customers(spark, sf_dir)
     default = with_global_index(c, ["c_name", "c_custkey"], name="auto_id", start=100)
-    forced = with_global_index(c, ["c_name", "c_custkey"], name="auto_id", start=100, num_partitions=7)
+    with _two_pass(spark):
+        forced = _rows(with_global_index(c, ["c_name", "c_custkey"], name="auto_id", start=100))
     got = _rows(default)
-    assert got == _rows(forced)
+    assert got == forced
     assert sorted(r[2] for r in got) == list(range(100, 100 + len(got)))
     assert "SinglePartition" in default._jdf.queryExecution().executedPlan().toString()
 
@@ -65,14 +83,9 @@ def test_disabled_broadcast_threshold_takes_two_pass(spark, sf_dir, spark_jobs):
     disabled (-1) the default path is the two-pass build, which runs
     jobs and plans no single-partition exchange, with the same rows."""
     c = _customers(spark, sf_dir)
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
+    with _two_pass(spark):
         idx, jobs = spark_jobs(lambda: with_global_index(c, ["c_name", "c_custkey"], name="auto_id", start=100))
         assert jobs, "the two-pass build materializes its range partitions"
         assert "SinglePartition" not in idx._jdf.queryExecution().executedPlan().toString()
         got = _rows(idx)
-    finally:
-        spark.conf.set(key, saved)
     assert got == _rows(with_global_index(c, ["c_name", "c_custkey"], name="auto_id", start=100))

@@ -10,7 +10,7 @@ import shutil
 
 from monday_etl_automation_spark.plans.embed_ops import (
     _ann_bucket_index,
-    _train_ivf_ranked,
+    _train_ivf,
 )
 from monday_etl_automation_spark.sources.tables import register_views
 from monday_etl_automation_spark.streaming.pipeline import (
@@ -51,8 +51,8 @@ def test_persisted_indexes_memoize_and_invalidate(spark, sf_dir, tmp_path):
     a2 = _ann_bucket_index(spark, str(work))
     assert a1 is a2, "unchanged snapshot must hit the cache"
     assert isinstance(a1, tuple) and isinstance(a1[1], int)  # (index, modulus) travel together
-    i1 = _train_ivf_ranked(spark, str(work))
-    assert _train_ivf_ranked(spark, str(work)) is i1
+    i1 = _train_ivf(spark, str(work))
+    assert _train_ivf(spark, str(work)) is i1
     # content-identical rewrite still changes (mtime, size) key
     emb = work / "embeddings.parquet"
     data = emb.read_bytes()

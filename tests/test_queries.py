@@ -86,6 +86,29 @@ def test_no_global_sort_windows(tmp_path):
     assert len(global_window_hits(str(tmp_path))) == 1
 
 
+def test_gate_rejects_unknown_arguments(monkeypatch, capsys):
+    """``tools/gate.py --help`` prints its usage and exits 2 before any
+    step (static checks, driver_sim, strict_compare, pytest) starts."""
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    sys.path.insert(0, str(root / "tools"))
+    try:
+        import gate
+    finally:
+        sys.path.remove(str(root / "tools"))
+
+    def no_step(*_args):
+        raise AssertionError("a gate step started")
+
+    monkeypatch.setattr(gate, "run", no_step)
+    monkeypatch.setattr(gate, "static_checks", no_step)
+    monkeypatch.setattr(sys, "argv", ["gate.py", "--help"])
+    assert gate.main() == 2
+    assert "usage: python tools/gate.py [--full]" in capsys.readouterr().err
+
+
 def test_every_default_parameter_has_a_caller():
     """Every defaulted parameter of a package function or constructor
     is set — by keyword or by position — by some call in the package,

@@ -1,15 +1,13 @@
 """Spark 4 native surface (plans/spark4_ops.py): VARIANT semi-
-structured stats and the Python-UDTF chunker, each pinned to the
-engine's classic proven path so the modern API can never drift."""
+structured stats, pinned to the DuckDB oracle of the classic
+JSON-extraction path so the modern API can never drift."""
 
 from __future__ import annotations
 
 from monday_etl_automation_spark.plans.spark4_ops import (
     VARIANT_PROPS_ORACLE,
-    chunk_documents_udtf,
     variant_props_stats,
 )
-from monday_etl_automation_spark.plans.text_ops import chunk_documents
 from oracle_compare import assert_matches_oracle
 
 
@@ -47,9 +45,3 @@ def test_variant_silent_null_on_malformed(spark, sf_dir):
         register_views(spark, sf_dir)
         clear_artifact_caches(spark)
 
-
-def test_udtf_chunker_matches_sql_chunker(spark, sf_dir):
-    """Row-identical to the production SQL expression chunker."""
-    got = sorted(map(tuple, chunk_documents_udtf(spark, sf_dir).collect()))
-    want = sorted(map(tuple, chunk_documents(spark, sf_dir).collect()))
-    assert got == want

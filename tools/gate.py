@@ -71,7 +71,11 @@ def static_checks() -> bool:
 
 
 def main() -> int:
-    full = "--full" in sys.argv[1:]
+    args = sys.argv[1:]
+    if args not in ([], ["--full"]):
+        print("usage: python tools/gate.py [--full]", file=sys.stderr)
+        return 2
+    full = bool(args)
     steps = [
         ("driver_sim sf0.01", [sys.executable, f"{HERE}/driver_sim.py", "/root/testdata/sf0.01"], 900),
         ("strict_compare sf0.01", [sys.executable, f"{HERE}/strict_compare.py", "/root/testdata/sf0.01"], 900),
