@@ -5,8 +5,9 @@ frame-sample / feature-extract as Pandas UDFs).
 STUB LAYER like multimodal/codecs.py: the container has no
 PIL/ffmpeg/librosa, so the byte-level decoders are deterministic fakes
 — clearly marked, swappable for real ones — while everything Spark
-cares about is REAL: binary columns with a typed metadata struct,
-Arrow-batched ``mapInPandas`` stages, per-kind routing, and exact
+cares about is REAL: one Arrow-batched ``mapInPandas`` pass that builds
+each opaque container (its header carries the typed metadata) and
+decodes it with its kind's transform, routed in-process, and exact
 integer size models that a pure-SQL oracle can recompute from the
 ``documents`` fixture (the same verification strategy as
 plans/binary_ops.py).
@@ -42,10 +43,7 @@ FRAME_BYTES = 500
 RESIZE_H = 64
 SAMPLE_EVERY = 10
 
-MEDIA_SCHEMA = (
-    "doc_id BIGINT, kind STRING, width INT, height INT, duration_ms BIGINT,"
-    " n_frames INT, content BINARY"
-)
+MEDIA_LONG_SCHEMA = "kind STRING, doc_id BIGINT, metric STRING, value BIGINT"
 
 
 def _stream(seed: bytes, n: int) -> bytes:
@@ -71,103 +69,69 @@ def _video_bytes(doc_id: int, n_frames: int) -> bytes:
     return head + b"".join(frames)
 
 
-def documents_to_media(documents: DataFrame) -> DataFrame:
-    """Materialize a mixed media table: one opaque binary column plus
-    typed metadata, kind-routed by doc_id % 3. (STUB for a binaryFile
-    scan of a real media lake.)"""
+def encode_media(doc_id: int, n_chars: int) -> tuple[str, bytes]:
+    """The document's fake media container, kind-routed by doc_id % 3.
+    (STUB for a binaryFile scan of a real media lake.)"""
+    kind = ("image", "audio", "video")[doc_id % 3]
+    if kind == "image":
+        return kind, _image_bytes(doc_id, 100 + n_chars % 512, 100 + (n_chars * 7) % 512)
+    if kind == "audio":
+        return kind, _audio_bytes(doc_id, n_chars * 50)
+    return kind, _video_bytes(doc_id, max(1, n_chars // 40))
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+def resize_image(doc_id: int, raw: bytes) -> dict[str, int]:
+    """Aspect-preserving resize to height 64 (STUB for PIL resize —
+    real impl decodes, resamples, re-encodes; the fake reads the
+    geometry from the container header and re-derives a payload of the
+    modeled size)."""
+    if raw[:4] != b"IMGX":
+        raise ValueError("resize_image fed a non-image container")
+    w, h = struct.unpack(">II", raw[4:12])
+    w64 = max(1, (w * RESIZE_H) // h)
+    out = b"IMGX" + struct.pack(">II", w64, RESIZE_H) + _stream(f"rsz:{doc_id}".encode(), 4 + (w64 * RESIZE_H) // 16)
+    return {"out_width": w64, "out_height": RESIZE_H, "out_bytes": len(out)}
+
+
+def sample_video_frames(raw: bytes) -> dict[str, int]:
+    """Every-10th-frame sampling (STUB for ffmpeg frame extraction);
+    parses the real frame layout of the fake container."""
+    if raw[:4] != b"VIDX":
+        raise ValueError("sample_video_frames fed a non-video container")
+    nf = struct.unpack(">I", raw[4:8])[0]
+    frames = [raw[8 + i * FRAME_BYTES : 8 + (i + 1) * FRAME_BYTES] for i in range(0, nf, SAMPLE_EVERY)]
+    out = b"VIDX" + struct.pack(">I", len(frames)) + b"".join(frames)
+    return {"n_frames": nf, "n_sampled": len(frames), "out_bytes": len(out)}
+
+
+def extract_audio_features(doc_id: int, raw: bytes) -> dict[str, int]:
+    """8-dim integer feature vector (STUB for an MFCC-ish extractor):
+    feature i = 28-bit int from md5(f'{doc_id}:{i}') — md5-derived so a
+    SQL oracle recomputes it exactly."""
+    if raw[:4] != b"AUDX":
+        raise ValueError("extract_audio_features fed a non-audio container")
+    return {f"f{i}": int(hashlib.md5(f"{doc_id}:{i}".encode()).hexdigest()[:7], 16) for i in range(8)}
+
+
+def media_metrics(docs: DataFrame) -> DataFrame:
+    """All three media dataflows in ONE Arrow pass over ``(doc_id,
+    n_chars)``: each row's container is built, routed by kind to its
+    transform (resize / frame-sample / features), decoded there, and
+    emitted as long ``MEDIA_LONG_SCHEMA`` rows."""
+
+    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                kind = ("image", "audio", "video")[doc_id % 3]
-                w = 100 + n_chars % 512
-                h = 100 + (n_chars * 7) % 512
-                dur = n_chars * 50
-                nf = max(1, n_chars // 40)
-                if kind == "image":
-                    content, dur, nf = _image_bytes(doc_id, w, h), 0, 0
-                elif kind == "audio":
-                    content, w, h, nf = _audio_bytes(doc_id, dur), 0, 0, 0
-                else:
-                    content, w, h, dur = _video_bytes(doc_id, nf), 0, 0, 0
-                rows.append((doc_id, kind, w, h, dur, nf, content))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "kind", "width", "height", "duration_ms", "n_frames", "content"],
-            )
-
-    return documents.select("doc_id", "n_chars").mapInPandas(encode, MEDIA_SCHEMA)
-
-
-def resize_images(media: DataFrame) -> DataFrame:
-    """Aspect-preserving resize to height 64 (STUB for PIL resize —
-    real impl decodes, resamples, re-encodes; the fake re-derives a
-    payload of the modeled size)."""
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, w, h, content in zip(pdf["doc_id"], pdf["width"], pdf["height"], pdf["content"]):
-                doc_id, w, h = int(doc_id), int(w), int(h)
-                if bytes(content)[:4] != b"IMGX":
-                    raise ValueError("resize_images fed a non-image row")
-                w64 = max(1, (w * RESIZE_H) // h)
-                out = b"IMGX" + struct.pack(">II", w64, RESIZE_H) + _stream(
-                    f"rsz:{doc_id}".encode(), 4 + (w64 * RESIZE_H) // 16
-                )
-                rows.append((doc_id, w64, RESIZE_H, len(out)))
-            yield pd.DataFrame(rows, columns=["doc_id", "out_width", "out_height", "out_bytes"])
-
-    return media.where("kind = 'image'").mapInPandas(
-        work, "doc_id BIGINT, out_width INT, out_height INT, out_bytes BIGINT"
-    )
-
-
-def sample_video_frames(media: DataFrame) -> DataFrame:
-    """Every-10th-frame sampling (STUB for ffmpeg frame extraction);
-    parses the real frame layout of the fake container."""
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                raw = bytes(content)
-                if raw[:4] != b"VIDX":
-                    raise ValueError("sample_video_frames fed a non-video row")
-                nf = struct.unpack(">I", raw[4:8])[0]
-                frames = [
-                    raw[8 + i * FRAME_BYTES : 8 + (i + 1) * FRAME_BYTES]
-                    for i in range(0, nf, SAMPLE_EVERY)
-                ]
-                out = b"VIDX" + struct.pack(">I", len(frames)) + b"".join(frames)
-                rows.append((int(doc_id), nf, len(frames), len(out)))
-            yield pd.DataFrame(rows, columns=["doc_id", "n_frames", "n_sampled", "out_bytes"])
-
-    return media.where("kind = 'video'").mapInPandas(
-        work, "doc_id BIGINT, n_frames INT, n_sampled INT, out_bytes BIGINT"
-    )
-
-
-def extract_audio_features(media: DataFrame) -> DataFrame:
-    """8-dim integer feature vector per audio row (STUB for an MFCC-ish
-    extractor): feature i = 28-bit int from md5(f'{doc_id}:{i}') —
-    md5-derived so a SQL oracle recomputes it exactly."""
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                if bytes(content)[:4] != b"AUDX":
-                    raise ValueError("extract_audio_features fed a non-audio row")
                 doc_id = int(doc_id)
-                feats = [
-                    int(hashlib.md5(f"{doc_id}:{i}".encode()).hexdigest()[:7], 16)
-                    for i in range(8)
-                ]
-                rows.append((doc_id, *feats))
-            yield pd.DataFrame(rows, columns=["doc_id"] + [f"f{i}" for i in range(8)])
+                kind, raw = encode_media(doc_id, int(n_chars))
+                if kind == "image":
+                    metrics = resize_image(doc_id, raw)
+                elif kind == "video":
+                    metrics = sample_video_frames(raw)
+                else:
+                    metrics = extract_audio_features(doc_id, raw)
+                rows += [(kind, doc_id, m, v) for m, v in metrics.items()]
+            yield pd.DataFrame(rows, columns=["kind", "doc_id", "metric", "value"])
 
-    schema = "doc_id BIGINT, " + ", ".join(f"f{i} BIGINT" for i in range(8))
-    return media.where("kind = 'audio'").mapInPandas(work, schema)
+    return docs.select("doc_id", "n_chars").mapInPandas(work, MEDIA_LONG_SCHEMA)

@@ -4,19 +4,18 @@ ONE registered query runs the full binary surface — compress (B1),
 scan (B2/B3/B7), and compress+sign (B4/B5) — across ALL FIVE quality
 presets (reference fixed_signature_utils.py:47-61): each document is
 assigned the preset ``presets[doc_id % 5]``, so every preset is
-exercised while the total work stays one full pass per stage. Output
-is one wide relation keyed by (stage, preset, doc_id); per-stage
-columns that don't apply are NULL.
+exercised. Output is one wide relation keyed by (stage, preset,
+doc_id); per-stage columns that don't apply are NULL.
 
-Each stage runs the REAL distributed pipeline (mapInPandas over Arrow
-batches, per-page explode/reassemble, seeded effects) on binary
-content derived from ``documents``; the DuckDB oracle re-derives the
-exact page counts and byte sizes from ``length(text)`` alone — the
-fake codecs' size model (multimodal/codecs.py) is an exact function
-of (n_chars, dpi, quality), so a full value match here proves the
-distributed dataflow (fan-out, ordering, reassembly, composition)
-without needing binary-capable SQL. Content hashes are additionally
-checked for determinism in tests/test_multimodal.py.
+The plan is one parquet scan and ONE ``mapInPandas``
+(multimodal/pipeline.py:binary_stages): each document is encoded once
+and its per-page loops for all three stages run inside one Arrow pass.
+The DuckDB oracle re-derives the exact page counts and byte sizes from
+``length(text)`` alone — the fake codecs' size model
+(multimodal/codecs.py) is an exact function of (n_chars, dpi, quality),
+so a full value match here proves the per-document compositions
+without needing binary-capable SQL. Content bytes are checked for
+determinism and page order in tests/test_multimodal.py.
 """
 
 from __future__ import annotations
@@ -24,11 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from monday_etl_automation_spark.functions.scalar import make_signed_filename
 from monday_etl_automation_spark.multimodal import codecs, pipeline
-from monday_etl_automation_spark.sources.tables import load_table, snapshot_plan
+from monday_etl_automation_spark.sources.tables import load_table, snapshot_plan, spread_n
 
 _PRESETS = ("minimum", "balanced", "high", "premium", "ultra")
-_SIGN_PRESET = "balanced"
+_SIGN_PRESET = pipeline.SIGN_PRESET
 
 _N_PAGES_SQL = "CAST(GREATEST(1, CAST(ceil(length(text) / 200.0) AS INT)) AS BIGINT)"
 
@@ -43,78 +43,29 @@ def _scan_block(preset: str) -> int:
     return 13 + (20 + codecs.raster_size(dpi) + 8)  # scan preserves size; A4 adds 8
 
 
-def _docs_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
+@snapshot_plan
+def binary_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """B1 + B7 across all presets + B5 signed in ONE scan and ONE Arrow
+    pass. The preset is a per-row column (``presets[doc_id % 5]``), so
+    mixed presets cost no extra scan or branch. When the parquet layout
+    is unsplittable, ``spread_n`` spreads the raw ``(doc_id, text)``
+    rows before the operator (guide §2.5): the exchange carries raw
+    columns only, and the per-document raster work amortizes the tasks
+    (median request at sf0.1, 4 cores: 2.35 s unspread vs 1.11 s; at
+    sf0.001 the spread costs about 0.05 s)."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    n = spread_n(spark, sf_dir, "documents")
+    if n is not None:
+        docs = docs.repartition(n)
+    preset = F.element_at(F.array(*[F.lit(p) for p in _PRESETS]), (F.col("doc_id") % 5 + 1).cast("int"))
     # backend pinned to the stub: this plan's DuckDB oracle recomputes
     # the stub's EXACT size model, which no real JPEG encoder promises.
     # The real-codec route (codecs.resolve("auto")) is the user-facing
     # pipeline default, exercised by tests/test_real_codecs.py where
     # the libraries exist.
-    return pipeline.documents_to_binary(load_table(spark, sf_dir, "documents"), backend="stub")
-
-
-def _docs_bin_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """_docs_bin with the raw text rows spread across the cluster when
-    the parquet layout is unsplittable (guide §2.5) — used ONLY by the
-    scan chain, whose per-doc raster+effects work is heavy enough to
-    amortize the extra tasks (chain solo at sf0.1: 1.53s -> 1.14s).
-    The cheap compress/sign chains stay on the plain scan: spreading
-    them was measured to ADD task/worker fixed costs, not remove work."""
-    from monday_etl_automation_spark.sources.tables import spread_n
-
-    docs = load_table(spark, sf_dir, "documents")
-    n = spread_n(spark, sf_dir, "documents")
-    if n is not None:
-        docs = docs.repartition(n)
-    return pipeline.documents_to_binary(docs, backend="stub")
-
-
-_WIDE_COLS = ("stage", "preset", "doc_id", "n_pages", "in_bytes", "out_bytes", "file_name")
-
-
-def _widen(df: DataFrame, stage: str, preset: F.Column) -> DataFrame:
-    out = df.withColumn("stage", F.lit(stage)).withColumn("preset", preset)
-    for c, t in (("in_bytes", "bigint"), ("file_name", "string")):
-        if c not in df.columns:
-            out = out.withColumn(c, F.lit(None).cast(t))
-    return out.select(*_WIDE_COLS)
-
-
-def _preset_of_doc() -> F.Column:
-    """presets[doc_id % 5] — a pure function of doc_id, so stages can
-    recompute it on their outputs with zero extra scans or joins."""
-    return F.element_at(F.array(*[F.lit(p) for p in _PRESETS]), (F.col("doc_id") % 5 + 1).cast("int"))
-
-
-@snapshot_plan
-def binary_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B1 + B7 across all presets + B5 signed — THREE single-pass
-    stages. The preset is a per-row COLUMN (``presets[doc_id % 5]``)
-    resolved inside the Arrow batches, so mixed presets cost one scan
-    per stage instead of one branch (and one full input scan) per
-    preset — the difference between 3 and 11 scans of a 100 TB corpus."""
-    docs_bin = _docs_bin(spark, sf_dir).withColumn("preset", _preset_of_doc())
-    docs_bin_spread = _docs_bin_spread(spark, sf_dir).withColumn("preset", _preset_of_doc())
-
-    # r18: with_sha=False — this query drops out_sha, so the workers
-    # skip the sha256 entirely (guide §1.2); kept columns unchanged.
-    compress = _widen(
-        pipeline.compress_pdf(docs_bin, backend="stub", with_sha=False).drop("out_sha"),
-        "compress",
-        _preset_of_doc(),
-    )
-    scan = _widen(
-        pipeline.scanned_pdf(docs_bin_spread, backend="stub", with_sha=False).drop("out_sha"),
-        "scan",
-        _preset_of_doc(),
-    )
-    sign = _widen(
-        pipeline.sign_pipeline(
-            docs_bin.drop("preset"), signer="engine", preset=_SIGN_PRESET, backend="stub", with_sha=False
-        ).drop("out_sha"),
-        "sign",
-        F.lit(_SIGN_PRESET),
-    )
-    return compress.unionByName(scan).unionByName(sign)
+    out = pipeline.binary_stages(docs.withColumn("preset", preset), backend="stub")
+    name = F.concat(F.lit("doc_"), F.col("doc_id").cast("string"), F.lit(".pdf"))
+    return out.withColumn("file_name", F.when(F.col("stage") == "sign", make_signed_filename(name)))
 
 
 def _preset_case(fn) -> str:

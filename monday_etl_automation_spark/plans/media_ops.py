@@ -1,23 +1,23 @@
 """Image/audio/video pipeline query (SURVEY §2.12 multimodal columns).
 
 One registered query runs ALL THREE media dataflows (image resize,
-video frame-sampling, audio feature extraction — multimodal/media.py:
-binary + typed metadata through Arrow mapInPandas stages) and unions
-them into one long-format relation ``(kind, doc_id, metric, value)``.
-The DuckDB oracle recomputes the exact integer size/feature model from
-``documents.n_chars`` and md5 — full value matches prove the
-distributed plumbing without binary-capable SQL.
+video frame-sampling, audio feature extraction) as ONE scan of
+``(doc_id, n_chars)`` and ONE ``mapInPandas``
+(multimodal/media.py:media_metrics): each document's container is
+built and decoded by its kind's transform in-process, and the pass
+emits the long-format relation ``(kind, doc_id, metric, value)``
+directly. The DuckDB oracle recomputes the exact integer size/feature
+model from ``documents.n_chars`` and md5 — full value matches prove
+the per-kind transforms without binary-capable SQL.
 
 (Merged from 3 separate queries in round 2 so every media operator
 lands inside the driver's 50-entry correctness window; the per-kind
-pipelines are unchanged and still individually tested in
-tests/test_multimodal.py.)
+transforms are still individually tested in tests/test_multimodal.py.)
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from monday_etl_automation_spark.multimodal import media
 from monday_etl_automation_spark.sources.tables import load_table, snapshot_plan
@@ -26,53 +26,12 @@ _W = "100 + n_chars % 512"
 _H = "100 + (n_chars * 7) % 512"
 
 
-def _media(spark: SparkSession, sf_dir: str, kind_mod: int | None = None) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    if kind_mod is not None:
-        # push the kind predicate below the (expensive) binary
-        # generation — the scan filter prunes before mapInPandas runs
-        docs = docs.where(f"doc_id % 3 = {kind_mod}")
-    # r18: a spread_n repartition here was measured and REVERTED
-    # (1.1s -> 2.2s at sf0.1): three branches x repartition tripled the
-    # task/worker fixed costs while the per-row generation is too cheap
-    # to amortize them — the r14 binary-checkpoint lesson again.
-    return media.documents_to_media(docs)
-
-
-def media_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return media.resize_images(_media(spark, sf_dir, kind_mod=0))
-
-
-def media_video_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return media.sample_video_frames(_media(spark, sf_dir, kind_mod=2))
-
-
-def media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return media.extract_audio_features(_media(spark, sf_dir, kind_mod=1))
-
-
-def _unpivot(df: DataFrame, kind: str, metrics: list[str]) -> DataFrame:
-    stack = ", ".join(f"'{m}', CAST({m} AS BIGINT)" for m in metrics)
-    return df.selectExpr(
-        f"'{kind}' AS kind",
-        "doc_id",
-        f"stack({len(metrics)}, {stack}) AS (metric, value)",
-    )
-
-
 @snapshot_plan
 def media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All three media dataflows in one long-format relation."""
-    img = _unpivot(
-        media_image_resize(spark, sf_dir), "image", ["out_width", "out_height", "out_bytes"]
-    )
-    vid = _unpivot(
-        media_video_sample(spark, sf_dir), "video", ["n_frames", "n_sampled", "out_bytes"]
-    )
-    aud = _unpivot(
-        media_audio_features(spark, sf_dir), "audio", [f"f{i}" for i in range(8)]
-    )
-    return img.unionByName(vid).unionByName(aud)
+    """All three media dataflows in one long-format relation. No
+    ``spread_n`` here: the per-row generation is too cheap to amortize
+    the extra tasks (r18: 1.1 s -> 2.2 s at sf0.1 when it was tried)."""
+    return media.media_metrics(load_table(spark, sf_dir, "documents"))
 
 
 _FEATS_LONG = "\n  UNION ALL\n  ".join(

@@ -80,9 +80,9 @@ ORDER BY item_id
 def s4_formula_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     _fixtures(spark, sf_dir)
     items = spark.table("items")
-    signers = spark.createDataFrame(
-        [("O", "alice", "p12/alice.p12"), ("F", "bob", "p12/bob.p12"), ("P", "carol", "p12/carol.p12")],
-        "status string, signer string, p12_path string",
+    signers = spark.sql(
+        "SELECT * FROM VALUES ('O', 'alice', 'p12/alice.p12'), ('F', 'bob', 'p12/bob.p12'),"
+        " ('P', 'carol', 'p12/carol.p12') AS t(status, signer, p12_path)"
     )
     formula = F.coalesce(F.col("display_value"), F.col("text_value")).cast("double")
     return (

@@ -2,7 +2,7 @@
 
 Golden/property checks the SQL oracle cannot express: content-hash
 determinism (incl. seeded scan effects under simulated retry),
-page-order preservation through explode/reassemble, and codec
+page-order preservation of the per-document scan, and codec
 round-trips.
 """
 
@@ -10,8 +10,13 @@ from __future__ import annotations
 
 import hashlib
 
-from monday_etl_automation_spark.multimodal import codecs, pipeline
+import pytest
+from pyspark.sql import functions as F
+
+from monday_etl_automation_spark.multimodal import codecs, media, pipeline
 from monday_etl_automation_spark.sources.tables import load_table
+
+_PRESETS = ("minimum", "balanced", "high", "premium", "ultra")
 
 
 def test_pdf_roundtrip():
@@ -41,25 +46,49 @@ def test_sign_is_content_addressed():
 
 
 def test_distributed_pipeline_deterministic(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(50)
-    bin_df = pipeline.documents_to_binary(docs, backend="stub")
-    a = {r.doc_id: r.out_sha for r in pipeline.scanned_pdf(bin_df, backend="stub").collect()}
-    b = {r.doc_id: r.out_sha for r in pipeline.scanned_pdf(bin_df, backend="stub").collect()}
-    assert a == b and len(a) == 50
+    preset = F.element_at(F.array(*map(F.lit, _PRESETS)), (F.col("doc_id") % 5 + 1).cast("int"))
+    docs = load_table(spark, sf_dir, "documents").limit(50).withColumn("preset", preset)
+    out = pipeline.binary_stages(docs, backend="stub")
+    a = sorted(out.collect())
+    b = sorted(out.collect())
+    assert a == b and len(a) == 3 * 50
+    assert {r.stage for r in a} == {"compress", "scan", "sign"}
 
 
-def test_reassembly_preserves_page_order(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(5)
-    bin_df = pipeline.documents_to_binary(docs, backend="stub")
-    # driver-side reference computation, page by page in order
-    rows = {r.doc_id: bytes(r.content) for r in bin_df.collect()}
-    expected = {}
-    for doc_id, content in rows.items():
+def test_reassembly_preserves_page_order():
+    """The per-document scan equals the hand-written page loop, page by
+    page in order, at every preset."""
+    text = "".join(f"page {i:02d} " * 25 for i in range(7))
+    content = codecs.pdf_encode(text)
+    for doc_id, preset in enumerate(_PRESETS):
+        dpi = codecs.quality_preset(preset)[0]
         imgs = []
         for i, p in enumerate(codecs.pdf_pages(content)):
-            img = codecs.rasterize_page(p, 150)
-            eff = codecs.scan_effects(img, key=f"{doc_id}:{i}".encode(), preset="balanced")
+            img = codecs.rasterize_page(p, dpi)
+            eff = codecs.scan_effects(img, key=f"{doc_id}:{i}".encode(), preset=preset)
             imgs.append(codecs.a4_normalize(eff))
-        expected[doc_id] = hashlib.sha256(codecs.pdf_from_page_images(imgs)).hexdigest()
-    got = {r.doc_id: r.out_sha for r in pipeline.scanned_pdf(bin_df, backend="stub").collect()}
-    assert got == expected
+        expected = hashlib.sha256(codecs.pdf_from_page_images(imgs)).hexdigest()
+        got = hashlib.sha256(pipeline.scan_doc(codecs, content, preset, doc_id)).hexdigest()
+        assert got == expected, preset
+
+
+def test_media_transforms_decode_their_containers():
+    """Each per-kind transform reads its own container and rejects the
+    others: the fused pass routes by doc_id % 3 before decoding."""
+    kind, img = media.encode_media(3, 700)
+    w, h = 100 + 700 % 512, 100 + (700 * 7) % 512  # the documented size model
+    w64 = (w * 64) // h
+    assert kind == "image" and media.resize_image(3, img) == {
+        "out_width": w64,
+        "out_height": 64,
+        "out_bytes": 16 + (w64 * 64) // 16,
+    }
+    kind, vid = media.encode_media(5, 700)
+    assert kind == "video" and media.sample_video_frames(vid) == {"n_frames": 17, "n_sampled": 2, "out_bytes": 1008}
+    kind, aud = media.encode_media(4, 700)
+    assert kind == "audio" and len(media.extract_audio_features(4, aud)) == 8
+    for decode in (lambda raw: media.resize_image(0, raw), media.sample_video_frames):
+        with pytest.raises(ValueError):
+            decode(aud)
+    with pytest.raises(ValueError):
+        media.extract_audio_features(0, img)

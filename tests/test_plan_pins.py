@@ -98,11 +98,13 @@ _PINS: dict[str, tuple[int, int, bool]] = {
     # three Python surfaces (stateful replay + grouped-map + UDAF),
     # all shuffling on user_id once each
     "stateful_user_totals": (3, 4, True),
-    # mapInPandas decode over binary column: one exchange total; the
-    # source relation is derived (no pushable predicate)
-    "binary_pipeline": (1, 0, False),
-    # pure per-row media plumbing: ZERO hash exchanges
-    "media_pipeline": (0, 0, True),
+    # one scan + one mapInPandas: no page-reassembly hash exchange
+    # (the unsplittable-layout spread is round-robin), and no filter
+    # to push
+    "binary_pipeline": (0, 0, False),
+    # one scan + one mapInPandas routing by doc_id % 3 in-process:
+    # ZERO hash exchanges and no kind filter left to push
+    "media_pipeline": (0, 0, False),
     "a2_success_counts": (2, 4, True),
     # dedup half + props half + VARIANT half, joined on event_type
     "event_hygiene": (4, 4, True),

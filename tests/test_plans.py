@@ -12,9 +12,15 @@ the properties we rely on at scale actually hold:
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 
 from monday_etl_automation_spark.plans import registry
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+from plan_audit import audit_plan, final_plan  # noqa: E402
 
 
 def _plan(spark, sf_dir, name: str) -> str:
@@ -54,11 +60,12 @@ def test_q1_partial_aggregation(spark, sf_dir):
 
 
 def test_merged_pipelines_scan_once_per_stage(spark, sf_dir):
-    """binary_pipeline must read documents once per STAGE (3 scans),
-    not once per preset branch (11 scans — the round-2 regression the
-    per-row preset refactor fixed); media_pipeline reads once per kind;
-    text_profile computes every per-doc feature in ONE scan plus one
-    compact per-source token-totals scan for the merged mixture-rate
+    """binary_pipeline and media_pipeline read documents ONCE: all
+    stages (presets, kinds) run inside one Arrow pass — not once per
+    stage (3 scans) or per preset branch (11 scans, the round-2
+    regression the per-row preset refactor fixed); text_profile
+    computes every per-doc feature in ONE scan plus one compact
+    per-source token-totals scan for the merged mixture-rate
     columns (the rates side is weights-bounded and broadcast; r8
     z-as-window fix in sampling_ops.rates_ctes). r13 adds exactly 3
     more column-pruned (doc_id, text) scans for the driver-hashed
@@ -66,10 +73,21 @@ def test_merged_pipelines_scan_once_per_stage(spark, sf_dir):
     the decontam job's own passes merged into this audit query. A 6th
     scan would mean dc_flags' all-corpus left join stopped being
     pruned (its zeros are CASE expressions over hs instead)."""
-    for name, max_scans in (("binary_pipeline", 3), ("media_pipeline", 3), ("text_profile", 5)):
+    for name, max_scans in (("binary_pipeline", 1), ("media_pipeline", 1), ("text_profile", 5)):
         plan = _plan(spark, sf_dir, name)
         n = plan.count("Scan parquet")
         assert n <= max_scans, f"{name}: {n} parquet scans (max {max_scans})"
+
+
+@pytest.mark.parametrize("name", ["binary_pipeline", "media_pipeline"])
+def test_multimodal_entries_run_one_python_pass(spark, sf_dir, name):
+    """Each multimodal entry is one parquet scan feeding ONE
+    MapInPandas (every per-document codec composition runs inside that
+    Arrow pass), and no hash exchange reassembles derived page bytes."""
+    plan = final_plan(registry.queries()[name](spark, sf_dir))
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("Scan parquet") == 1, plan
+    assert audit_plan(plan)["n_exchange"] == 0, plan
 
 
 def test_global_index_windows_are_partitioned(spark, sf_dir):

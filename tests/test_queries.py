@@ -86,6 +86,29 @@ def test_no_global_sort_windows(tmp_path):
     assert len(global_window_hits(str(tmp_path))) == 1
 
 
+def test_no_literal_createdataframe_in_plans(tmp_path):
+    """The gate's static rule, run in tier-1 too: no plan builds a
+    small parameter relation with ``spark.createDataFrame(<literal>)``
+    (CLAUDE.md: VALUES relations carry size statistics). The rule
+    itself must catch a planted offender."""
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    sys.path.insert(0, str(root / "tools"))
+    try:
+        from gate import createdataframe_literal_hits
+    finally:
+        sys.path.remove(str(root / "tools"))
+    assert createdataframe_literal_hits(str(root / "monday_etl_automation_spark")) == []
+    (tmp_path / "plans").mkdir()
+    (tmp_path / "plans" / "offender.py").write_text(
+        "rows = spark.createDataFrame([('O', 'alice')], 'status string, signer string')\n"
+        "ok = spark.createDataFrame(rows_from_a_probe, 'n bigint')\n"
+    )
+    assert len(createdataframe_literal_hits(str(tmp_path))) == 1
+
+
 def test_gate_rejects_unknown_arguments(monkeypatch, capsys):
     """``tools/gate.py --help`` prints its usage and exits 2 before any
     step (static checks, driver_sim, strict_compare, pytest) starts."""

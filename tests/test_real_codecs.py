@@ -13,6 +13,7 @@ the libraries are present.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from monday_etl_automation_spark.multimodal import codecs, codecs_real, pipeline
 
@@ -46,11 +47,11 @@ def test_pipeline_entry_points_accept_backend(spark, sf_dir):
     keyword would otherwise only explode in the full container)."""
     from monday_etl_automation_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents").limit(3)
-    bin_df = pipeline.documents_to_binary(docs, backend="stub")
-    assert pipeline.compress_pdf(bin_df, backend="stub").count() == 3
-    assert pipeline.scanned_pdf(bin_df, backend="stub").count() == 3
-    assert pipeline.sign_pipeline(bin_df, backend="stub").count() == 3
+    docs = load_table(spark, sf_dir, "documents").limit(3).withColumn("preset", F.lit("balanced"))
+    rows = pipeline.binary_stages(docs, backend="stub").collect()
+    assert sorted(r.stage for r in rows) == ["compress"] * 3 + ["scan"] * 3 + ["sign"] * 3
+    with pytest.raises(ValueError):
+        pipeline.binary_stages(docs, backend="nonsense")
 
 
 @real_only
@@ -89,8 +90,11 @@ def test_real_scan_effects_seeded_retry_reproducible():
 def test_real_distributed_pipeline_deterministic(spark, sf_dir):
     from monday_etl_automation_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents").limit(10)
-    bin_df = pipeline.documents_to_binary(docs, backend="real")
-    a = {r.doc_id: r.out_sha for r in pipeline.scanned_pdf(bin_df, backend="real").collect()}
-    b = {r.doc_id: r.out_sha for r in pipeline.scanned_pdf(bin_df, backend="real").collect()}
-    assert a == b and len(a) == 10
+    docs = load_table(spark, sf_dir, "documents").limit(10).withColumn("preset", F.lit("balanced"))
+    out = pipeline.binary_stages(docs, backend="real")
+    a = sorted(out.collect())
+    b = sorted(out.collect())
+    assert a == b and len(a) == 3 * 10
+    text = docs.first().text
+    pdf = codecs_real.pdf_encode(text)
+    assert pipeline.scan_doc(codecs_real, pdf, "balanced", 7) == pipeline.scan_doc(codecs_real, pdf, "balanced", 7)

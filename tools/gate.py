@@ -20,6 +20,7 @@ workloads on one box skew timings and can deadlock the shuffle dirs).
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -59,13 +60,44 @@ def global_window_hits(pkg: str) -> list[str]:
     return bad
 
 
+def createdataframe_literal_hits(pkg: str) -> list[str]:
+    """Every ``.createDataFrame(<list or tuple literal>, ...)`` call under
+    ``pkg/plans``: a small parameter relation must be a VALUES relation
+    (``spark.sql("SELECT * FROM VALUES ...")``). An RDD-backed relation
+    has no size statistics, so its join may plan as a shuffle join, and
+    every execution re-scans the driver-pickled rows. tier-1 runs the
+    same rule (tests/test_queries.py)."""
+    bad: list[str] = []
+    for root, _dirs, files in os.walk(os.path.join(pkg, "plans")):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"
+                    and node.args
+                    and isinstance(node.args[0], (ast.List, ast.Tuple))
+                ):
+                    bad.append(f"{path}:{node.lineno}: {ast.unparse(node)[:120]}")
+    return bad
+
+
 def static_checks() -> bool:
-    """Repo-rule greps that need no JVM: no global-sort window
-    (``global_window_hits``) anywhere in the package."""
+    """Repo-rule scans that need no JVM: no global-sort window
+    (``global_window_hits``) anywhere in the package, and no literal
+    ``createDataFrame`` relation in its plans
+    (``createdataframe_literal_hits``)."""
     print("=== static checks ===", flush=True)
-    bad = global_window_hits(os.path.join(REPO, "monday_etl_automation_spark"))
+    pkg = os.path.join(REPO, "monday_etl_automation_spark")
+    bad = [f"GLOBAL-WINDOW {hit}" for hit in global_window_hits(pkg)]
+    bad += [f"LITERAL-CREATEDATAFRAME {hit}" for hit in createdataframe_literal_hits(pkg)]
     for hit in bad:
-        print(f"GLOBAL-WINDOW {hit}")
+        print(hit)
     print(f"=== static checks: {'OK' if not bad else 'FAIL'} ===\n", flush=True)
     return not bad
 

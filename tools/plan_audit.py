@@ -16,9 +16,9 @@ the flagship query. Run after plan-shape changes; the point is to make
 "is this the plan I'd want at 100 TB" a reviewable artifact instead of
 a one-off .explain() in a REPL.
 
-Note: streaming/iterative queries (stream_*, near_dup_components,
-stateful_user_totals, dead_letter_counts, binary/media pipelines)
-execute work inside their builder; their final frame's plan describes
+Note: streaming/iterative queries (stream_*, stateful_user_totals,
+dead_letter_counts, event_hygiene, the near-dup/LSH pair builders,
+vector_extra's index training) execute work inside their builder; their final frame's plan describes
 the last stage only — the audit marks them `(post)` for post-hoc.
 """
 
@@ -49,9 +49,6 @@ POST_HOC = {
     # trains PQ + IVF-PQ + BM25 postings eagerly (snapshot-cached);
     # the audited plan is the search-side union over the indexes
     "vector_extra",
-    "binary_pipeline",
-    "media_pipeline",
-    "f_naming_pipeline",
 }
 
 
