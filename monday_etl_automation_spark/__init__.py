@@ -11,10 +11,9 @@ multimodal binary columns) and designed for 100 TB scale:
 - broadcast joins for dimension lookups, AQE for skew and runtime re-plan
 - Arrow-vectorized pandas UDFs for the few things built-ins can't express
 - no ``collect()`` / driver-side loops anywhere in an operator path
+
+Importing the package loads no pyspark: Python workers start through
+``pydaemon``, which must rewrite ``sys.path`` before pyspark is imported.
 """
-
-from monday_etl_automation_spark.session import get_spark, stop_spark
-
-__all__ = ["get_spark", "stop_spark"]
 
 __version__ = "0.1.0"

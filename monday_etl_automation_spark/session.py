@@ -50,7 +50,9 @@ def get_spark(app_name: str = "monday_etl_automation_spark") -> SparkSession:
     Python UDF workers import this package, and they start from the
     environment the JVM inherits, so the package's parent directory
     goes on ``PYTHONPATH`` before the JVM starts — whatever the
-    caller's working directory.
+    caller's working directory. Workers start through ``pydaemon``,
+    which runs pyspark's own daemon on the installed pyspark instead of
+    the copy in Spark's zip archives (see that module).
     """
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
@@ -67,6 +69,7 @@ def get_spark(app_name: str = "monday_etl_automation_spark") -> SparkSession:
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "monday_etl_automation_spark.pydaemon")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
@@ -82,9 +85,3 @@ def get_spark(app_name: str = "monday_etl_automation_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -102,10 +102,35 @@ def test_core_count_defaults_to_usable_cores():
     assert cpus(SPARK_GRAFT_CPUS="3") == 3
 
 
+def test_package_import_loads_no_pyspark():
+    """Workers start as ``python -m monday_etl_automation_spark.pydaemon``,
+    which runs the package's ``__init__`` first: a pyspark imported
+    there would come from Spark's zip archives, before the daemon can
+    put the installed pyspark ahead of them."""
+    import subprocess
+    import sys
+
+    import monday_etl_automation_spark
+
+    root = os.path.dirname(os.path.dirname(monday_etl_automation_spark.__file__))
+    script = (
+        "import sys\n"
+        "import monday_etl_automation_spark.pydaemon\n"
+        "print(sorted(m for m in sys.modules if m.split('.')[0] in ('pyspark', 'py4j')))\n"
+    )
+    out = subprocess.run([sys.executable, "-c", script], cwd=root, capture_output=True, text=True, timeout=60)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip() == "[]"
+
+
 def test_udf_workers_import_the_package_from_any_cwd(tmp_path):
     """A Python UDF worker imports this package, so a session started
     from another working directory, with the package reachable only
-    through ``sys.path``, must still run one."""
+    through ``sys.path``, must still run one. Its workers start through
+    ``pydaemon``: they import the driver's (installed) pyspark, and no
+    zip or jar importer is left for pyspark's per-task
+    ``importlib.invalidate_caches()`` to re-read."""
+    import json
     import pathlib
     import subprocess
     import sys
@@ -114,13 +139,25 @@ def test_udf_workers_import_the_package_from_any_cwd(tmp_path):
 
     root = pathlib.Path(monday_etl_automation_spark.__file__).parent.parent
     script = (
-        "import sys\n"
+        "import json, sys\n"
         f"sys.path.insert(0, {str(root)!r})\n"
+        "import pyspark\n"
         "from monday_etl_automation_spark.functions.scalar import unaccent_py\n"
         "from monday_etl_automation_spark.session import get_spark\n"
         "spark = get_spark('udf_cwd_probe')\n"
         "df = spark.createDataFrame([('\\u00c9lan',)], 's STRING')\n"
         "print(df.select(unaccent_py('s')).first()[0])\n"
+        "def state(batches):\n"
+        "    import zipimport\n"
+        "    import pandas as pd\n"
+        "    import pyspark as worker_pyspark\n"
+        "    for _ in batches:\n"
+        "        pass\n"
+        "    zips = [k for k, v in sys.path_importer_cache.items() if isinstance(v, zipimport.zipimporter)]\n"
+        "    jars = [p for p in sys.path if p.endswith('.jar')]\n"
+        "    yield pd.DataFrame({'s': [json.dumps([worker_pyspark.__file__, zips, jars])]})\n"
+        "worker = json.loads(spark.range(1).mapInPandas(state, 's STRING').first()[0])\n"
+        "print(json.dumps([pyspark.__file__, *worker]))\n"
         "spark.stop()\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -134,4 +171,9 @@ def test_udf_workers_import_the_package_from_any_cwd(tmp_path):
         timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    assert out.stdout.strip().splitlines()[-1] == "Elan"
+    lines = out.stdout.strip().splitlines()
+    assert lines[-2] == "Elan"
+    driver_pyspark, worker_pyspark, zips, jars = json.loads(lines[-1])
+    assert worker_pyspark == driver_pyspark
+    assert zips == []
+    assert jars == []
