@@ -210,10 +210,10 @@ _stream = _common.stream
 # --- exact size model (what the SQL oracle recomputes) ----------------------
 
 
-def compressed_pdf_size(n_chars: int, preset: str = "balanced") -> int:
+def compressed_pdf_size(n_chars: int) -> int:
     """Exact output size of compress_pdf (B1) for an n_chars document:
     header 10 + per page (13 + 20 + raster*q//200)."""
-    dpi, q = _QUALITY[preset]
+    dpi, q = _QUALITY["balanced"]
     n_pages = max(1, -(-n_chars // PAGE_CHARS))
     jpg = 20 + (raster_size(dpi) * q) // 200
     return 10 + n_pages * (13 + jpg)

@@ -167,7 +167,7 @@ def sign_pdf_bytes(pdf: bytes, signer: str) -> bytes:
     return out
 
 
-def compressed_pdf_size(n_chars: int, preset: str = "balanced") -> int:  # pragma: no cover
+def compressed_pdf_size(n_chars: int) -> int:  # pragma: no cover
     """Real JPEG output sizes are content-dependent; no closed form
     exists. Kept for surface parity — callers that need the exact size
     model (the driver-oracle queries) must pin backend='stub'."""

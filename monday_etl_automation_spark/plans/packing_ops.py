@@ -136,8 +136,9 @@ def pack_sequences(
     return sharded.groupBy("shard").applyInPandas(pack, PACKED_SCHEMA)
 
 
-def packing_stats(packed: DataFrame, budget: int = 256) -> DataFrame:
-    """Per-run fill report: sequences, tokens, padding waste."""
+def packing_stats(packed: DataFrame) -> DataFrame:
+    """Per-run fill report of a 256-token-budget packing: sequences,
+    tokens, padding waste."""
     per_seq = packed.groupBy("shard", "seq_idx").agg(
         F.sum("n_chunk_tokens").alias("seq_tokens"),
         F.count(F.lit(1)).alias("n_chunks"),
@@ -146,5 +147,5 @@ def packing_stats(packed: DataFrame, budget: int = 256) -> DataFrame:
         F.count(F.lit(1)).alias("n_sequences"),
         F.sum("seq_tokens").alias("total_tokens"),
         F.max("seq_tokens").alias("max_seq_tokens"),
-        (F.sum("seq_tokens") / (F.count(F.lit(1)) * budget)).alias("fill_ratio"),
+        (F.sum("seq_tokens") / (F.count(F.lit(1)) * 256)).alias("fill_ratio"),
     )

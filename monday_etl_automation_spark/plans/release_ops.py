@@ -52,6 +52,8 @@ from monday_etl_automation_spark.plans.sampling_ops import corpus_splits
 from monday_etl_automation_spark.sources.shard_writer import write_training_shards
 from monday_etl_automation_spark.sources.tables import register_views
 
+_TOKENS_PER_FILE = 2048  # shard file payload target
+
 
 def _contaminated_ids(spark: SparkSession) -> DataFrame:
     """Corpus docs sharing >= {_HIT_MIN} distinct word-{_NGRAM}-grams
@@ -89,7 +91,6 @@ def release_training_corpus(
     sf_dir: str,
     out_dir: str,
     pack_budget: int = 128,
-    tokens_per_file: int = 2048,
     tokenizer: str = "ws",
     merges=None,
     eod: bool = False,
@@ -158,12 +159,12 @@ def release_training_corpus(
             eod=eod,
         )
         manifest = write_tokenized_shards(
-            seqs, f"{out_dir}/shards", tokens_per_file=tokens_per_file
+            seqs, f"{out_dir}/shards", tokens_per_file=_TOKENS_PER_FILE
         ).localCheckpoint(eager=True)
     else:
         packed = pack_sequences(spark, sf_dir, budget=pack_budget, doc_ids=train_ids)
         manifest = write_training_shards(
-            packed, f"{out_dir}/shards", tokens_per_file=tokens_per_file
+            packed, f"{out_dir}/shards", tokens_per_file=_TOKENS_PER_FILE
         ).localCheckpoint(eager=True)
     stage_rows = [
         ("total_docs", spark.table("documents").count()),

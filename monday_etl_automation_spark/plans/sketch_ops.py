@@ -71,13 +71,13 @@ def approx_quantiles_per_group(
     )
 
 
-def frequent_items(df: DataFrame, col: str, support: float = 0.01) -> DataFrame:
-    """Heavy hitters above ``support`` frequency (Karp-Papadimitriou-
-    Shenker single-pass): the skew probe at corpus scale — candidates
+def frequent_items(df: DataFrame, col: str) -> DataFrame:
+    """Heavy hitters above 1% frequency (Karp-Papadimitriou-Shenker
+    single-pass): the skew probe at corpus scale — candidates
     may include false positives (the algorithm's contract), so pair
     with one exact count over the small candidate set to confirm
     (`operators/skew.py:hot_keys` is that exact pass at test scale)."""
-    return df.stat.freqItems([col], support)
+    return df.stat.freqItems([col], 0.01)
 
 
 def count_min_error_bound(df: DataFrame, col: str):

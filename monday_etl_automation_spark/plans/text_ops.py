@@ -465,7 +465,6 @@ def chunk_documents(
     spark: SparkSession,
     sf_dir: str,
     size: int = CHUNK_SIZE,
-    overlap: int = CHUNK_OVERLAP,
     counter: str = "ws",
     with_units: bool = False,
     ordered: bool = True,
@@ -475,7 +474,7 @@ def chunk_documents(
     within each shard group) otherwise pay a range exchange + sort of
     every chunk row per execution for nothing."""
     register_views(spark, sf_dir)
-    sql = _chunk_sql("spark", size, overlap, counter, with_units)
+    sql = _chunk_sql("spark", size, CHUNK_OVERLAP, counter, with_units)
     if not ordered:
         sql = sql.replace("\nORDER BY doc_id, chunk_idx", "")
     return spark.sql(sql)

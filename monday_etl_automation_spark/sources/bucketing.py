@@ -32,14 +32,13 @@ def write_bucketed(
     df: DataFrame,
     table: str,
     bucket_cols: list[str],
-    n_buckets: int = 8,
     sort_cols: list[str] | None = None,
 ) -> None:
-    """Persist ``df`` as a bucketed (optionally sorted) catalog table.
-    Overwrites any existing table of the same name — including a stale
-    warehouse directory left by a previous session (the in-memory
-    catalog forgets the table but its managed location survives, and
-    CREATE then fails with LOCATION_ALREADY_EXISTS)."""
+    """Persist ``df`` as a catalog table in 8 buckets (optionally
+    sorted). Overwrites any existing table of the same name — including
+    a stale warehouse directory left by a previous session (the
+    in-memory catalog forgets the table but its managed location
+    survives, and CREATE then fails with LOCATION_ALREADY_EXISTS)."""
     import shutil
     from urllib.parse import urlparse
 
@@ -49,7 +48,7 @@ def write_bucketed(
     stale = os.path.join(warehouse, table.lower())
     if os.path.isdir(stale):
         shutil.rmtree(stale)
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
+    writer = df.write.mode("overwrite").bucketBy(8, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.format("parquet").saveAsTable(table)

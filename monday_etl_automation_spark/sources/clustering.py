@@ -17,7 +17,7 @@ Mechanics (all metadata-sized driver work, all deterministic):
   stats. ``width_bucket`` keeps the mapping in codegen.
 - the z-value interleaves the bucket bits ({_BITS} shift/mask terms
   per column — pure BIGINT arithmetic, no UDF);
-- ``repartitionByRange(n_files, zval)`` + in-file sort writes files
+- ``repartitionByRange(_N_FILES, zval)`` + in-file sort writes files
   that are contiguous z-ranges — the distributed clustered rewrite,
   no single-task sort.
 
@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _BITS = 10  # buckets per dimension = 1024
+_N_FILES = 16  # files per clustered rewrite
 
 
 def _zvalue_expr(bucket_cols: list[str]) -> str:
@@ -46,10 +47,8 @@ def _zvalue_expr(bucket_cols: list[str]) -> str:
     return " + ".join(terms)
 
 
-def zorder_write(
-    df: DataFrame, out_dir: str, cols: tuple[str, ...], n_files: int = 16
-) -> None:
-    """Rewrite ``df`` as ``n_files`` parquet files clustered by the
+def zorder_write(df: DataFrame, out_dir: str, cols: tuple[str, ...]) -> None:
+    """Rewrite ``df`` as ``_N_FILES`` parquet files clustered by the
     z-order of ``cols`` (numeric)."""
     # (min, max) per clustering column — one metadata-sized aggregate
     aggs = []
@@ -81,7 +80,7 @@ def zorder_write(
         bcols.append(b)
     zed = with_buckets.withColumn("_zval", F.expr(_zvalue_expr(bcols)))
     (
-        zed.repartitionByRange(n_files, "_zval")
+        zed.repartitionByRange(_N_FILES, "_zval")
         .sortWithinPartitions("_zval")
         .drop("_zval", *bcols)
         .write.mode("overwrite")
@@ -89,10 +88,10 @@ def zorder_write(
     )
 
 
-def linear_write(df: DataFrame, out_dir: str, col: str, n_files: int = 16) -> None:
+def linear_write(df: DataFrame, out_dir: str, col: str) -> None:
     """The single-column baseline: range-clustered on one key."""
     (
-        df.repartitionByRange(n_files, col)
+        df.repartitionByRange(_N_FILES, col)
         .sortWithinPartitions(col)
         .write.mode("overwrite")
         .parquet(out_dir)

@@ -40,12 +40,15 @@ def dir_stats(path: str) -> dict[str, int]:
     return {"n_files": n, "total_bytes": total}
 
 
-def plan_compaction(path: str, target_file_bytes: int = 128 * 1024 * 1024) -> dict:
+_TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+
+def plan_compaction(path: str) -> dict:
     """Decide whether ``path`` needs compaction (two or more files,
-    more than the target count) and into how many files.
-    Metadata-only (no data scan)."""
+    more than its bytes fill at ``_TARGET_FILE_BYTES`` each) and into
+    how many files. Metadata-only (no data scan)."""
     stats = dir_stats(path)
-    want_files = max(1, -(-stats["total_bytes"] // target_file_bytes))  # ceil
+    want_files = max(1, -(-stats["total_bytes"] // _TARGET_FILE_BYTES))  # ceil
     needed = stats["n_files"] >= 2 and stats["n_files"] > want_files
     return {**stats, "target_files": int(want_files), "compact": needed}
 
@@ -53,10 +56,9 @@ def plan_compaction(path: str, target_file_bytes: int = 128 * 1024 * 1024) -> di
 def compact_parquet(
     spark: SparkSession,
     path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
     partition_by: list[str] | None = None,
 ) -> dict:
-    """Rewrite ``path`` into ~``target_file_bytes`` files.
+    """Rewrite ``path`` into ~``_TARGET_FILE_BYTES`` files.
 
     Unpartitioned: repartition(target_files) → overwrite.
     Partitioned: repartition on (partition cols, pseudo-random split
@@ -71,7 +73,7 @@ def compact_parquet(
     staging = path.rstrip("/") + "._compact_staging"
     backup = path.rstrip("/") + "._compact_old"
     _recover_interrupted(path, staging, backup)
-    plan = plan_compaction(path, target_file_bytes)
+    plan = plan_compaction(path)
     if not plan["compact"]:
         return {**plan, "rewritten": False}
     df = spark.read.parquet(path)

@@ -691,224 +691,164 @@ def run_dead_letter(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     )
 
 
-# Bucket count of the sinks' state tables — the partition grain:
-# production sizes it so one bucket's state fits an executor
-# (state_bytes / ~256MB); locally 8 keeps per-batch task/file overhead
-# low.
-_SINK_BUCKETS = 8
+def _commit(df: DataFrame, path: str, col: str) -> None:
+    """THE write path of every exactly-once sink: freeze ``df`` (the
+    write must never re-read the target files it replaces), then
+    replace ONLY the ``col`` partitions it holds (dynamic partition
+    overwrite). Partitioned by batch_id, a redelivered micro-batch
+    overwrites its own partitions instead of appending duplicates."""
+    (
+        df.localCheckpoint(eager=True)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(col)
+        .parquet(path)
+    )
 
 
-class StatusUpsertSink:
-    """S12 analog: MERGE-style latest-status upsert via foreachBatch.
+def _committed(spark: SparkSession, path: str, col: str, schema: str) -> DataFrame:
+    """THE read path of every exactly-once sink: the table `_commit`
+    wrote under ``path`` (``col`` included), or an empty frame of
+    ``schema`` before its first commit. State on disk IS state, so a
+    sink restarted after a crash resumes from here."""
+    if not glob.glob(os.path.join(path, f"{col}=*")):
+        return spark.createDataFrame([], schema)
+    return spark.read.parquet(path)
 
-    Maintains a keyed status table ((item_id, column_id) -> label) as
-    a parquet directory PARTITIONED BY ``bucket = item_id % n_buckets``.
-    Each micro-batch merges previous state with the batch's
-    latest-per-key rows and rewrites ONLY the buckets the batch
-    touched (dynamic partition overwrite) — per-batch work is
-    O(touched buckets' state), not O(total state), which is what makes
-    the sink viable when the state table is 100 TB-scale. In a real
-    deployment this is a Delta/Iceberg MERGE; vanilla-Spark dynamic
-    overwrite keeps the same idempotent, exactly-once-per-key
-    semantics.
+
+class _BucketMergeSink:
+    """Keyed MERGE core of StatusUpsertSink and RollupSink. State is a
+    parquet table PARTITIONED BY ``bucket`` (the sink's `_bucket` of
+    its key) and a micro-batch rewrites ONLY the buckets it touched:
+    per-batch work is O(touched buckets' state), not O(total state),
+    which keeps the sink viable at 100 TB of state (a Delta/Iceberg
+    MERGE in a real deployment).
+
+    Per batch: `_reduce` the batch to one row per key and materialize
+    that ONCE — the touched buckets are collected from it, so the batch
+    is scanned and aggregated once. Only those buckets of the committed
+    state are read, unioned with the reduced batch, reduced AGAIN (the
+    reduce is associative, so the MERGE is batch-order independent)
+    and `_commit`ted; the first commit writes the reduced batch as is.
+    The repartition by bucket before the commit keeps one file per
+    bucket per batch: partitionBy from N shuffle partitions would emit
+    up to N, and every later batch re-reads that long tail — file count
+    is what makes rewrite-MERGE state tables rot at scale.
+
+    Replay guard (``_GUARDED``, fixed per sink): foreachBatch is
+    at-least-once, so a crash between the parquet commit and the
+    checkpoint commit re-delivers the batch with the same
+    ``batch_id``. Latest-wins is immune; an additive MERGE would
+    double-count. A guarded sink stamps each bucket it rewrites with
+    ``applied_batch_id = batch_id`` and merges only touched buckets
+    whose stamp is still behind. A rewrite replaces a WHOLE bucket
+    partition atomically, so the stamp is exact even when a crash
+    lands mid-write with some touched buckets committed and others not.
     """
 
-    n_buckets = _SINK_BUCKETS
+    # Bucket count of the state table — the partition grain: production
+    # sizes it so one bucket's state fits an executor (state_bytes /
+    # ~256MB); locally 8 keeps per-batch task/file overhead low.
+    n_buckets = 8
+    _GUARDED = False
 
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path
-        # survive a restart-after-crash: state on disk IS state (the
-        # latest-wins MERGE is replay-idempotent, but a restarted sink
-        # must not treat its first delivery as a from-scratch write)
-        self._has_state = bool(glob.glob(os.path.join(self.path, "bucket=*")))
+
+    def current(self) -> DataFrame:
+        state = _committed(self.spark, self.path, "bucket", self._SCHEMA)
+        return state.drop("bucket", "applied_batch_id")
+
+    @staticmethod
+    def _rows(batch: DataFrame) -> DataFrame:
+        return batch
+
+    def _bucketed(self, df: DataFrame) -> DataFrame:
+        return df.withColumn("bucket", self._bucket().cast("int"))
+
+    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+        new = self._bucketed(self._reduce(self._rows(batch)))
+        prev = _committed(self.spark, self.path, "bucket", self._SCHEMA)
+        if prev.inputFiles():  # committed state to merge with
+            new = new.localCheckpoint(eager=True)
+            touched = {r["bucket"] for r in new.select("bucket").distinct().collect()}
+            prev = prev.where(F.col("bucket").isin(list(touched)))
+            if self._GUARDED:
+                applied = prev.where(F.col("applied_batch_id") >= batch_id).select("bucket")
+                todo = sorted(touched - {r["bucket"] for r in applied.distinct().collect()})
+                if not todo:
+                    return
+                prev, new = (df.where(F.col("bucket").isin(todo)) for df in (prev, new))
+            new = self._bucketed(
+                self._reduce(
+                    prev.drop("bucket", "applied_batch_id").unionByName(new.drop("bucket"))
+                )
+            )
+        if self._GUARDED:
+            new = new.withColumn("applied_batch_id", F.lit(batch_id).cast("bigint"))
+        _commit(new.repartition(self.n_buckets, "bucket"), self.path, "bucket")
+
+
+class StatusUpsertSink(_BucketMergeSink):
+    """S12 analog: latest-status upsert of (item_id, column_id) -> label
+    via foreachBatch, bucketed by ``item_id % n_buckets``."""
 
     _SCHEMA = "item_id BIGINT, column_id STRING, status STRING, updated_at TIMESTAMP"
 
-    def current(self) -> DataFrame:
-        if not self._has_state:
-            return self.spark.createDataFrame([], self._SCHEMA)
-        return self.spark.read.parquet(self.path).drop("bucket")
-
-    def _bucketed(self, df: DataFrame) -> DataFrame:
-        return df.withColumn("bucket", (F.col("item_id") % self.n_buckets).cast("int"))
+    def _bucket(self):
+        return F.col("item_id") % self.n_buckets
 
     @staticmethod
-    def _latest_per_key(df: DataFrame) -> DataFrame:
+    def _reduce(df: DataFrame) -> DataFrame:
         # top-1 per key under (updated_at DESC, status DESC) as a
         # max-of-struct aggregation: lexicographic struct max IS that
-        # total order, and unlike row_number it partial-aggregates
-        # map-side (no per-key sort, ~|keys| rows shuffled instead of
-        # all rows) and is associative — merging previous winners with
-        # a new batch is the same operator, so the MERGE stays
-        # batch-order independent.
+        # total order, and unlike row_number it is associative and
+        # partial-aggregates map-side (no per-key sort, ~|keys| rows
+        # shuffled instead of all rows).
         return df.groupBy("item_id", "column_id").agg(
             F.max(F.struct("updated_at", "status")).alias("_top")
         ).select("item_id", "column_id", "_top.status", "_top.updated_at")
 
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        latest = self._bucketed(self._latest_per_key(batch))
-        if self._has_state:
-            # r19: materialize the AGGREGATED batch (|keys| rows, tiny)
-            # once, then derive the touched-bucket list from it. The
-            # r18 shape collected touched off the raw batch instead —
-            # that was one extra full scan of the batch file per batch,
-            # and the un-materialized `latest` re-ran its aggregation a
-            # second time inside `merged`'s execution. One batch scan +
-            # one batch agg total; the key set (hence bucket set) is
-            # identical by definition of GROUP BY.
-            latest = latest.localCheckpoint(eager=True)
-            touched = [r["bucket"] for r in latest.select("bucket").distinct().collect()]
-            prev = self.spark.read.parquet(self.path).where(F.col("bucket").isin(touched))
-            merged = self._bucketed(self._latest_per_key(prev.unionByName(latest)))
-        else:
-            merged = latest
-        merged = merged.repartition(self.n_buckets, "bucket")
-        if self._has_state:
-            # sever lineage back to the target files being overwritten —
-            # the write must never re-read self.path (the no-state first
-            # batch has no such lineage and skips the materialization)
-            merged = merged.localCheckpoint(eager=True)
-        # One write per touched bucket per batch: dynamic partition
-        # overwrite replaces ONLY the touched bucket partitions. No
-        # staging copy: write amplification per micro-batch is 1x the
-        # touched buckets' state, the floor for a rewrite-based MERGE.
-        # The repartition before each materialization clusters by
-        # bucket: partitionBy from N shuffle partitions would emit up
-        # to N files per bucket per batch, and every later batch
-        # re-reads that long tail — file count is what makes
-        # rewrite-MERGE state tables rot at scale.
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.path)
-        )
-        self._has_state = True
 
-
-class RollupSink:
+class RollupSink(_BucketMergeSink):
     """Incrementally-maintained aggregate table (streaming materialized
-    view): per micro-batch, partial aggregates MERGE-ADD into a keyed
-    rollup table — the additive counterpart of StatusUpsertSink's
-    latest-wins MERGE (counts/sums combine across batches; a status
-    replaces). The serving table always equals the batch groupBy over
-    everything ingested so far (asserted in tests/test_streaming.py).
-
-    Scale shape mirrors the upsert sink: state partitioned by
-    bucket(key), each batch rewrites ONLY touched buckets (dynamic
-    partition overwrite), batch work = batch partials + touched
-    buckets' existing rows. Additivity is what makes this safe:
-    merging partials is the SAME aggregation, so batch boundaries
-    can't change the result. In a real deployment this is the
-    foreachBatch + Delta-MERGE pattern for driving dashboards off a
-    stream without re-scanning history.
-
-    Replay idempotency: foreachBatch is AT-LEAST-ONCE — after a crash
-    between the parquet commit and the checkpoint commit, the
-    restarted query re-delivers the same micro-batch with the same
-    ``batch_id``, and a naive additive MERGE would double-count it
-    (latest-wins merges like StatusUpsertSink's are naturally immune;
-    additive ones are not). Every bucket rewrite therefore stamps the
-    bucket's rows with ``applied_batch_id = batch_id``; on delivery,
-    buckets whose stamp is already >= batch_id are skipped, and only
-    still-behind buckets merge+rewrite. Because a rewrite replaces the
-    WHOLE bucket partition atomically (one parquet overwrite per
-    partition directory), the stamp is exact even when a crash lands
-    mid-write with some touched buckets committed and others not.
+    view): hourly (window_start, event_type) counts and micro-unit
+    value sums MERGE-ADD per micro-batch, so the table always equals
+    the batch groupBy over everything ingested (tests/test_streaming.py).
+    Each event becomes a (key, 1, micros) row and one sum per key
+    reduces raw rows and merges partials alike — batch boundaries can't
+    change the result. Additive, hence ``_GUARDED``.
     """
 
-    _KEYS = ("window_start", "event_type")
+    _SCHEMA = "window_start TIMESTAMP, event_type STRING, n_events BIGINT, sum_micros BIGINT"
+    _GUARDED = True
 
-    n_buckets = _SINK_BUCKETS
+    def _bucket(self):
+        return F.pmod(F.xxhash64("window_start", "event_type"), F.lit(self.n_buckets))
 
-    def __init__(self, spark: SparkSession, path: str) -> None:
-        self.spark = spark
-        self.path = path
-        # survive a restart-after-crash: state on disk IS state
-        self._has_state = bool(glob.glob(os.path.join(self.path, "bucket=*")))
-
-    def current(self) -> DataFrame:
-        if not self._has_state:
-            return self.spark.createDataFrame(
-                [], "window_start TIMESTAMP, event_type STRING, n_events BIGINT, sum_micros BIGINT"
-            )
-        return self.spark.read.parquet(self.path).drop("bucket", "applied_batch_id")
-
-    def _bucketed(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "bucket", F.pmod(F.xxhash64("window_start", "event_type"), F.lit(self.n_buckets)).cast("int")
+    @staticmethod
+    def _rows(batch: DataFrame) -> DataFrame:
+        return batch.select(
+            F.date_trunc("hour", F.col("ts")).alias("window_start"),
+            "event_type",
+            F.lit(1).cast("bigint").alias("n_events"),
+            F.floor(F.col("value") * 1_000_000).cast("bigint").alias("sum_micros"),
         )
 
     @staticmethod
-    def _partials(df: DataFrame) -> DataFrame:
-        return df.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("window_start"), "event_type"
-        ).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.floor(F.col("value") * 1_000_000).cast("bigint")).alias("sum_micros"),
-        )
-
-    @staticmethod
-    def _combine(df: DataFrame) -> DataFrame:
-        # additive merge — the same aggregation applied to partials
+    def _reduce(df: DataFrame) -> DataFrame:
         return df.groupBy("window_start", "event_type").agg(
             F.sum("n_events").alias("n_events"),
             F.sum("sum_micros").alias("sum_micros"),
         )
 
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        partial = self._bucketed(self._partials(batch))
-        if self._has_state:
-            touched = [
-                r["bucket"] for r in partial.select("bucket").distinct().collect()
-            ]
-            # every bucket file this sink writes carries the stamp
-            prev = self.spark.read.parquet(self.path).where(F.col("bucket").isin(touched))
-            # replay guard: a touched bucket already stamped with this
-            # (or a later) batch_id has applied this delivery — skip it
-            done = {
-                r["bucket"]
-                for r in prev.where(F.col("applied_batch_id") >= batch_id)
-                .select("bucket")
-                .distinct()
-                .collect()
-            }
-            todo = [b for b in touched if b not in done]
-            if not todo:
-                return
-            prev_todo = prev.where(F.col("bucket").isin(todo))
-            partial_todo = partial.where(F.col("bucket").isin(todo))
-            merged = self._bucketed(
-                self._combine(
-                    prev_todo.drop("bucket", "applied_batch_id").unionByName(
-                        partial_todo.drop("bucket")
-                    )
-                )
-            )
-        else:
-            merged = partial
-        merged = merged.withColumn(
-            "applied_batch_id", F.lit(batch_id).cast("bigint")
-        ).repartition(self.n_buckets, "bucket")
-        if self._has_state:
-            # sever lineage back to the target files being overwritten
-            # (the no-state first batch reads nothing from self.path)
-            merged = merged.localCheckpoint(eager=True)
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.path)
-        )
-        self._has_state = True
 
-
-def run_rollup_sink(spark: SparkSession, sf_dir: str, n_splits: int = 6) -> DataFrame:
-    """Drive RollupSink across ``n_splits`` real micro-batches and
-    return the maintained table."""
+def run_rollup_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Drive RollupSink across 6 real micro-batches and return the
+    maintained table."""
     sink = RollupSink(spark, owned_tempdir("rollup_"))
-    _drain_in_splits(load_table(spark, sf_dir, "events"), n_splits, sink.process_batch)
+    _drain_in_splits(load_table(spark, sf_dir, "events"), 6, sink.process_batch)
     return sink.current()
 
 
@@ -926,15 +866,9 @@ def derive_statuses(events: DataFrame) -> DataFrame:
 
 
 def run_status_upsert(spark: SparkSession, sf_dir: str, n_splits: int = 4) -> DataFrame:
-    """Drive StatusUpsertSink with a multi-micro-batch status stream and
-    return the final merged state.
-
-    The sink MERGEs across ``n_splits`` real micro-batches
-    (`_drain_in_splits`). The final state is batch-order independent:
-    per-key top-1 under the total order (updated_at DESC, status DESC)
-    is associative, so any split yields the same table — which is what
-    the driver's latest-per-key SQL oracle computes directly.
-    """
+    """Drive StatusUpsertSink across ``n_splits`` real micro-batches
+    and return the final merged state: any split yields the table the
+    driver's latest-per-key SQL oracle computes directly."""
     sink = StatusUpsertSink(spark, owned_tempdir("status_upsert_"))
     statuses = derive_statuses(load_table(spark, sf_dir, "events"))
     _drain_in_splits(statuses, n_splits, sink.process_batch)
@@ -948,15 +882,12 @@ class DedupIngestSink:
     first-sight documents land in the corpus.
 
     Exactly-once without a transaction log: both outputs are
-    PARTITIONED BY batch_id and written with dynamic partition
-    overwrite, so a replayed delivery (foreachBatch is at-least-once)
-    overwrites its own partition with identical bytes instead of
-    appending duplicates. The dedup decision reads the index
-    RESTRICTED to batch_id < current — a crash that committed this
-    batch's index partition but not its corpus partition (or vice
-    versa) therefore cannot change what the replay computes: the
-    replay sees exactly the pre-batch state, recomputes the same
-    keeper set, and overwrites both partitions deterministically.
+    PARTITIONED BY batch_id and `_commit`ted, so a redelivery overwrites
+    its own partitions instead of appending duplicates. The dedup
+    decision reads the index RESTRICTED to batch_id < current, so a
+    crash between the two writes cannot change what the replay
+    computes: it sees exactly the pre-batch state and rewrites both
+    partitions deterministically.
 
     Dedup semantics are ARRIVAL-ordered: a duplicate keeps the keeper
     from the earliest batch that carried its hash (within a batch, the
@@ -974,61 +905,46 @@ class DedupIngestSink:
 
     def __init__(self, spark: SparkSession, base_path: str) -> None:
         self.spark = spark
-        self.base_path = base_path
-        self.corpus_path = os.path.join(self.base_path, "corpus")
-        self.index_path = os.path.join(self.base_path, "index")
+        self.corpus_path = os.path.join(base_path, "corpus")
+        self.index_path = os.path.join(base_path, "index")
 
     def _index_before(self, batch_id: int) -> DataFrame:
-        if not glob.glob(os.path.join(self.index_path, "batch_id=*")):
-            return self.spark.createDataFrame(
-                [], "text_hash STRING, keeper_doc_id BIGINT, batch_id BIGINT"
-            )
         # crash-replay safety: never let this delivery's own (possibly
         # half-committed) partition influence its dedup decision
-        return self.spark.read.parquet(self.index_path).where(F.col("batch_id") < batch_id)
+        index = _committed(
+            self.spark, self.index_path, "batch_id", "text_hash STRING, keeper_doc_id BIGINT, batch_id BIGINT"
+        )
+        return index.where(F.col("batch_id") < batch_id)
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         hashed = batch.withColumn("text_hash", F.expr(self._HASH))
         # within-batch keepers: min doc_id per hash (one shuffle on the
         # 128-bit hash — no text comparison anywhere)
-        keepers = (
-            hashed.groupBy("text_hash")
-            .agg(F.min("doc_id").alias("keeper_doc_id"))
-        )
+        keepers = hashed.groupBy("text_hash").agg(F.min("doc_id").alias("keeper_doc_id"))
         fresh = keepers.join(
             self._index_before(batch_id).select("text_hash"), "text_hash", "left_anti"
         ).withColumn("batch_id", F.lit(batch_id).cast("bigint"))
-        new_docs = (
-            hashed.join(
-                fresh.select("text_hash", F.col("keeper_doc_id").alias("_k")), "text_hash"
-            )
-            .where(F.col("doc_id") == F.col("_k"))
-            .drop("_k", "text_hash")
-            .withColumn("batch_id", F.lit(batch_id).cast("bigint"))
-        )
-        for df, path in ((fresh, self.index_path), (new_docs, self.corpus_path)):
-            (
-                df.localCheckpoint(eager=True)  # decision must not re-read target paths mid-write
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
+        new_docs = hashed.join(
+            fresh.select("text_hash", F.col("keeper_doc_id").alias("doc_id"), "batch_id"),
+            ["text_hash", "doc_id"],
+        ).drop("text_hash")
+        _commit(fresh, self.index_path, "batch_id")
+        _commit(new_docs, self.corpus_path, "batch_id")
 
     def corpus(self) -> DataFrame:
-        if not glob.glob(os.path.join(self.corpus_path, "batch_id=*")):
-            return self.spark.createDataFrame([], "doc_id BIGINT, text STRING")
-        return self.spark.read.parquet(self.corpus_path).drop("batch_id")
+        return _committed(
+            self.spark, self.corpus_path, "batch_id", "doc_id BIGINT, text STRING"
+        ).drop("batch_id")
 
     def index(self) -> DataFrame:
         return self._index_before(1 << 62)
 
 
 def run_dedup_ingest(
-    spark: SparkSession, sf_dir: str, n_splits: int = 4, sink: DedupIngestSink | None = None
+    spark: SparkSession, sf_dir: str, sink: DedupIngestSink | None = None
 ) -> DataFrame:
-    """Drive DedupIngestSink over the documents table split into
-    ``n_splits`` real micro-batches; returns the deduplicated corpus."""
+    """Drive DedupIngestSink over the documents table split into 4 real
+    micro-batches; returns the deduplicated corpus."""
     sink = sink or DedupIngestSink(spark, owned_tempdir("dedup_ingest_"))
-    _drain_in_splits(load_table(spark, sf_dir, "documents"), n_splits, sink.process_batch)
+    _drain_in_splits(load_table(spark, sf_dir, "documents"), 4, sink.process_batch)
     return sink.corpus()

@@ -1,24 +1,19 @@
 """Exactly-once streaming maintenance of the embedding indexes.
 
-``VectorIngestSink`` is the vector-side twin of
-``streaming.pipeline.DedupIngestSink``: a `foreachBatch` consumer that
-takes a stream of (vec_id, embedding, label) rows and keeps the FIVE
-index tables a similarity-search service reads — the vectors
-themselves, LSH bucket rows, the IVF inverted-list assignment, PQ
-codes, and IVF-PQ residual codes — continuously up to date against
-the FROZEN quantizers trained on the base corpus snapshot
-(`plans/embed_ingest.py`).
+``VectorIngestSink`` is a `foreachBatch` consumer that takes a stream
+of (vec_id, embedding, label) rows and keeps the FIVE index tables a
+similarity-search service reads — the vectors themselves, LSH bucket
+rows, the IVF inverted-list assignment, PQ codes, and IVF-PQ residual
+codes — continuously up to date against the FROZEN quantizers trained
+on the base corpus snapshot (`plans/embed_ingest.py`).
 
-Exactly-once without a transaction log, same scheme as
-DedupIngestSink: every output is PARTITIONED BY batch_id and written
-with dynamic partition overwrite, so an at-least-once redelivery
-overwrites its own partitions with identical bytes. The only
-cross-batch decision — skipping vec_ids already ingested — reads the
-vectors table RESTRICTED to batch_id < current, so a crash that
-committed some of this batch's partitions but not others cannot
-change what the replay computes: it sees exactly the pre-batch state,
-re-derives the same fresh set (encoding against a frozen quantizer is
-deterministic), and overwrites every partition deterministically.
+Exactly-once the way ``streaming.pipeline.DedupIngestSink`` is:
+every output is PARTITIONED BY batch_id and written through the sinks'
+one commit path (``_commit``), and the only cross-batch decision —
+skipping vec_ids already ingested — reads the vectors table through
+``_committed`` RESTRICTED to batch_id < current, so a replay after a
+partial commit re-derives the same fresh set (encoding against a
+frozen quantizer is deterministic) and overwrites every partition.
 Within a batch, a duplicated vec_id resolves to the min (label,
 embedding) struct — a total, deterministic pick (Spark arrays are
 orderable), so retries of a dirty batch converge too.
@@ -33,7 +28,6 @@ partitions are touched.
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,6 +39,7 @@ from monday_etl_automation_spark.plans.embed_ingest import (
     ivfpq_encode_batch,
     pq_encode_batch,
 )
+from monday_etl_automation_spark.streaming.pipeline import _commit, _committed
 
 _VEC_SCHEMA = "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
 
@@ -53,20 +48,17 @@ class VectorIngestSink:
     def __init__(self, spark: SparkSession, sf_dir: str, base_path: str):
         self.spark = spark
         self.sf_dir = sf_dir  # the snapshot whose trained quantizers encode every batch
-        self.base_path = base_path
-        self.vectors_path = os.path.join(self.base_path, "vectors")
-        self.buckets_path = os.path.join(self.base_path, "buckets")
-        self.ivf_path = os.path.join(self.base_path, "ivf")
-        self.codes_path = os.path.join(self.base_path, "codes")
-        self.ivfpq_path = os.path.join(self.base_path, "ivfpq")
+        self.vectors_path = os.path.join(base_path, "vectors")
+        self.buckets_path = os.path.join(base_path, "buckets")
+        self.ivf_path = os.path.join(base_path, "ivf")
+        self.codes_path = os.path.join(base_path, "codes")
+        self.ivfpq_path = os.path.join(base_path, "ivfpq")
 
     def _ids_before(self, batch_id: int) -> DataFrame:
-        if not glob.glob(os.path.join(self.vectors_path, "batch_id=*")):
-            return self.spark.createDataFrame([], "vec_id BIGINT")
         # crash-replay safety: this delivery's own (possibly partial)
         # partitions must never influence its own fresh-set decision
         return (
-            self.spark.read.parquet(self.vectors_path)
+            _committed(self.spark, self.vectors_path, "batch_id", "vec_id BIGINT, batch_id BIGINT")
             .where(F.col("batch_id") < batch_id)
             .select("vec_id")
         )
@@ -99,19 +91,10 @@ class VectorIngestSink:
             ),
         )
         for df, path in outputs:
-            (
-                df.withColumn("batch_id", F.lit(batch_id).cast("bigint"))
-                .localCheckpoint(eager=True)  # freeze before touching target paths
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
+            _commit(df.withColumn("batch_id", F.lit(batch_id).cast("bigint")), path, "batch_id")
 
     def _read(self, path: str, empty_schema: str) -> DataFrame:
-        if not glob.glob(os.path.join(path, "batch_id=*")):
-            return self.spark.createDataFrame([], empty_schema)
-        return self.spark.read.parquet(path).drop("batch_id")
+        return _committed(self.spark, path, "batch_id", empty_schema).drop("batch_id")
 
     def vectors(self) -> DataFrame:
         return self._read(self.vectors_path, _VEC_SCHEMA)

@@ -29,12 +29,11 @@ def test_bucketed_join_no_exchange_and_equal_results(spark, sf_dir, no_broadcast
     lineitem = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_extendedprice"
     )
-    write_bucketed(orders, "b_orders", ["o_orderkey"], 8, sort_cols=["o_orderkey"])
+    write_bucketed(orders, "b_orders", ["o_orderkey"], sort_cols=["o_orderkey"])
     write_bucketed(
         lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
         "b_lineitem",
         ["o_orderkey"],
-        8,
         sort_cols=["o_orderkey"],
     )
     joined = bucketed_join(spark, "b_orders", "b_lineitem", ["o_orderkey"])
@@ -56,7 +55,7 @@ def test_bucketed_aggregation_no_exchange(spark, sf_dir, no_broadcast):
     """groupBy on the bucket key rides the bucket partitioning too —
     no Exchange before the aggregate."""
     lineitem = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed(lineitem, "b_li_agg", ["l_orderkey"], 8)
+    write_bucketed(lineitem, "b_li_agg", ["l_orderkey"])
     agg = (
         spark.table("b_li_agg")
         .groupBy("l_orderkey")

@@ -21,8 +21,8 @@ def layouts(spark, sf_dir, tmp_path_factory):
         "l_orderkey", "l_partkey", "l_quantity"
     )
     z, lin = str(base / "zorder"), str(base / "linear")
-    zorder_write(df, z, ("l_orderkey", "l_partkey"), n_files=_N_FILES)
-    linear_write(df, lin, "l_orderkey", n_files=_N_FILES)
+    zorder_write(df, z, ("l_orderkey", "l_partkey"))
+    linear_write(df, lin, "l_orderkey")
     return df.localCheckpoint(eager=True), z, lin
 
 

@@ -102,7 +102,7 @@ def test_real_size_model_contract():
     real backend (no closed form for real JPEG sizes) — pin that the
     contract error, not an AttributeError, is what callers see."""
     with pytest.raises(NotImplementedError):
-        codecs_real.compressed_pdf_size(1000, "balanced")
+        codecs_real.compressed_pdf_size(1000)
 
 
 def test_resolve_name_and_real_import_error():

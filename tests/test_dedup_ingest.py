@@ -86,7 +86,7 @@ def test_ingest_stream_replay_matches_batch_dedup(spark, sf_dir, tmp_path):
     from monday_etl_automation_spark.streaming.pipeline import run_dedup_ingest
 
     sink = DedupIngestSink(spark, str(tmp_path / "s4"))
-    corpus = run_dedup_ingest(spark, sf_dir, n_splits=4, sink=sink)
+    corpus = run_dedup_ingest(spark, sf_dir, sink=sink)
     got_ids = sorted(r.doc_id for r in corpus.select("doc_id").collect())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")

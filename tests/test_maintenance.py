@@ -26,14 +26,14 @@ def test_compact_unpartitioned(spark, sf_dir, tmp_path):
     before = sorted(map(tuple, spark.read.parquet(path).collect()))
     assert dir_stats(path)["n_files"] == 64
 
-    out = compact_parquet(spark, path, target_file_bytes=64 * 1024 * 1024)
+    out = compact_parquet(spark, path)
     assert out["rewritten"]
     assert out["after_n_files"] < 64
     after = sorted(map(tuple, spark.read.parquet(path).collect()))
     assert after == before
 
     # idempotent: second run is a metadata-only no-op
-    out2 = compact_parquet(spark, path, target_file_bytes=64 * 1024 * 1024)
+    out2 = compact_parquet(spark, path)
     assert not out2["rewritten"]
 
 
@@ -46,9 +46,7 @@ def test_compact_partitioned_preserves_layout(spark, sf_dir, tmp_path):
     before = sorted(map(tuple, spark.read.parquet(path).collect()))
     n_before = dir_stats(path)["n_files"]
 
-    out = compact_parquet(
-        spark, path, target_file_bytes=64 * 1024 * 1024, partition_by=["etype"]
-    )
+    out = compact_parquet(spark, path, partition_by=["etype"])
     assert out["rewritten"]
     assert out["after_n_files"] < n_before
     # Hive layout preserved: partition dirs still present, readers
@@ -63,7 +61,7 @@ def test_compact_partitioned_preserves_layout(spark, sf_dir, tmp_path):
 def test_plan_compaction_is_metadata_only(spark, sf_dir, tmp_path):
     path = str(tmp_path / "tiny")
     load_table(spark, sf_dir, "events").limit(100).repartition(10).write.parquet(path)
-    plan = plan_compaction(path, target_file_bytes=1024 * 1024 * 1024)
+    plan = plan_compaction(path)
     assert plan["n_files"] == 10
     assert plan["target_files"] == 1
     assert plan["compact"]
@@ -86,7 +84,7 @@ def test_compact_recovers_from_crash_leftovers(spark, sf_dir, tmp_path):
 
     # (a) crash between the two renames: only the backup exists
     os.rename(path, backup)
-    out = compact_parquet(spark, path, target_file_bytes=64 * 1024 * 1024)
+    out = compact_parquet(spark, path)
     assert out["rewritten"]
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
     assert not os.path.exists(backup) and not os.path.exists(staging)
@@ -95,7 +93,7 @@ def test_compact_recovers_from_crash_leftovers(spark, sf_dir, tmp_path):
     ev.repartition(8).write.mode("overwrite").parquet(path)
     shutil.copytree(path, backup)
     shutil.copytree(path, staging)
-    out = compact_parquet(spark, path, target_file_bytes=64 * 1024 * 1024)
+    out = compact_parquet(spark, path)
     assert out["rewritten"]
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
     assert not os.path.exists(backup) and not os.path.exists(staging)

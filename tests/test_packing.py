@@ -47,7 +47,7 @@ def test_packing_fill_efficiency(spark, sf_dir):
     (measured ~0.97) that still catches a degenerate
     one-chunk-per-sequence regression."""
     packed = pack_sequences(spark, sf_dir, budget=_BUDGET)
-    stats = packing_stats(packed, budget=_BUDGET).collect()[0]
+    stats = packing_stats(packed).collect()[0]
     assert stats.max_seq_tokens <= _BUDGET
     assert stats.fill_ratio >= 0.85, f"fill ratio {stats.fill_ratio:.3f}"
 

@@ -109,6 +109,28 @@ def test_no_literal_createdataframe_in_plans(tmp_path):
     assert len(createdataframe_literal_hits(str(tmp_path))) == 1
 
 
+def test_sinks_commit_only_through_the_helpers(tmp_path):
+    """The gate's static rule, run in tier-1 too: no package code sets
+    ``partitionOverwriteMode`` or globs a ``col=*`` partition dir
+    outside ``streaming/pipeline.py:_commit`` / ``_committed``. The rule
+    itself must catch a planted offender."""
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    sys.path.insert(0, str(root / "tools"))
+    try:
+        from gate import sink_commit_hits
+    finally:
+        sys.path.remove(str(root / "tools"))
+    assert sink_commit_hits(str(root / "monday_etl_automation_spark")) == []
+    (tmp_path / "offender.py").write_text(
+        "df.write.option('partitionOverwriteMode', 'dynamic').partitionBy('b').parquet(p)\n"
+        "files = glob.glob(os.path.join(p, '*.parquet'))\n"
+    )
+    assert len(sink_commit_hits(str(tmp_path))) == 1
+
+
 def test_gate_rejects_unknown_arguments(monkeypatch, capsys):
     """``tools/gate.py --help`` prints its usage and exits 2 before any
     step (static checks, driver_sim, strict_compare, pytest) starts."""
@@ -132,6 +154,31 @@ def test_gate_rejects_unknown_arguments(monkeypatch, capsys):
     assert "usage: python tools/gate.py [--full]" in capsys.readouterr().err
 
 
+# Defaulted parameters that only tests set, each with the code path
+# it forces. Every other test-only knob is a constant.
+TEST_ONLY_SEAMS = {
+    "load_merges(path)": "loads the 8k merges artifact or a written merges file",
+    "salted_join_hot_only(how)": "the LEFT join (unmatched cold rows survive the split)",
+    "salted_join_hot_only(salt_on)": "the column-derived (retry-stable) salt",
+    "salted_aggregate(salt_on)": "the column-derived (retry-stable) salt",
+    "_converge_components(local_max_edges)": "the distributed label-propagation loop",
+    "pack_sequences(chunk_size)": "the oversize-chunk rejection",
+    "pack_sequences(counter)": "BPE token counts",
+    "release_training_corpus(pack_budget)": "a budget that fits BPE chunks (>= word counts)",
+    "release_training_corpus(tokenizer)": "the tokenized (BPE) release",
+    "release_training_corpus(merges)": "the production-vocab Arrow tokenizer",
+    "release_training_corpus(eod)": "EOD ids at every doc_span boundary",
+    "quality_floor_sample(keep_frac)": "the keep-fraction sweep",
+    "quality_floor_sample_oracle(keep_frac)": "the keep-fraction sweep",
+    "chunk_oracle(counter)": "the BPE chunker oracle",
+    "encode_documents(merges)": "the vectorized Arrow BPE path",
+    "write_bucketed(sort_cols)": "the sortBy layout",
+    "compact_parquet(partition_by)": "the partitioned (Hive layout) rewrite",
+    "tumbling_counts(watermark)": "a watermark wide enough for a many-batch replay",
+    "run_dedup_ingest(sink)": "reading the index the replay wrote",
+}
+
+
 def test_every_default_parameter_has_a_caller():
     """Every defaulted parameter of a package function or constructor
     is set — by keyword or by position — by some call in the package,
@@ -139,18 +186,16 @@ def test_every_default_parameter_has_a_caller():
     ``__spark_entry__.py``. A knob no caller turns is a constant; keep
     it as one. Callees match by bare name, and a function referenced
     other than by a direct call (``pool.submit(fn)``, ``partial``,
-    ``foreachBatch(sink.process_batch)``) counts as fully set."""
+    ``foreachBatch(sink.process_batch)``) counts as fully set.
+
+    Scanned again with ``tests/`` left out, the knobs only tests set
+    must be exactly ``TEST_ONLY_SEAMS``: a test-only knob that forces
+    no path a test checks is a constant too."""
     import ast
     from pathlib import Path
 
     root = Path(__file__).resolve().parents[1]
     pkg = sorted((root / "monday_etl_automation_spark").rglob("*.py"))
-    scope = [
-        *pkg,
-        *(p for d in ("tools", "perfbench", "tests") for p in sorted((root / d).rglob("*.py"))),
-        root / "bench.py",
-        root / "__spark_entry__.py",
-    ]
 
     def defaulted(fn, shift):
         a = fn.args
@@ -176,37 +221,50 @@ def test_every_default_parameter_has_a_caller():
                 for arg, idx in defaulted(fn, 0):
                     knobs.append((f"{path.name}:{fn.lineno}", fn.name, arg, idx))
 
-    keywords: dict[str, set[str]] = {}
-    n_positional: dict[str, int] = {}
-    opaque: set[str] = set()
-    for path in scope:
-        tree = ast.parse(path.read_text())
-        callees = set()
-        for call in (n for n in ast.walk(tree) if isinstance(n, ast.Call)):
-            f = call.func
-            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-            if name is None:
-                continue
-            callees.add(f)
-            if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
-                opaque.add(name)
-            keywords.setdefault(name, set()).update(k.arg for k in call.keywords)
-            n_positional[name] = max(n_positional.get(name, 0), len(call.args))
-        for n in ast.walk(tree):
-            if n not in callees and isinstance(getattr(n, "ctx", None), ast.Load):
-                if isinstance(n, ast.Name):
-                    opaque.add(n.id)
-                elif isinstance(n, ast.Attribute):
-                    opaque.add(n.attr)
+    def never_set(dirs):
+        scope = [
+            *pkg,
+            *(p for d in dirs for p in sorted((root / d).rglob("*.py"))),
+            root / "bench.py",
+            root / "__spark_entry__.py",
+        ]
+        keywords: dict[str, set[str]] = {}
+        n_positional: dict[str, int] = {}
+        opaque: set[str] = set()
+        for path in scope:
+            tree = ast.parse(path.read_text())
+            callees = set()
+            for call in (n for n in ast.walk(tree) if isinstance(n, ast.Call)):
+                f = call.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name is None:
+                    continue
+                callees.add(f)
+                if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
+                    opaque.add(name)
+                keywords.setdefault(name, set()).update(k.arg for k in call.keywords)
+                n_positional[name] = max(n_positional.get(name, 0), len(call.args))
+            for n in ast.walk(tree):
+                if n not in callees and isinstance(getattr(n, "ctx", None), ast.Load):
+                    if isinstance(n, ast.Name):
+                        opaque.add(n.id)
+                    elif isinstance(n, ast.Attribute):
+                        opaque.add(n.attr)
+        return {
+            f"{name}({arg})": where
+            for where, name, arg, idx in knobs
+            if name not in opaque
+            and arg not in keywords.get(name, ())
+            and (idx is None or idx >= n_positional.get(name, 0))
+        }
 
-    never = [
-        f"{where} {name}({arg})"
-        for where, name, arg, idx in knobs
-        if name not in opaque
-        and arg not in keywords.get(name, ())
-        and (idx is None or idx >= n_positional.get(name, 0))
-    ]
-    assert never == [], f"{len(never)} defaulted parameters no caller sets: {never}"
+    never = never_set(("tools", "perfbench", "tests"))
+    assert never == {}, f"{len(never)} defaulted parameters no caller sets: {never}"
+    test_only = never_set(("tools", "perfbench"))
+    unlisted = {k: v for k, v in test_only.items() if k not in TEST_ONLY_SEAMS}
+    assert unlisted == {}, f"test-only knobs that force no listed path: {unlisted}"
+    stale = sorted(set(TEST_ONLY_SEAMS) - set(test_only))
+    assert stale == [], f"TEST_ONLY_SEAMS entries that are no longer test-only: {stale}"
 
 
 def test_quantile_matches_independent_quantile_cont():

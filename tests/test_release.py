@@ -29,7 +29,6 @@ def run(spark, sf_dir, tmp_path_factory):
         sf_dir,
         out,
         pack_budget=_PACK_BUDGET,
-        tokens_per_file=_FILE_BUDGET,
     )
     return out, {r.stage: r.n for r in summary.collect()}
 

@@ -617,9 +617,9 @@ def test_sink_drivers_leave_only_owned_dirs(spark, sf_dir, tmp_path, monkeypatch
     frames = [
         delivered,
         quarantined,
-        run_rollup_sink(spark, sf_dir, n_splits=2),
+        run_rollup_sink(spark, sf_dir),
         run_status_upsert(spark, sf_dir, n_splits=2),
-        run_dedup_ingest(spark, sf_dir, n_splits=2),
+        run_dedup_ingest(spark, sf_dir),
     ]
     assert all(len(f.collect()) > 0 for f in frames)
     left = sorted(str(tmp_path / d) for d in os.listdir(tmp_path))

@@ -23,7 +23,7 @@ def test_chunk_invariants(spark, sf_dir):
     `overlap` tokens (except a short final chunk); chunk sizes are
     bounded by `size`."""
     size, overlap, stride = 64, 16, 48
-    chunks = chunk_documents(spark, sf_dir, size, overlap)
+    chunks = chunk_documents(spark, sf_dir, size)
     bad_size = chunks.where((F.col("n_chunk_tokens") > size) | (F.col("n_chunk_tokens") <= 0))
     assert bad_size.count() == 0
     # coverage: last chunk must reach the doc's token count

@@ -87,15 +87,54 @@ def createdataframe_literal_hits(pkg: str) -> list[str]:
     return bad
 
 
+def sink_commit_hits(pkg: str) -> list[str]:
+    """Every ``partitionOverwriteMode`` write and every ``glob`` of a
+    ``col=*`` partition dir under ``pkg`` outside the sinks' two helpers
+    (``streaming/pipeline.py:_commit`` and ``_committed``): an
+    exactly-once sink commits and reads its partitioned tables only
+    through them. tier-1 runs the same rule (tests/test_queries.py)."""
+    helpers = {"_commit", "_committed"}
+    bad: list[str] = []
+    for root, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read(), path)
+            inside = set()
+            if path.endswith(os.path.join("streaming", "pipeline.py")):
+                for node in tree.body:
+                    if isinstance(node, ast.FunctionDef) and node.name in helpers:
+                        inside.update(range(node.lineno, node.end_lineno + 1))
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call) or node.lineno in inside:
+                    continue
+                name = getattr(node.func, "attr", getattr(node.func, "id", None))
+                strs = [
+                    c.value
+                    for a in node.args
+                    for c in ast.walk(a)
+                    if isinstance(c, ast.Constant) and isinstance(c.value, str)
+                ]
+                overwrite = any(v.split(".")[-1] == "partitionOverwriteMode" for v in strs)
+                part_glob = name in ("glob", "iglob") and any("=*" in v for v in strs)
+                if overwrite or part_glob:
+                    bad.append(f"{path}:{node.lineno}: {ast.unparse(node)[:120]}")
+    return bad
+
+
 def static_checks() -> bool:
     """Repo-rule scans that need no JVM: no global-sort window
-    (``global_window_hits``) anywhere in the package, and no literal
+    (``global_window_hits``) anywhere in the package, no literal
     ``createDataFrame`` relation in its plans
-    (``createdataframe_literal_hits``)."""
+    (``createdataframe_literal_hits``), and no sink commit or partition
+    glob outside the sinks' helpers (``sink_commit_hits``)."""
     print("=== static checks ===", flush=True)
     pkg = os.path.join(REPO, "monday_etl_automation_spark")
     bad = [f"GLOBAL-WINDOW {hit}" for hit in global_window_hits(pkg)]
     bad += [f"LITERAL-CREATEDATAFRAME {hit}" for hit in createdataframe_literal_hits(pkg)]
+    bad += [f"SINK-COMMIT {hit}" for hit in sink_commit_hits(pkg)]
     for hit in bad:
         print(hit)
     print(f"=== static checks: {'OK' if not bad else 'FAIL'} ===\n", flush=True)

@@ -127,7 +127,8 @@ def main() -> int:
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write(
             "# PLANS — physical-plan audit per registered query\n\n"
-            f"Generated by `python tools/plan_audit.py` at {SF_DIR}.\n\n"
+            f"Generated by `python tools/plan_audit.py` at {os.path.basename(SF_DIR)}"
+            f" on {spark.sparkContext.defaultParallelism} cores.\n\n"
             "Columns: hash Exchanges (shuffles), range Exchanges (global\n"
             "sorts — expected only as final ORDER BY), broadcasts, parquet\n"
             "filter pushdown present, WholeStageCodegen span count, Python\n"
