@@ -643,3 +643,18 @@ def test_dead_letter_counts_drops_its_sink_dirs(spark, sf_dir, tmp_path, monkeyp
     assert runs[0] and runs[1] == runs[0] and runs[2] == runs[0]
     left = [d for d in os.listdir(tmp_path) if d.startswith(("dead_letter_", "status_upsert_"))]
     assert left == [], left
+
+
+def test_dead_letter_counts_jobs_carry_the_callers_group(spark, sf_dir, spark_jobs):
+    """Every job dead_letter_counts submits outside its two streams
+    carries the caller's job group, so a per-request trace counts it.
+    The pipelines run on pool threads and job groups are thread-local;
+    each stream's micro-batches run under the query's own runId group."""
+    from monday_etl_automation_spark.plans.windows_ops import dead_letter_counts
+
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    _, grouped = spark_jobs(lambda: dead_letter_counts(spark, sf_dir))
+    ungrouped = sorted(set(st.getJobIdsForGroup(None)) - before)
+    assert grouped, "no job ran in the caller's group"
+    assert ungrouped == [], f"jobs outside any group: {ungrouped}"

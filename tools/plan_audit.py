@@ -83,6 +83,12 @@ def final_plan(df) -> str:
     return plan.split("== Initial Plan ==")[0]
 
 
+def explain_str(df) -> str:
+    """``df``'s formatted explain text."""
+    jvm = df.sparkSession.sparkContext._jvm  # noqa: SLF001
+    return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")  # noqa: SLF001
+
+
 def _pytest_only_queries() -> dict:
     """Non-registered operators worth auditing (registry is capped at
     50; these are verified by pytest twins but their plan shapes are
@@ -95,8 +101,6 @@ def _pytest_only_queries() -> dict:
 
 
 def main() -> int:
-    from dump_plans import explain_str
-
     from monday_etl_automation_spark.plans import registry
     from monday_etl_automation_spark.session import get_spark
 
